@@ -109,14 +109,19 @@ class Engine:
 
 def build_engine(spark, config: CluesoSparkConfig) -> Engine:
     """Composition root: wire an :class:`Engine` from one config -- the
-    deployment entry point a Livy-style service uses. Callers that
-    enable ``graphite_host`` own the returned engine's lifecycle: call
-    ``engine.close()`` on shutdown (serve_cli does)."""
+    deployment entry point a Livy-style service uses. The engine runs in
+    its own session derived from ``spark`` (see
+    :func:`clueso_spark.session.engine_session`); ``spark`` itself is
+    left as it was. Callers that enable ``graphite_host`` own the
+    returned engine's lifecycle: call ``engine.close()`` on shutdown
+    (serve_cli does)."""
     from clueso_spark.operators.cache import BucketCacheManager
     from clueso_spark.operators.compact import Compactor
     from clueso_spark.operators.query import MetadataQueryExecutor
+    from clueso_spark.session import engine_session
     from clueso_spark.sources.store import MetadataStore
 
+    spark = engine_session(spark)
     store = MetadataStore(spark, config.store_root)
     cache = (
         BucketCacheManager(

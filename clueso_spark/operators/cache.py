@@ -11,6 +11,15 @@ This is plain application-level orchestration (threading.Lock + dict), not a
 Catalyst concern. At cluster scale the persisted view lives in executor
 storage memory; a 100 TB store is cached per *bucket* (the unit a search
 touches), not globally.
+
+Cached views are right-sized when the engine runs in the session
+``build_engine`` gives it (``session.engine_session``): there AQE may change
+a cached plan's output partitioning, so a small bucket's view is one
+partition and a search over it one task, rather than one task per
+``spark.sql.shuffle.partitions`` (Spark freezes a cached plan's partitioning
+by default). That is scoped to the engine's session and not set
+session-wide because the catalog persists pre-partitioned intermediates
+whose frozen partitioning its joins reuse.
 """
 
 from __future__ import annotations
@@ -27,6 +36,21 @@ from pyspark.sql import DataFrame
 class _Entry:
     df: DataFrame
     created_at: float
+
+
+def _materialize(builder: Callable[[], DataFrame]) -> DataFrame:
+    """Persist the built view and materialize it eagerly so queries hit
+    memory, mirroring cacheTable (ref: SessionCacheManager.scala:30-31,53).
+    If materializing fails (e.g. a landing file purged after listing), the
+    plan is unpersisted again: Spark's cache manager is shared and would
+    otherwise keep it registered with no entry here to ever release it."""
+    df = builder().persist()
+    try:
+        df.count()
+    except BaseException:
+        df.unpersist(blocking=False)
+        raise
+    return df
 
 
 class BucketCacheManager:
@@ -54,10 +78,7 @@ class BucketCacheManager:
         lock = self._lock_for(bucket)
         if lock.acquire(blocking=False):
             try:
-                new_df = builder().persist()
-                # eager materialization so queries hit memory, mirroring
-                # cacheTable (ref: SessionCacheManager.scala:30-31,53)
-                new_df.count()
+                new_df = _materialize(builder)
                 old = self._entries.get(bucket)
                 self._entries[bucket] = _Entry(new_df, time.monotonic())
                 if old is not None:
@@ -75,8 +96,7 @@ class BucketCacheManager:
             current = self._entries.get(bucket)
             if current is not None:
                 return current.df
-            new_df = builder().persist()
-            new_df.count()
+            new_df = _materialize(builder)
             self._entries[bucket] = _Entry(new_df, time.monotonic())
             return new_df
 

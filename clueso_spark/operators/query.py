@@ -3,7 +3,7 @@
 Re-expresses MetadataQueryExecutor (ref: query/MetadataQueryExecutor.scala):
 the *query language* is any Spark SQL boolean expression over the flattened
 metadata columns -- including map access ``userMd.`x-amz-meta-color` = 'blue'``
-and LIKE -- which Catalyst parses for free via ``DataFrame.where(str)``
+and LIKE -- which Catalyst parses for free via ``F.expr(str)``
 (ref: MetadataQueryExecutor.scala:69-72).
 
 Pagination is keyset-style: results are globally ordered by ``key`` (the S3
@@ -17,7 +17,9 @@ scale-correct plan: each task keeps an n-row heap, the driver merges.
 from __future__ import annotations
 
 import json
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,16 +95,23 @@ class MetadataQueryExecutor:
     def execute(self, query: MetadataQuery) -> DataFrame:
         """Build the search plan (ref: MetadataQueryExecutor.scala:62-95).
         Returns a DataFrame; materialization is the caller's choice."""
-        df = self.bucket_dataframe(query.bucket_name)
+        conds = []
         if query.sql_where_expr:
-            df = df.where(query.sql_where_expr)  # user predicate (P9)
+            conds.append(F.expr(query.sql_where_expr))  # user predicate (P9)
         if query.start_key is not None:
-            df = df.where(F.col("key") > F.lit(query.start_key))  # keyset (P10)
+            conds.append(F.col("key") > F.lit(query.start_key))  # keyset (P10)
         # master-only listing: drop version keys (NUL in key)
         # (ref: MetadataQueryExecutor.scala:82-84)
-        df = df.filter(~F.col("key").contains(VERSION_KEY_CHAR))
-        df = df.select([F.col(f"`{c}`") for c in RESULT_COLS])
-        df = df.orderBy("key").limit(query.limit)
+        conds.append(~F.col("key").contains(VERSION_KEY_CHAR))
+        # one where for all three: every DataFrame call re-analyses the
+        # whole merge lineage, so each call saved is planning time saved
+        df = (
+            self.bucket_dataframe(query.bucket_name)
+            .where(reduce(operator.and_, conds))
+            .select([F.col(f"`{c}`") for c in RESULT_COLS])
+            .orderBy("key")
+            .limit(query.limit)
+        )
         if self.print_explain:
             import contextlib
             import io

@@ -10,6 +10,13 @@ Scale stance: shuffle-partition count here is the *local* default; on a real
 cluster AQE coalescing makes the initial number mostly irrelevant as long as
 it is high enough (set spark.sql.shuffle.partitions ~ 2-3x total cores via
 spark-submit conf; AQE merges small post-shuffle partitions at runtime).
+That holds for plans that run, not for plans that are *persisted*: by
+default Spark freezes a cached plan's output partitioning
+(``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false``), so
+AQE never merges a cached plan's shuffle partitions and every read of it
+runs one task per partition. The search engine lifts that in its own
+session (:func:`engine_session`), not here: the catalog persists
+pre-partitioned intermediates that rely on the frozen partitioning.
 """
 
 from __future__ import annotations
@@ -21,6 +28,40 @@ from pyspark.sql import SparkSession
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def _memory_limit_bytes() -> int | None:
+    """Physical memory, or the cgroup v2 limit if that is lower."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return None
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            raw = f.read().strip()
+        if raw.isdigit():
+            total = min(total, int(raw))
+    except OSError:
+        pass
+    return total
+
+
+def default_driver_memory(
+    env: dict[str, str] | None = None, limit_bytes: int | None = None
+) -> str:
+    """Driver heap for :func:`get_spark`: ``SPARK_GRAFT_DRIVER_MEM`` if
+    set, else half the host's memory capped at 32g (floor 1g). A fixed
+    32g heap on a smaller host lets the JVM grow past physical memory
+    and be OOM-killed; a 64 GB+ host still gets the full 32g."""
+    env = env if env is not None else os.environ
+    if env.get("SPARK_GRAFT_DRIVER_MEM"):
+        return env["SPARK_GRAFT_DRIVER_MEM"]
+    if limit_bytes is None:
+        limit_bytes = _memory_limit_bytes()
+    if limit_bytes is None:
+        return "32g"
+    mb = min(32 * 1024, max(1024, limit_bytes // 2 // (1024 * 1024)))
+    return f"{mb}m"
 
 
 def s3a_conf(
@@ -77,10 +118,7 @@ def get_spark(app_name: str = "clueso-spark", **extra_conf: str) -> SparkSession
         # Spark's 1g default heap OOMs real workloads on a 32-core box.
         # Only effective at JVM launch (ignored on an existing session,
         # and on a real cluster spark-submit conf wins).
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
-        )
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -155,3 +193,25 @@ def get_spark(app_name: str = "clueso-spark", **extra_conf: str) -> SparkSession
                     stacklevel=2,
                 )
     return spark
+
+
+def engine_session(spark: SparkSession) -> SparkSession:
+    """A session for the search engine, scoped off ``spark``.
+
+    ``spark.newSession()`` shares the SparkContext and the cache manager
+    but carries its own SQL conf. It starts from the caller's current
+    runtime SQL conf (so e.g. a session time zone set at runtime still
+    applies to searches) and then lets AQE change a cached plan's output
+    partitioning: each per-bucket cached view is then sized by its bytes
+    (one partition for a small bucket, many for a large one) instead of
+    one partition per ``spark.sql.shuffle.partitions``. The caller's
+    session keeps Spark's default, which the catalog's persisted
+    pre-partitioned edge lists depend on."""
+    session = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            session.conf.set(k, v)
+    session.conf.set(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+    )
+    return session

@@ -115,13 +115,13 @@ class MetadataStore:
         directly with an explicit basePath so the partition columns survive
         (ref: MetadataQueryExecutor.scala:141-147)."""
         path = f"{tier_root}/bucket={bucket}"
+        reader = self.spark.read.schema(STORED_EVENT_SCHEMA)
         if not self.exists(path):
-            return self.spark.createDataFrame([], STORED_EVENT_SCHEMA)
-        return (
-            self.spark.read.schema(STORED_EVENT_SCHEMA)
-            .option("basePath", tier_root)
-            .parquet(path)
-        )
+            # an empty scan, not createDataFrame([]): createDataFrame makes
+            # its session the process-wide active one, and the engine's
+            # session must never take that over from the caller's
+            return reader.parquet()
+        return reader.option("basePath", tier_root).parquet(path)
 
     def read_landing(self, bucket: str) -> DataFrame:
         return self._read_bucket(self.landing, bucket)

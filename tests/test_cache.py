@@ -4,6 +4,10 @@ from __future__ import annotations
 
 import time
 
+import pytest
+from pyspark import StorageLevel
+from pyspark.sql import functions as F
+
 from clueso_spark.operators.cache import BucketCacheManager
 from clueso_spark.operators.query import MetadataQuery, MetadataQueryExecutor
 from clueso_spark.streaming.ingest import parse_events
@@ -70,3 +74,23 @@ def test_failed_builder_leaves_no_entry_and_next_get_rebuilds(spark, store):
     df = ex.bucket_dataframe(BUCKET)
     assert df.count() == 1
     assert boom["n"] == 1
+
+
+def test_failed_materialization_unpersists_the_plan(spark, store):
+    """A builder whose plan fails only when materialized (a landing file
+    purged after listing fails the eager count(), not the builder) must
+    not leave the plan registered in Spark's shared cache manager."""
+    mgr = BucketCacheManager(expiry_s=60)
+    built = []
+
+    def exploding_builder():
+        df = spark.range(3).where(
+            F.raise_error(F.lit("landing file vanished")).isNull()
+        )
+        built.append(df)
+        return df
+
+    with pytest.raises(Exception, match="landing file vanished"):
+        mgr.get(BUCKET, exploding_builder)
+    assert BUCKET not in mgr._entries
+    assert built[0].storageLevel == StorageLevel.NONE

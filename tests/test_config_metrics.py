@@ -57,6 +57,20 @@ def test_build_engine_and_metrics(spark, tmp_path):
     assert executor.last_explain and "Physical Plan" in executor.last_explain
 
 
+def test_default_driver_memory_sized_from_host():
+    """The driver heap is half the host's memory, capped at 32g and
+    floored at 1g; SPARK_GRAFT_DRIVER_MEM overrides it."""
+    from clueso_spark.session import default_driver_memory
+
+    gib = 1024**3
+    assert default_driver_memory(env={}, limit_bytes=16 * gib) == "8192m"
+    assert default_driver_memory(env={}, limit_bytes=256 * gib) == "32768m"
+    assert default_driver_memory(env={}, limit_bytes=1 * gib) == "1024m"
+    assert default_driver_memory(
+        env={"SPARK_GRAFT_DRIVER_MEM": "3g"}, limit_bytes=16 * gib
+    ) == "3g"
+
+
 def test_env_extra_conf_parsing():
     """SPARK_GRAFT_EXTRA_CONF: semicolon-separated k=v pairs reach the
     session builder; malformed fragments and blanks are ignored."""

@@ -4,9 +4,12 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+from clueso_spark.operators.cache import BucketCacheManager
 from clueso_spark.operators.compact import Compactor
 from clueso_spark.operators.query import MetadataQuery, MetadataQueryExecutor
+from clueso_spark.schemas import RESULT_COLS, VERSION_KEY_CHAR
 from clueso_spark.streaming.ingest import parse_events
 from tests.conftest import op, put_doc, raw_df, wire_event
 
@@ -231,3 +234,87 @@ def test_executor_max_by_strategy_matches_window(spark, store):
     )
     assert [r.asDict() for r in win] == [r.asDict() for r in agg]
     assert "k003" not in [r["key"] for r in win]
+
+
+def _per_conjunct_page(ex, q):
+    """Reference page: one DataFrame call per conjunct (user predicate,
+    keyset, version-key filter), then project, order and limit over the
+    same merged view."""
+    df = ex.bucket_dataframe(q.bucket_name)
+    if q.sql_where_expr:
+        df = df.where(q.sql_where_expr)
+    if q.start_key is not None:
+        df = df.where(F.col("key") > F.lit(q.start_key))
+    df = df.filter(~F.col("key").contains(VERSION_KEY_CHAR))
+    df = df.select([F.col(f"`{c}`") for c in RESULT_COLS])
+    return df.orderBy("key").limit(q.limit).collect()
+
+
+def _filters(plan, stop_at=None) -> int:
+    """Filter nodes in a JVM logical plan, not descending below a node
+    named ``stop_at``."""
+    name = plan.nodeName()
+    if name == stop_at:
+        return 0
+    kids = plan.children()
+    return int(name == "Filter") + sum(
+        _filters(kids.apply(i), stop_at) for i in range(kids.size())
+    )
+
+
+PAGE_PREDICATES = [
+    "",
+    "userMd.`x-amz-meta-color` = 'red'",
+    # NULL on every row without the color key: neither side may keep it
+    "NOT (userMd.`x-amz-meta-color` = 'red')",
+    "`content-length` > 150",
+]
+
+
+def test_one_filter_page_matches_per_conjunct_pages(spark, store):
+    """The page is built as ONE where (predicate AND keyset AND
+    not-version-key). Cached and uncached, every page -- a predicate that
+    is NULL on some rows, a keyset start, a version key, the HTTP path's
+    limit+1 probe -- equals the page the per-conjunct plan built."""
+    lines = []
+    for i in range(8):
+        key = f"k{i}"
+        md = {} if i % 3 == 0 else {"color": "red" if i % 2 else "blue"}
+        doc = put_doc(key, BUCKET, user_md=md, **{"content-length": 100 + 20 * i})
+        lines.append(wire_event(op(i + 1), "put", BUCKET, key, doc))
+        if i in (2, 5):
+            vkey = f"{key}\x00RG001"
+            lines.append(
+                wire_event(op(i + 1, 1), "put", BUCKET, vkey,
+                           put_doc(vkey, BUCKET, user_md=md))
+            )
+    ingest(spark, store, lines)
+    cached = MetadataQueryExecutor(spark, store, BucketCacheManager())
+    for ex in (executor(spark, store), cached):
+        for where in PAGE_PREDICATES:
+            for start in (None, "k2"):
+                for limit in (2, 3, 100):  # 3 = the limit+1 probe of 2
+                    q = MetadataQuery(BUCKET, where, start, limit)
+                    got = ex.execute(q).collect()
+                    assert got == _per_conjunct_page(ex, q), (where, start, limit)
+                    assert not any("\x00" in r["key"] for r in got)
+    # the NULL-predicate rows (no color key: k0, k3, k6) match neither
+    # the predicate nor its negation
+    both = {
+        r["key"]
+        for where in PAGE_PREDICATES[1:3]
+        for r in cached.execute(MetadataQuery(BUCKET, where)).collect()
+    }
+    assert both == {"k1", "k2", "k4", "k5", "k7"}
+
+
+def test_page_plan_is_one_filter_over_the_cached_view(spark, store):
+    ingest(spark, store, [wire_event(op(1), "put", BUCKET, "k", put_doc("k", BUCKET))])
+    ex = MetadataQueryExecutor(spark, store, BucketCacheManager())
+    q = MetadataQuery(BUCKET, "`content-length` > 1", "a", 10)
+    qe = ex.execute(q)._jdf.queryExecution()
+    # the optimized plan reads the cached view through exactly one Filter
+    assert _filters(qe.optimizedPlan(), stop_at="InMemoryRelation") == 1
+    # and the page adds exactly one Filter to the merged view as built
+    view = ex.bucket_dataframe(BUCKET)._jdf.queryExecution().analyzed()
+    assert _filters(qe.analyzed()) == _filters(view) + 1

@@ -57,3 +57,20 @@ def test_dedup_cli_prints_report(spark, capsys, monkeypatch):
     assert report["n_docs"] > 0
     assert report["n_dup_groups"] <= report["n_near_dup_pairs"] * 2
     assert len(report["top_pairs"]) <= 2
+
+
+def test_perfbench_ab_gain_rule():
+    """tools/perfbench_ab.py claims a gain only with >= 9/10 pair wins AND
+    a median gap wider than the parent's inter-quartile spread; an
+    end-to-end metric past its bound in the wrong direction is WORSE."""
+    from tools.perfbench_ab import judge
+
+    parent = [100, 102, 98, 101, 99, 103, 97, 100, 101, 99]  # IQR 2
+    assert judge(parent, [p - 20 for p in parent], "lower", 0.25) == (10, "GAIN")
+    # 8 of 10 wins is not enough, however wide the gap
+    eight = [p - 20 for p in parent[:8]] + [p + 1 for p in parent[8:]]
+    assert judge(parent, eight, "lower", 0.25) == (8, "")
+    # every pair won, by less than the parent's own spread
+    assert judge(parent, [p - 1 for p in parent], "lower", 0.25) == (10, "")
+    assert judge(parent, [p * 0.7 for p in parent], "higher", 0.25) == (0, "WORSE")
+    assert judge(parent, [p * 0.7 for p in parent], "higher", None) == (0, "")
