@@ -40,10 +40,6 @@ class CluesoSparkConfig:
     target_file_bytes: int = 128 * 1024 * 1024
     stale_lock_s: float = 3600.0
 
-    # merge-on-read dedup strategy: "window" (reference-parity row_number)
-    # or "max_by" (sort-free hash aggregate for replay-heavy stores)
-    merge_strategy: str = "window"
-
     # diagnostics (ref: spark_sql_print_explain, MetadataQueryExecutor:88-92)
     print_explain: bool = False
 
@@ -136,7 +132,6 @@ def build_engine(spark, config: CluesoSparkConfig) -> Engine:
         store,
         cache,
         print_explain=config.print_explain,
-        merge_strategy=config.merge_strategy,
     )
     compactor = Compactor(
         store,

@@ -34,19 +34,26 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-#: per-session persisted ranged relations, keyed by slot (order/out
-#: cols): the next build of the SAME helper call unpersists the
-#: previous run's relation, so repeated runs (bench best-of-N, the
-#: parity gate) never accumulate cache entries. Mirrors
-#: plans.catalog.persist_swap, kept local so the functions layer never
-#: imports the plans layer.
+#: per-session registry of persisted intermediate DataFrames, keyed
+#: (SparkSession, slot): the next call on the SAME session+slot
+#: unpersists the previous one, so repeated runs (bench best-of-N, the
+#: parity gate) never accumulate cache entries -- while two interleaved
+#: SparkSessions cannot unpersist each other's intermediates. WeakKey: a
+#: garbage-collected session drops its entries (its cache died with it).
+#: Lives in the functions layer so the helpers below and every plan
+#: module (via plans.catalog) share ONE registry; the helpers' slots are
+#: prefixed ``ranged:`` / ``rlead:``, which no plan slot uses.
 _PERSISTED: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def _persist_swap(df: DataFrame, slot: str) -> DataFrame:
-    slots = _PERSISTED.setdefault(df.sparkSession, {})
+def persist_swap(spark: SparkSession, slot: str, df: DataFrame) -> DataFrame:
+    """Persist ``df`` (MEMORY_AND_DISK: at 100 TB intermediates spill
+    rather than OOM, and recomputation -- a full corpus re-scan -- is
+    the costlier alternative), releasing whatever the previous call on
+    this session's ``slot`` pinned."""
+    slots = _PERSISTED.setdefault(spark, {})
     prev = slots.pop(slot, None)
     if prev is not None:
         prev.unpersist()
@@ -82,11 +89,12 @@ def ranged_cumsum(
     # lineage). localCheckpoint was tried first and rejected: even
     # eager=False converts to an RDD at CONSTRUCTION time, running
     # every upstream stage before the query is ever executed.
-    ranged = _persist_swap(
+    ranged = persist_swap(
+        spark,
+        f"ranged:{'|'.join(order_cols)}->{out_col}",
         df.repartitionByRange(n, *order_cols).withColumn(
             "__rc_pid", F.spark_partition_id()
         ),
-        slot=f"ranged:{'|'.join(order_cols)}->{out_col}",
     )
     w = (
         Window.partitionBy("__rc_pid")
@@ -211,11 +219,12 @@ def ranged_lead(
     # persist for the same reason as ranged_cumsum: the chunk-firsts
     # branch and the local-lead branch must observe identical range
     # boundaries / partition ids (see the block comment there)
-    ranged = _persist_swap(
+    ranged = persist_swap(
+        spark,
+        f"rlead:{'|'.join(keys)}->{out_col}",
         df.repartitionByRange(n, *keys).withColumn(
             "__rl_pid", F.spark_partition_id()
         ),
-        slot=f"rlead:{'|'.join(keys)}->{out_col}",
     )
     w = Window.partitionBy("__rl_pid", *part_cols).orderBy(*order_cols)
     local = ranged.withColumn("__rl_local", F.lead(value_col).over(w))

@@ -24,7 +24,7 @@ TIMING_WINDOW = 1024
 
 
 class SearchMetrics:
-    """Thread-safe counters: searches per bucket, latency, cache hits.
+    """Thread-safe counters: searches per bucket and their latency.
 
     Timing series keep a bounded rolling window (TIMING_WINDOW samples;
     ``.avg`` is the window average, ``.last`` the latest) -- lifetime

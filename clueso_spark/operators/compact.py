@@ -14,15 +14,15 @@ together; a tombstone whose target already sits in staging would wrongly
 resurface it. We default to the strictly safer variant flagged in SURVEY.md
 §3.3: a tombstone is dropped only if it is *not* the winning row (i.e. it was
 shadowed inside the batch) or nothing it could shadow exists outside the
-batch; concretely we keep winning tombstones unless ``drop_tombstones`` is
-set. Observable query results are identical in the reference's own scenarios
+batch; concretely compaction always keeps winning tombstones. Observable
+query results are identical in the reference's own scenarios
 (query-time merge filters tombstones anyway); storage keeps one extra row per
 deleted key until a full compaction.
 
 Scale: output file count is sized by *bytes*, not a fixed number -- we
 estimate input size from the filesystem and target ``target_file_bytes`` per
 output file, so a 100 TB compaction produces sane file sizes instead of the
-reference's fixed ``coalesce(4)``.
+reference's fixed ``coalesce(4)`` (never fewer than one output file).
 """
 
 from __future__ import annotations
@@ -40,16 +40,12 @@ class Compactor:
         store: MetadataStore,
         *,
         purge_tolerance_s: float = 0.0,
-        drop_tombstones: bool = False,
         target_file_bytes: int = 128 * 1024 * 1024,
-        min_output_files: int = 1,
         stale_lock_s: float = 3600.0,
     ):
         self.store = store
         self.purge_tolerance_s = purge_tolerance_s
-        self.drop_tombstones = drop_tombstones
         self.target_file_bytes = target_file_bytes
-        self.min_output_files = min_output_files
         #: a _merging_<bucket> lock older than this is treated as left
         #: behind by a crashed compactor and broken -- without this a
         #: single crash blocks the bucket's compaction FOREVER (the
@@ -147,12 +143,9 @@ class Compactor:
             return False
         try:
             df = self.store.read_landing_sub_partitions(bucket, subs)
-            merged = latest_rows(
-                df, dense=True, keep_tombstones=not self.drop_tombstones
-            )
+            merged = latest_rows(df, dense=True, keep_tombstones=True)
             n_files = max(
-                self.min_output_files,
-                self._input_bytes(bucket, subs) // self.target_file_bytes,
+                1, self._input_bytes(bucket, subs) // self.target_file_bytes
             )
             self.store.write_staging(
                 merged.drop("bucket").coalesce(int(n_files)), bucket

@@ -41,7 +41,6 @@ def latest_rows(
     *,
     dense: bool = False,
     keep_tombstones: bool = False,
-    strategy: str = "window",
 ) -> DataFrame:
     """Keep the winning row per ``key``.
 
@@ -50,33 +49,13 @@ def latest_rows(
     -> ``dense_rank`` (compaction path, preserves ties,
     ref: TableFilesCompactor.scala:162-167). The difference is deliberate in
     the reference; we replicate it rather than silently normalize.
-
-    ``strategy``: ``"window"`` (default) is the reference-parity sort-based
-    window. ``"max_by"`` computes the same winner via a hash aggregate --
-    map-side partial aggregation, NO sort -- so the shuffle carries at most
-    one row per key per map partition instead of every event (measured
-    1.36 -> 1.09 s on a 10 M-row / 3x-replay input; the gap widens with
-    replay factor and once sorts spill). Tie handling matches row_number's
-    arbitrariness (real streams only tie on identical replayed rows, see
-    tests/test_properties.py). dense=True requires the window strategy
-    (ties must all survive).
     """
-    if strategy == "max_by":
-        if dense:
-            raise ValueError("dense=True requires strategy='window'")
-        others = [c for c in df.columns if c != "key"]
-        out = (
-            df.groupBy("key")
-            .agg(F.max_by(F.struct(*others), F.col("opIndex")).alias("_w"))
-            .select("key", *[F.col(f"_w.`{c}`").alias(c) for c in others])
-        )
-    else:
-        rank_fn = F.dense_rank() if dense else F.row_number()
-        out = (
-            df.withColumn("_rank", rank_fn.over(latest_window()))
-            .filter(F.col("_rank") == 1)
-            .drop("_rank")
-        )
+    rank_fn = F.dense_rank() if dense else F.row_number()
+    out = (
+        df.withColumn("_rank", rank_fn.over(latest_window()))
+        .filter(F.col("_rank") == 1)
+        .drop("_rank")
+    )
     if not keep_tombstones:
         out = out.filter(F.col("type") != "delete")
     return out
@@ -90,17 +69,13 @@ def flatten_message(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-def merged_latest_state(
-    landing: DataFrame, staging: DataFrame, *, strategy: str = "window"
-) -> DataFrame:
+def merged_latest_state(landing: DataFrame, staging: DataFrame) -> DataFrame:
     """landing ∪ staging -> latest visible state per key, flattened.
 
     Tolerates schema drift between tiers via ``allowMissingColumns``
     (ref: MetadataQueryExecutor.scala:168-178 + SparkUtils.scala:104-109).
     Delete tombstones in either tier shadow older puts in the other
     (pinned by CluesoMergingAndQueryingSpec:110-172).
-    ``strategy="max_by"`` selects the sort-free hash-aggregate dedup for
-    replay-heavy deployments (see :func:`latest_rows`).
     """
     unioned = landing.unionByName(staging, allowMissingColumns=True)
-    return flatten_message(latest_rows(unioned, strategy=strategy))
+    return flatten_message(latest_rows(unioned))

@@ -50,15 +50,10 @@ class MetadataQueryExecutor:
         cache: BucketCacheManager | None = None,
         print_explain: bool = False,
         metrics=None,
-        merge_strategy: str = "window",
     ):
         self.spark = spark
         self.store = store
         self.cache = cache
-        #: latest-rows dedup strategy ("window" = reference-parity
-        #: row_number; "max_by" = sort-free hash aggregate, see
-        #: operators/merge.py:latest_rows)
-        self.merge_strategy = merge_strategy
         #: optional clueso_spark.metrics.SearchMetrics
         #: (ref: SearchMetricsSource.scala registers the same per-bucket
         #: search timings)
@@ -85,7 +80,6 @@ class MetadataQueryExecutor:
             return merged_latest_state(
                 self.store.read_landing(bucket),
                 self.store.read_staging(bucket),
-                strategy=self.merge_strategy,
             )
 
         if self.cache is not None:

@@ -16,13 +16,13 @@ Determinism contract (so value-hashes match across engines):
 
 from __future__ import annotations
 
-import weakref
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from clueso_spark.functions.ordered import _PERSISTED, persist_swap  # noqa: F401
 
 
 @dataclass
@@ -75,7 +75,10 @@ def register(
     return wrap
 
 
-#: every module contributing CatalogQuery registrations
+#: every module contributing CatalogQuery registrations, imported in
+#: this order by all_queries(). A tier that is not yet driver-verified
+#: registers with the tag ``"staged"``: it is importable and testable,
+#: but all_queries() leaves it out until the tag is deleted.
 QUERY_MODULES = [
     "clueso_spark.plans.relational",
     "clueso_spark.plans.event_queries",
@@ -84,45 +87,16 @@ QUERY_MODULES = [
     "clueso_spark.plans.similarity_queries",
     "clueso_spark.plans.multimodal_queries",
     "clueso_spark.plans.streaming_queries",
-    # round 6: the formerly-staged tier is promoted -- the module calls
-    # staged_r6.promote() at import, landing all 18 in REGISTRY
     "clueso_spark.plans.staged_r6",
-    # round 8: the round-7 staged tier is promoted the same way (13
-    # queries, each pytest-proven against its DuckDB oracle at sf0.001 +
-    # sf0.01 before registration; they head the round-8 driver window)
     "clueso_spark.plans.staged_r8",
-    # round 9: the round-8 staged tier is promoted the same way (17
-    # queries; they head the round-9 driver window)
     "clueso_spark.plans.staged_r9",
-    # round 10: the round-9 staged tier is promoted the same way (15
-    # queries, each pytest-proven against its DuckDB oracle at sf0.001 +
-    # sf0.01 before registration; they head the round-10 driver window)
     "clueso_spark.plans.staged_r10",
-    # round 11: the round-10 staged tier is promoted the same way (15
-    # queries; registry 197 -> 212, refresh cycle ceil(212/50) = 5)
     "clueso_spark.plans.staged_r11",
-    # round 12: the round-11 staged tier is promoted the same way (26
-    # queries; registry 212 -> 238, refresh cycle stays ceil(238/50) =
-    # 5). 21 sit in the round-12 window; the five cheapest defer to
-    # head round 13 (tests/test_entry.py DEFERRED_PROMOTIONS).
     "clueso_spark.plans.staged_r12",
-    # round 13: the round-12 staged tier is promoted the same way (4
-    # queries; registry 238 -> 242, refresh cycle stays ceil(242/50) =
-    # 5). All 4 sit in the round-13 window together with the five
-    # round-12 deferrals -- zero new deferral debt.
     "clueso_spark.plans.staged_r13",
-    # round 14: the round-13 staged tier is promoted the same way (3
-    # queries; registry 242 -> 245, refresh cycle stays ceil(245/50) =
-    # 5). The tier was sized to round 14's exact free capacity (50 - 47
-    # mandatory r9 refreshes), so all 3 sit in the round-14 window --
-    # zero new deferral debt.
     "clueso_spark.plans.staged_r14",
-    # round 15: the round-13-staged second tier is promoted the same
-    # way (4 queries; registry 245 -> 249, refresh cycle stays
-    # ceil(249/50) = 5). The tier was sized to round 15's exact free
-    # capacity (50 - 46 mandatory r10 refreshes), so all 4 sit in the
-    # round-15 window -- zero new deferral debt.
     "clueso_spark.plans.staged_r15",
+    "clueso_spark.plans.staged_r16",
 ]
 
 #: Explicit verification priority. The driver's CORRECTNESS gate covers a
@@ -269,50 +243,34 @@ PRIORITY = [
 ]
 
 
-def all_queries() -> dict[str, CatalogQuery]:
-    """Import all query modules and return the registry in verification
-    priority order (see PRIORITY) -- prioritized names first, then the
-    remainder in registration order."""
+def _import_all() -> None:
     import importlib
 
     # imports are deferred so a SparkSession is never needed at import time
     for mod in QUERY_MODULES:
         importlib.import_module(mod)
-    ordered = {n: REGISTRY[n] for n in PRIORITY if n in REGISTRY}
-    ordered.update({n: cq for n, cq in REGISTRY.items() if n not in ordered})
+
+
+def all_queries() -> dict[str, CatalogQuery]:
+    """Import all query modules and return the registry in verification
+    priority order (see PRIORITY) -- prioritized names first, then the
+    remainder in registration order. ``"staged"``-tagged entries are
+    left out."""
+    _import_all()
+    live = {n: cq for n, cq in REGISTRY.items() if "staged" not in cq.tags}
+    ordered = {n: live[n] for n in PRIORITY if n in live}
+    ordered.update({n: cq for n, cq in live.items() if n not in ordered})
     return ordered
 
 
-#: per-session registry of persisted intermediate DataFrames, keyed
-#: (SparkSession, slot): the next call on the SAME session+slot
-#: unpersists the previous one, so repeated runs (bench best-of-N, the
-#: parity gate) never accumulate cache entries -- while two interleaved
-#: SparkSessions cannot unpersist each other's intermediates. WeakKey: a
-#: garbage-collected session drops its entries (its cache died with it).
-#: Lives here (not in a query module) so every plan module can share it
-#: without inter-module import cycles.
-_PERSISTED: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def persist_swap(spark: SparkSession, slot: str, df: DataFrame) -> DataFrame:
-    """Persist ``df`` (MEMORY_AND_DISK: at 100 TB intermediates spill
-    rather than OOM, and recomputation -- a full corpus re-scan -- is
-    the costlier alternative), releasing whatever the previous call on
-    this session's ``slot`` pinned."""
-    slots = _PERSISTED.setdefault(spark, {})
-    prev = slots.pop(slot, None)
-    if prev is not None:
-        prev.unpersist()
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    slots[slot] = df
-    return df
+def staged_queries() -> dict[str, CatalogQuery]:
+    """The ``"staged"``-tagged entries all_queries() leaves out."""
+    _import_all()
+    return {n: cq for n, cq in REGISTRY.items() if "staged" in cq.tags}
 
 
 def release_persisted(spark: SparkSession) -> None:
-    """Unpersist every slot this session pinned, across BOTH slot
-    registries (this one and functions/ordered's mirror). Bench/parity
+    """Unpersist every slot this session pinned. Bench/parity
     hygiene: in a long multi-query session the accumulated slots of
     prior queries compete with the current query's working set for
     unified storage memory, turning cache eviction churn into measured
@@ -320,14 +278,11 @@ def release_persisted(spark: SparkSession) -> None:
     mechanism). Queries re-persist what they need on the next call, so
     releasing between queries costs nothing but the recompute each
     query already pays on its own first run."""
-    from clueso_spark.functions import ordered
-
-    for registry in (_PERSISTED, ordered._PERSISTED):
-        slots = registry.get(spark)
-        if slots:
-            for df in slots.values():
-                df.unpersist()
-            slots.clear()
+    slots = _PERSISTED.get(spark)
+    if slots:
+        for df in slots.values():
+            df.unpersist()
+        slots.clear()
 
 
 def dec(col: str | F.Column, width: int = 12, scale: int = 2) -> F.Column:

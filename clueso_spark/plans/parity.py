@@ -128,12 +128,16 @@ def run_catalog(
     ``on_result`` (optional callback, called with each ParityResult as
     it lands) lets long sweeps stream progress -- a killed 60-minute
     sf0.1 sweep that buffered every result until the end taught the
-    lesson (ROUND13_NOTES)."""
-    from clueso_spark.plans.catalog import all_queries
+    lesson (ROUND13_NOTES). ``names`` may also pick ``"staged"``
+    entries."""
+    from clueso_spark.plans.catalog import all_queries, staged_queries
 
     con = duckdb_connect(sf_dir)
     results = []
-    for name, cq in all_queries().items():
+    queries = all_queries()
+    if names:
+        queries.update(staged_queries())
+    for name, cq in queries.items():
         if names and name not in names:
             continue
         df = cq.spark(spark, sf_dir)

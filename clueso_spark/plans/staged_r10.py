@@ -1,5 +1,5 @@
 """Operators staged in round 9, PROMOTED in round 10 (this module is
-now in catalog.QUERY_MODULES and ``promote()`` runs at import).
+now in catalog.QUERY_MODULES and registers at import).
 
 Same life-cycle as staged_r6 / staged_r8 / staged_r9 (all promoted):
 these shipped in round 9 as library code with full pytest parity
@@ -44,39 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clueso_spark.plans.catalog import CatalogQuery, persist_swap
+from clueso_spark.plans.catalog import persist_swap, register
 from clueso_spark.sources.tables import load_table
-
-STAGED: dict[str, CatalogQuery] = {}
-
-
-def _stage(
-    name: str,
-    description: str,
-    oracle: str | None,
-    *tags: str,
-    oracle_valid=None,
-):
-    def wrap(fn):
-        STAGED[name] = CatalogQuery(
-            name, description, fn, oracle, tuple(tags), oracle_valid
-        )
-        return fn
-
-    return wrap
-
-
-def promote() -> None:
-    """Move every staged query into the live registry (idempotent).
-
-    Executed at import since round 10 (this module is listed in
-    catalog.QUERY_MODULES) -- the same life-cycle staged_r6/r8/r9 ran
-    through."""
-    from clueso_spark.plans.catalog import REGISTRY
-
-    for name, cq in STAGED.items():
-        REGISTRY[name] = cq
-
 
 # ---------------------------------------------------------------------------
 # LATERAL correlated subquery join: per-key top-N without a window over
@@ -88,7 +57,7 @@ def promote() -> None:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "join_lateral_top2_per_order",
     "LATERAL correlated subquery with ORDER BY + LIMIT: for each urgent "
     "order, its top-2 lineitems by extendedprice (linenumber tiebreak). "
@@ -137,7 +106,7 @@ def join_lateral_top2_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "subquery_correlated_scalar",
     "TWO correlated scalar subqueries per outer row (their nation's "
     "exact cents-sum and count of balances), consumed by an integer "
@@ -192,7 +161,7 @@ def subquery_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "agg_mode_exact",
     "Exact grouped MODE with deterministic tiebreak (highest count, "
     "then smallest quantity): per (flag, qty) counts partial-aggregate "
@@ -248,7 +217,7 @@ def agg_mode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "window_nth_value_frames",
     "first_value / nth_value(2) / last_value over a full-partition "
     "ROWS frame per nation (balance desc, custkey tiebreak) -- the "
@@ -298,7 +267,7 @@ def window_nth_value_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "setop_except_all_multiset",
     "EXCEPT ALL with true multiset semantics: urgent-order customer "
     "keys minus high-order customer keys, each surviving "
@@ -346,7 +315,7 @@ _WELCH_EXPR = (
 )
 
 
-@_stage(
+@register(
     "agg_welch_ttest",
     f"Welch's two-sample t between the '{_WELCH_A}' and '{_WELCH_B}' "
     "sources' document lengths, from exact bigint power sums (n, "
@@ -403,7 +372,7 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONV_PCTS = (25, 50, 90)
 
 
-@_stage(
+@register(
     "ev_funnel_time_percentiles",
     "Exact nearest-rank p25/p50/p90 of the signup -> first-purchase "
     "delay (whole seconds): per-user min-aggregates give each "
@@ -489,7 +458,7 @@ def ev_funnel_time_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_lorenz_power_users",
     "Exact Lorenz / power-user curve: users ranked by event count "
     "(descending); at each decile boundary floor(k*N/10) report the "
@@ -593,7 +562,7 @@ def ev_lorenz_power_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_bounce_rate_sessions",
     "Bounce rate by session entry type: 30-minute-gap sessionization "
     "(user-keyed lag window, one exchange), session aggregation keyed "
@@ -681,7 +650,7 @@ def ev_bounce_rate_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_inter_event_histogram",
     "Log2-bucketed inter-arrival histogram per event type: per-user "
     "consecutive gaps (one user-keyed lag window), bucket = integer "
@@ -769,7 +738,7 @@ _LP_ROUND_SQL = "".join(
 )
 
 
-@_stage(
+@register(
     "graph_label_propagation",
     f"Label propagation, {_LP_ROUNDS} synchronous min-label rounds on "
     "the customer-supplier co-purchase graph, plan-unrolled (the "
@@ -877,7 +846,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KATZ_TOP = 20
 
 
-@_stage(
+@register(
     "graph_katz_centrality",
     "Truncated Katz centrality (beta = 1/8, depth 3) with EXACT "
     "integer walk counts: walks_k(v) = count of length-k walks ending "
@@ -1012,7 +981,7 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KS_A, _KS_B = "src0", "src1"
 
 
-@_stage(
+@register(
     "agg_ks_two_sample",
     f"Exact two-sample KS statistic between '{_KS_A}' and '{_KS_B}' "
     "document-length distributions: per-value counts (one keyed "
@@ -1108,7 +1077,7 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "agg_chi2_independence",
     "Chi-square independence cells for event_type x day-of-week: exact "
     "bigint observed counts and margins from ONE corpus aggregate; the "
@@ -1220,7 +1189,7 @@ def _phash_sig_sql() -> str:
     return " || ".join(bits)
 
 
-@_stage(
+@register(
     "mm_phash_hamming_dedup",
     f"Perceptual-hash near-dup plumbing: {_PHASH_BITS}-bit positional "
     "chunk signature per payload (deterministic md5 stand-in for a "
@@ -1303,7 +1272,3 @@ def mm_phash_hamming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", "hamming")
     )
 
-
-# Round-10 promotion, executed: importing this module (it is listed in
-# catalog.QUERY_MODULES) lands every staged query in the live registry.
-promote()

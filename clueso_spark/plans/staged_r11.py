@@ -1,5 +1,5 @@
 """Operators staged in round 10, PROMOTED in round 11 (this module is
-now in catalog.QUERY_MODULES and ``promote()`` runs at import).
+now in catalog.QUERY_MODULES and registers at import).
 
 Same life-cycle as staged_r6 / staged_r8 / staged_r9 / staged_r10 (all
 promoted): these shipped in round 10 as library code with full pytest
@@ -57,41 +57,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clueso_spark.plans.catalog import CatalogQuery, persist_swap
+from clueso_spark.plans.catalog import persist_swap, register
 from clueso_spark.sources.tables import load_table
-
-STAGED: dict[str, CatalogQuery] = {}
 
 #: day bucket: microseconds div one day (cross-engine truncation pinned)
 _DAY_US = 86_400_000_000
-
-
-def _stage(
-    name: str,
-    description: str,
-    oracle: str | None,
-    *tags: str,
-    oracle_valid=None,
-):
-    def wrap(fn):
-        STAGED[name] = CatalogQuery(
-            name, description, fn, oracle, tuple(tags), oracle_valid
-        )
-        return fn
-
-    return wrap
-
-
-def promote() -> None:
-    """Move every staged query into the live registry (idempotent).
-
-    Executed at import since round 11 (this module is listed in
-    catalog.QUERY_MODULES) -- the same life-cycle staged_r6/r8/r9/r10
-    ran through."""
-    from clueso_spark.plans.catalog import REGISTRY
-
-    for name, cq in STAGED.items():
-        REGISTRY[name] = cq
 
 
 def _cents(col: str) -> F.Column:
@@ -112,7 +82,7 @@ def _day(col: str = "ts") -> F.Column:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "agg_pivot_shipmode",
     "groupBy(l_linestatus).pivot(l_returnflag, [A, N, R]).sum(quantity)"
     " -- Spark's dedicated pivot operator with PINNED pivot values (no "
@@ -162,7 +132,7 @@ def agg_pivot_shipmode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "window_rolling_median",
     "Per-user exact rolling median of event value (cents) over the "
     "trailing 5-row frame: collect the bounded frame, sort, emit the "
@@ -226,7 +196,7 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_cumulative_distinct_users",
     "Running distinct-user count per active day via the first-seen-day "
     "identity (min day per user -> per-day new-user counts -> one "
@@ -281,7 +251,7 @@ def ev_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_top_paths",
     "Per-(user, day) session path = first 3 event types in time order "
     "(event_id tiebreak), '>'-joined; global top-20 paths by exact "
@@ -348,7 +318,7 @@ def ev_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EQUIDEPTH_K = 4
 
 
-@_stage(
+@register(
     "agg_equidepth_histogram",
     f"Exact equi-depth ({_EQUIDEPTH_K}-bucket) histogram of order value "
     "in cents: global rank from the ranged (no single-partition) "
@@ -411,7 +381,7 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_sweepline_active_intervals",
     "Concurrent in-flight shipments per day by sweep-line: +1 delta at "
     "ship day, -1 at the close day ((quantity %% 7) + 1 days later), "
@@ -502,7 +472,7 @@ def _ewma_terms_sql() -> str:
     return " + ".join(terms)
 
 
-@_stage(
+@register(
     "ev_ewma_smoothed",
     "Per-user exponentially weighted moving average of event value as "
     f"an exact {_EWMA_TAPS}-tap FIR: decay 7/8, scaled by 8^"
@@ -563,7 +533,7 @@ def ev_ewma_smoothed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "agg_mann_whitney",
     "Exact Mann-Whitney U between click and view event values: doubled "
     "midranks (2r = 2*less + ties + 1) keep tie handling in pure "
@@ -698,7 +668,7 @@ def _bf_round_sql(k: int) -> str:
     )"""
 
 
-@_stage(
+@register(
     "graph_shortest_paths",
     f"Bellman-Ford shortest paths, {_BF_ROUNDS} plan-unrolled exact "
     "integer min-plus rounds on the customer-supplier co-purchase "
@@ -820,7 +790,7 @@ _EDIT_VERIFY_CHARS = 80
 _EDIT_LEN_BUCKET = 20
 
 
-@_stage(
+@register(
     "dedup_edit_distance",
     "Edit-distance near-dup pairs: candidates from TWO blocking "
     f"families -- (first {_EDIT_PREFIX} normalized chars, n_chars div "
@@ -934,7 +904,7 @@ _KMV_K = 64
 _KMV_BITS_HEX = 14  # 56-bit hash domain
 
 
-@_stage(
+@register(
     "agg_kmv_distinct",
     f"KMV bottom-{_KMV_K} distinct sketch over o_custkey: md5-derived "
     f"{4 * _KMV_BITS_HEX}-bit hashes, k smallest distinct values, "
@@ -1029,7 +999,7 @@ def _doubled_median_sql(src: str, val: str, out: str) -> str:
     )"""
 
 
-@_stage(
+@register(
     "ev_user_value_anomalies",
     "Per-user robust anomaly counts via MAD: doubled median m2 and "
     "quadrupled MAD (mad2, the doubled median of doubled absolute "
@@ -1155,7 +1125,7 @@ def _winnow_fps(h_col: str) -> F.Column:
     )
 
 
-@_stage(
+@register(
     "dedup_winnowing",
     "Winnowing fingerprints (Schleimer et al. 2003 / MOSS): md5 "
     f"{_WINNOW_K}-gram hashes, per-{_WINNOW_W}-window minima selected "
@@ -1231,7 +1201,7 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "mm_cdc_chunking",
     "Content-defined chunking over binary payloads (rsync/LBFS shape): "
     "4-byte hex blocks, boundary where md5(block) LIKE '0%' (1/16 "
@@ -1366,7 +1336,7 @@ def cdc_chunk_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "mm_cdc_dedup",
     "Chunk-level dedup accounting over CDC chunks (mm_cdc_chunking's "
     "boundary rule): posexplode blocks, chunk id = running boundary "
@@ -1430,7 +1400,3 @@ def mm_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("blocks_saved"),
     )
 
-
-# Round-11 promotion, executed: importing this module (it is listed in
-# catalog.QUERY_MODULES) lands every staged query in the live registry.
-promote()

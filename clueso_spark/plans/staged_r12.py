@@ -1,5 +1,5 @@
 """Operators staged in round 11, PROMOTED in round 12 (this module is
-now in catalog.QUERY_MODULES and ``promote()`` runs at import).
+now in catalog.QUERY_MODULES and registers at import).
 
 Same life-cycle as staged_r6 / staged_r8 / staged_r9 / staged_r10 /
 staged_r11 (all promoted): these shipped in round 11 as library code
@@ -99,50 +99,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clueso_spark.plans.catalog import CatalogQuery, persist_swap
+from clueso_spark.plans.catalog import persist_swap, register
+from clueso_spark.plans.staged_r11 import _DAY_US, _cents, _day
 from clueso_spark.sources.tables import load_table, load_table_spread
-
-STAGED: dict[str, CatalogQuery] = {}
-
-#: day bucket: microseconds div one day (cross-engine truncation pinned)
-_DAY_US = 86_400_000_000
-
-
-def _stage(
-    name: str,
-    description: str,
-    oracle: str | None,
-    *tags: str,
-    oracle_valid=None,
-):
-    def wrap(fn):
-        STAGED[name] = CatalogQuery(
-            name, description, fn, oracle, tuple(tags), oracle_valid
-        )
-        return fn
-
-    return wrap
-
-
-def promote() -> None:
-    """Move every staged query into the live registry (idempotent).
-
-    Executed at import since round 12 (see the module-tail call): 21 of
-    the 26 sit inside the round-12 driver window, the five deferred
-    names head round 13's (tests/test_entry.py DEFERRED_PROMOTIONS
-    pins that obligation)."""
-    from clueso_spark.plans.catalog import REGISTRY
-
-    for name, cq in STAGED.items():
-        REGISTRY[name] = cq
-
-
-def _cents(col: str) -> F.Column:
-    return F.round(F.col(col) * 100).cast("bigint")
-
-
-def _day(col: str = "ts") -> F.Column:
-    return F.expr(f"unix_micros({col}) div {_DAY_US}")
 
 
 #: Spark-side md5-prefix -> bigint (DuckDB twin: ('0x' || substr(md5(s),
@@ -174,7 +133,7 @@ _HDR_SHARDS = 8
 _HDR_QUANTILES = (50, 90, 99)
 
 
-@_stage(
+@register(
     "agg_hdr_quantile_merge",
     "Mergeable log2-bucketed quantile sketch, partial/merge: 8 "
     "md5-derived shards each build a (bucket, count) partial over "
@@ -349,7 +308,7 @@ def _cms_col_sql(row: int, expr: str) -> str:
     )
 
 
-@_stage(
+@register(
     "agg_cms_partial_merge",
     f"Count-min sketch partial/merge over event user_ids: {_CMS_SHARDS} "
     f"md5 shards each build a d={_CMS_D} x w={_CMS_W} CMS partial "
@@ -497,7 +456,7 @@ def agg_cms_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KL_SCALE = 1_000_000
 
 
-@_stage(
+@register(
     "agg_kl_divergence_drift",
     "Exact scaled-integer KL divergence D(P||Q) between event-type "
     "distributions of the even / odd md5-user cohorts: with counts "
@@ -641,7 +600,7 @@ def _index_delta_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "dedup_minhash_index_delta",
     "Minhash-LSH index MAINTENANCE with deletes: snapshots old = md5 "
     "deciles 0..8 / new = 1..9; per band, the maintained entry count "
@@ -760,7 +719,7 @@ def _kcore_round_sql(r: int) -> str:
     )"""
 
 
-@_stage(
+@register(
     "graph_kcore_decomposition",
     f"k-core peeling (k = {_KCORE_K}), {_KCORE_ROUNDS} plan-unrolled "
     "synchronous rounds on the co-purchase graph: each round one keyed "
@@ -856,7 +815,7 @@ _AA_TOP = 20
 _AA_SCALE = 1_000_000_000_000
 
 
-@_stage(
+@register(
     "graph_adamic_adar_linkpred",
     "Adamic-Adar link prediction over the part co-purchase graph "
     f"(co-occurrence support >= {_AA_MIN_SUPPORT}): non-adjacent part "
@@ -1013,7 +972,7 @@ def _tr_round_sql(i: int) -> str:
     )"""
 
 
-@_stage(
+@register(
     "txt_textrank_keywords",
     f"TextRank keywords: adjacent-word co-occurrence graph (words of "
     f">= {_TR_MIN_LEN} chars, symmetric, weight = adjacency count), "
@@ -1152,7 +1111,7 @@ _GC_CHUNK_CTES = """
     )"""
 
 
-@_stage(
+@register(
     "mm_chunk_gc_accounting",
     "Chunk-store garbage collection accounting: delete the md5-quintile "
     "0 payload cohort (20%), then per distinct CDC chunk count live vs "
@@ -1230,7 +1189,7 @@ def mm_chunk_gc_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "pipeline_dataset_card",
     "Per-source dataset card: doc count, total chars, DOUBLED exact "
     "median doc length (rank arithmetic, no collect), distinct "
@@ -1364,7 +1323,7 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_seasonal_dow_deviation",
     "Day-of-week seasonal baseline: daily event counts per type, "
     "doubled integer median per (type, dow) via rank arithmetic, and "
@@ -1471,7 +1430,7 @@ def ev_seasonal_dow_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ASOF_TOL_US = 3_600_000_000  # 1 hour
 
 
-@_stage(
+@register(
     "ev_asof_tolerance_join",
     "As-of join with tolerance: each purchase takes the most recent "
     "click at-or-before it by the same user (union-merge + ONE "
@@ -1567,7 +1526,7 @@ def ev_asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVL_LEN_US = 1_800_000_000  # 30 minutes
 
 
-@_stage(
+@register(
     "ev_interval_union_length",
     "Per-user union length of 30-minute event intervals: running "
     "max(end) over prior rows (ONE user-keyed window), each interval "
@@ -1635,7 +1594,7 @@ def ev_interval_union_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RB_WIDTH_US = 7_200_000_000  # bucket width == interval length (2 h)
 
 
-@_stage(
+@register(
     "join_range_bucketed_global",
     "Corpus-global interval-point range join via time bucketing: every "
     "signup opens a 2-hour window; for EVERY error event (no shared "
@@ -1797,7 +1756,7 @@ def _rr_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "dedup_lsh_relative_recall",
     "LSH evaluation by pooling: two independent banded minhash "
     "families (the registered 8-band r=2 production family vs a "
@@ -1962,7 +1921,7 @@ def _modularity_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "graph_modularity_communities",
     "Newman modularity of the 3-round label-propagation communities "
     "on the co-purchase graph, in exact integers: Q * 4m^2 = "
@@ -2099,7 +2058,7 @@ def graph_modularity_communities(
 _NOV_N = 5  # novelty shingle width (words)
 
 
-@_stage(
+@register(
     "txt_ngram_novelty",
     f"Corpus novelty curve: per doc, the fraction of its overlapping "
     f"{_NOV_N}-word shingles whose FIRST corpus occurrence (min doc_id "
@@ -2164,7 +2123,7 @@ _BP_W = 8  # boilerplate chunk width (words, non-overlapping)
 _BP_K = 2  # a chunk present in >= K distinct docs is boilerplate
 
 
-@_stage(
+@register(
     "txt_boilerplate_chunks",
     f"Boilerplate removal accounting (the CCNet/RefinedWeb duplicated-"
     f"paragraph pass, adapted to this corpus's single-line docs): docs "
@@ -2251,7 +2210,7 @@ _KMV_M = 4_294_967_296  # 2^32: the hash value domain
 _KMV_SHARDS = 64
 
 
-@_stage(
+@register(
     "agg_theta_sketch_setops",
     f"Theta/KMV sketch set algebra: bottom-{_KMV_K} md5 sketches of "
     "click user-days (a) and purchase user-days (b); union estimated "
@@ -2409,7 +2368,7 @@ def agg_theta_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "window_max_drawdown",
     "Per-user max drawdown of the signed cumulative cash flow "
     "(purchase/signup = credit, click/view/error = debit), events "
@@ -2497,7 +2456,7 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SALT_N = 8
 
 
-@_stage(
+@register(
     "join_salted_skew",
     f"Skew-salted fact-dim join: the event-type dimension (weight = "
     f"name length) replicates x{_SALT_N}; facts salt on md5(event_id) "
@@ -2559,7 +2518,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_bitmap_retention",
     "Bitmap retention: per (user, week) a 7-bit activity mask "
     "(bit_or(1 << day-of-week), weeks rebased to the corpus min day); "
@@ -2657,7 +2616,7 @@ _DB_EPS = 2  # eps (grid cell width); squared radius = 4
 _DB_MINPTS = 4  # core point threshold (neighbors within eps, self excl.)
 
 
-@_stage(
+@register(
     "sim_dbscan_grid",
     f"DBSCAN core points by grid blocking: users as integer points "
     f"(x = clicks, y = purchases); eps = {_DB_EPS} (euclidean); a "
@@ -2771,7 +2730,7 @@ def sim_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LCC_MIN_SUPPORT = 2  # same co-purchase trim as graph_triangle_count
 
 
-@_stage(
+@register(
     "graph_local_clustering",
     "Per-node local clustering coefficient over the part co-purchase "
     f"graph (edge = >= {_LCC_MIN_SUPPORT} common orders): triangles "
@@ -2965,7 +2924,7 @@ def _kmv_state_fn(key, pdf_iter, state):
     )
 
 
-@_stage(
+@register(
     "st_kmv_distinct_sketch",
     f"STREAMING distinct-count sketch (applyInPandasWithState): per "
     f"cohort (click/purchase user-days) the bottom-{_KMV_K} md5 "
@@ -3068,7 +3027,7 @@ def st_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HITS_TOP = 20
 
 
-@_stage(
+@register(
     "graph_hits_authority",
     "HITS on the customer->part purchase graph, 2 unrolled rounds in "
     "exact integers (unnormalized -- rescaling never reorders): "
@@ -3156,7 +3115,7 @@ def graph_hits_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ROLL_W = 8  # rolling frame: 7 preceding + current
 
 
-@_stage(
+@register(
     "window_rolling_regression",
     f"Per-user rolling OLS slope over the last {_ROLL_W} events (value "
     "cents against the per-user event index): slope = (n*Sxy - Sx*Sy) "
@@ -3232,7 +3191,3 @@ def window_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("slope_x10000"),
     )
 
-
-# Round-12 promotion, executed: importing this module (it is listed in
-# catalog.QUERY_MODULES) lands every staged query in the live registry.
-promote()

@@ -46,51 +46,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clueso_spark.plans.catalog import CatalogQuery, persist_swap
-from clueso_spark.plans.similarity_queries import DIM
+from clueso_spark.plans.catalog import persist_swap, register
+from clueso_spark.plans.similarity_queries import _DOT, DIM
+from clueso_spark.plans.staged_r11 import _DAY_US
 from clueso_spark.plans.staged_r12 import (
     _GC_CHUNK_CTES,
     _md5_mod,
     _md5_mod_sql,
 )
 from clueso_spark.sources.tables import load_table
-
-STAGED: dict[str, CatalogQuery] = {}
-
-
-def _stage(
-    name: str,
-    description: str,
-    oracle: str | None,
-    *tags: str,
-    oracle_valid=None,
-):
-    def wrap(fn):
-        STAGED[name] = CatalogQuery(
-            name, description, fn, oracle, tuple(tags), oracle_valid
-        )
-        return fn
-
-    return wrap
-
-
-def promote() -> None:
-    """Move every staged query into the live registry (idempotent).
-
-    Executed at module import since round 13: the module is in
-    catalog.QUERY_MODULES and all four queries hold round-13 driver
-    window slots (catalog.PRIORITY slots 46-49)."""
-    from clueso_spark.plans.catalog import REGISTRY
-
-    for name, cq in STAGED.items():
-        REGISTRY[name] = cq
-
-
-_DAY_US = 86_400_000_000
-
-#: Spark/DuckDB-identical double dot product (the similarity tier's
-#: proven-identical arithmetic: aggregate/zip_with vs list_dot_product)
-_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, t) -> acc + t)"
 
 
 # ---------------------------------------------------------------------------
@@ -120,7 +84,7 @@ _FANN_TOPK = 5
 _FANN_PROBES = 5  # vec_id < 5, the similarity tier's shared probe set
 
 
-@_stage(
+@register(
     "sim_filtered_ann",
     f"Filtered ANN, prefilter vs postfilter: tenant = md5(vec_id) mod "
     f"{_FANN_TENANTS}; per probe (vec_id < {_FANN_PROBES}, target "
@@ -401,7 +365,7 @@ def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "mm_cdc_store_delta",
     "Incremental chunk-store maintenance: apply the snapshot delta "
     "(md5-quintile-1 payload deletes + quintile-0 inserts) to the OLD "
@@ -495,7 +459,7 @@ def mm_cdc_store_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_retention_cohort_matrix",
     "Cohort retention triangle: cohort_week = per-user min absolute "
     "epoch week, week_offset = active week - cohort week; output "
@@ -580,7 +544,7 @@ _CUSUM_K_CENTS = 5_500  # drift allowance: slightly above the ~50.00 mean
 _CUSUM_H_CENTS = 20_000  # alarm threshold: ~4 consecutive high events
 
 
-@_stage(
+@register(
     "window_cusum_changepoint",
     f"Per-user one-sided CUSUM over exact cents (K = {_CUSUM_K_CENTS}, "
     f"H = {_CUSUM_H_CENTS}): S_t = P_t - min(0, running min of P) via "
@@ -688,5 +652,3 @@ def window_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-promote()

@@ -51,39 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clueso_spark.plans.catalog import CatalogQuery
-
-STAGED: dict[str, CatalogQuery] = {}
-
-
-def _stage(
-    name: str,
-    description: str,
-    oracle: str | None,
-    *tags: str,
-    oracle_valid=None,
-):
-    def wrap(fn):
-        STAGED[name] = CatalogQuery(
-            name, description, fn, oracle, tuple(tags), oracle_valid
-        )
-        return fn
-
-    return wrap
-
-
-def promote() -> None:
-    """Move every staged query into the live registry (idempotent).
-
-    Executed at module import since round 14: the module is in
-    catalog.QUERY_MODULES and the three names occupy the final window
-    slots of catalog.PRIORITY (heavier-first by the pre-promotion
-    best-of-2 sf0.1 timing run recorded in ROUND13_NOTES)."""
-    from clueso_spark.plans.catalog import REGISTRY
-
-    for name, cq in STAGED.items():
-        REGISTRY[name] = cq
-
+from clueso_spark.plans.catalog import register
 
 _HOUR_US = 3_600_000_000
 
@@ -117,7 +85,7 @@ _HOUR_US = 3_600_000_000
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "st_stream_stream_outer_join",
     "Stream-stream LEFT OUTER join: clicks left-joined to purchases "
     "within 1 h after the click (event-time range, both sides "
@@ -242,7 +210,7 @@ def _maxsim_expr(pv: str, v: str) -> str:
     return f"aggregate({maxes}, 0D, (acc, m) -> acc + m)"
 
 
-@_stage(
+@register(
     "sim_colbert_maxsim",
     f"Multi-vector late-interaction (ColBERT MaxSim) top-{_MV_TOPK}: "
     f"each 64-d embedding = {_MV_SUB} token sub-vectors of {_MV_DIM} "
@@ -342,7 +310,7 @@ _RRF_TOPK = 10
 _RRF_SCALE = 1_000_000_000
 
 
-@_stage(
+@register(
     "sim_rrf_fusion",
     f"Hybrid retrieval via reciprocal-rank fusion: per probe "
     f"(vec_id < {_MV_PROBES}), fuse the dense cosine top-"
@@ -488,5 +456,3 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("probe_id", "id", "rrf_score", "dense_rk", "lex_rk", "rk")
     )
 
-
-promote()

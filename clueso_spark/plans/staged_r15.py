@@ -54,40 +54,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clueso_spark.plans.catalog import CatalogQuery, persist_swap
+from clueso_spark.plans.catalog import persist_swap, register
 from clueso_spark.sources.tables import load_table
-
-STAGED: dict[str, CatalogQuery] = {}
-
-
-def _stage(
-    name: str,
-    description: str,
-    oracle: str | None,
-    *tags: str,
-    oracle_valid=None,
-):
-    def wrap(fn):
-        STAGED[name] = CatalogQuery(
-            name, description, fn, oracle, tuple(tags), oracle_valid
-        )
-        return fn
-
-    return wrap
-
-
-def promote() -> None:
-    """Move every staged query into the live registry (idempotent).
-
-    EXECUTED at import time since round 15 (the module-level call
-    below, mirroring staged_r6..r14): the module is listed in
-    catalog.QUERY_MODULES, so ``__spark_entry__.queries()`` carries
-    all four names and the round-15 driver window verifies them."""
-    from clueso_spark.plans.catalog import REGISTRY
-
-    for name, cq in STAGED.items():
-        REGISTRY[name] = cq
-
 
 # ---------------------------------------------------------------------------
 # Word-level BPE merge training. Character-level BPE and word-level
@@ -219,7 +187,7 @@ t{i} as (
     """
 
 
-@_stage(
+@register(
     "txt_bpe_merge_steps",
     f"Word-level BPE / phrase-mining training, {_BPE_STEPS} "
     "plan-unrolled merge rounds: per round, count adjacent token "
@@ -278,7 +246,7 @@ def txt_bpe_merge_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VOCAB_TOP = 16
 
 
-@_stage(
+@register(
     "txt_vocab_coverage_oov",
     f"Tokenizer vocab coverage: build the top-{_VOCAB_TOP} corpus "
     "vocabulary (count desc, word asc), then per source report total "
@@ -358,7 +326,7 @@ def txt_vocab_coverage_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LATE_SHARDS = 8
 
 
-@_stage(
+@register(
     "ev_lateness_audit",
     f"Per-user out-of-order arrival audit in exact integer "
     f"microseconds: events ingest via {_LATE_SHARDS} md5 shards and "
@@ -492,7 +460,7 @@ w{i} as (
 )"""
 
 
-@_stage(
+@register(
     "graph_randomwalk_corpus",
     f"Deterministic random-walk corpus (DeepWalk/node2vec input): one "
     f"walk per node of the symmetric customer-supplier co-purchase "
@@ -634,5 +602,3 @@ def graph_randomwalk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         frontier = nxt
     return out
 
-
-promote()

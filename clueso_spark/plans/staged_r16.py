@@ -3,7 +3,10 @@
 Same life-cycle as staged_r6 .. staged_r15: ship now as library code
 with full pytest parity coverage (tests/test_staged_r16.py runs the
 exact driver comparison -- row count + schema + order-insensitive
-value hash -- against DuckDB oracles at sf0.001 and sf0.01). Round 15
+value hash -- against DuckDB oracles at sf0.001 and sf0.01). The
+query registers with the ``"staged"`` tag, so catalog.all_queries()
+(and the driver contract) leaves it out; promoting it means deleting
+that tag. Round 15
 executed its planned window (46 r10 refreshes + the 4 staged_r15
 promotions, registry now 249), so this tier targets ROUND 16: its
 free capacity is 50 - 49 (the r11 cohort, round 16's mandatory head)
@@ -39,45 +42,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clueso_spark.plans.catalog import CatalogQuery
+from clueso_spark.plans.catalog import register
 
 # the similarity tier's left-fold dot product, imported (not copied) so
 # the "bit-identical shared arithmetic" parity claim cannot drift
 # (ADVICE r14)
 from clueso_spark.plans.similarity_queries import _DOT
-
-STAGED: dict[str, CatalogQuery] = {}
-
-
-def _stage(
-    name: str,
-    description: str,
-    oracle: str | None,
-    *tags: str,
-    oracle_valid=None,
-):
-    def wrap(fn):
-        STAGED[name] = CatalogQuery(
-            name, description, fn, oracle, tuple(tags), oracle_valid
-        )
-        return fn
-
-    return wrap
-
-
-def promote() -> None:
-    """Move every staged query into the live registry (idempotent).
-
-    NOT yet executed: this module is deliberately absent from
-    catalog.QUERY_MODULES until round 16 opens its driver window --
-    staging keeps ``__spark_entry__.queries()`` an honest list of
-    driver-verifiable claims (the life-cycle staged_r6..r15 all ran
-    through)."""
-    from clueso_spark.plans.catalog import REGISTRY
-
-    for name, cq in STAGED.items():
-        REGISTRY[name] = cq
-
 
 _TRIPLET_ANCHORS = 8
 #: margin between the positive's cosine and the hardest admissible
@@ -121,7 +91,7 @@ def _argmax_cos(scored: DataFrame, id_alias: str, cos_alias: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "sim_triplet_mining",
     f"Contrastive-training triplet mining over the embedding corpus: "
     f"for each of {_TRIPLET_ANCHORS} broadcast anchors, positive = "
@@ -164,7 +134,7 @@ def _argmax_cos(scored: DataFrame, id_alias: str, cos_alias: str) -> DataFrame:
            round(p.pos_cos - n.neg_cos, 6) as margin_gap
     from pos p left join neg n on p.anchor_id = n.anchor_id
     """,
-    "similarity", "triplet", "contrastive", "broadcast",
+    "similarity", "triplet", "contrastive", "broadcast", "staged",
 )
 def sim_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     positives = F.broadcast(

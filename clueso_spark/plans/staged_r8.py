@@ -7,7 +7,7 @@ row count + schema + order-insensitive value hash -- against their
 DuckDB oracles at sf0.001 and sf0.01), staged because the round-7
 driver window (50 slots, catalog.PRIORITY[:50]) was fully allocated by
 the rotation policy. Round 8 executed the promotion: this module is in
-catalog.QUERY_MODULES and calls ``promote()`` at import, every name
+catalog.QUERY_MODULES and registers at import, every name
 heads the round-8 driver window, and all 13 are perf-tracked in
 bench.py HEADLINE from the same commit.
 
@@ -30,45 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clueso_spark.functions.text import STOPWORDS, tokens
-from clueso_spark.plans.catalog import CatalogQuery, persist_swap
+from clueso_spark.functions.text import tokens
+from clueso_spark.plans.catalog import persist_swap, register
 from clueso_spark.plans.staged_r6 import _l2
+from clueso_spark.plans.text_queries import _SW
 from clueso_spark.sources.tables import load_table, load_table_spread
-
-_SW = ", ".join(f"'{w}'" for w in STOPWORDS)
-
-STAGED: dict[str, CatalogQuery] = {}
-
-
-def _stage(
-    name: str,
-    description: str,
-    oracle: str | None,
-    *tags: str,
-    oracle_valid=None,
-):
-    def wrap(fn):
-        STAGED[name] = CatalogQuery(
-            name, description, fn, oracle, tuple(tags), oracle_valid
-        )
-        return fn
-
-    return wrap
-
-
-def promote() -> None:
-    """Move every staged query into the live registry (idempotent).
-
-    Executed at module import since round 8 (this module is listed in
-    catalog.QUERY_MODULES and all 13 names head the round-8 driver
-    window). Staging through round 7 kept ``__spark_entry__.queries()``
-    an honest list of driver-verifiable claims (a registered-but-
-    never-verified tier is the asterisk rounds 5/6 worked to remove)."""
-    from clueso_spark.plans.catalog import REGISTRY
-
-    for name, cq in STAGED.items():
-        REGISTRY[name] = cq
-
 
 # ---------------------------------------------------------------------------
 # Per-domain document caps: bound any single source's share of the
@@ -82,7 +48,7 @@ def promote() -> None:
 _DOMAIN_CAP = 18
 
 
-@_stage(
+@register(
     "pipeline_domain_caps",
     f"Per-source document cap: keep the top {_DOMAIN_CAP} docs per "
     "source (by n_chars desc, doc_id tiebreak), report per-source "
@@ -166,7 +132,7 @@ def _bloom_pos_sql(key_sql: str, seed: int) -> str:
     return f"pmod(xxhash64({seed}, {key_sql}), {_BLOOM_M})"
 
 
-@_stage(
+@register(
     "join_bloom_pruned_revenue",
     "Semi-join reduction via an explicit Bloom filter: URGENT orders' "
     f"keys fold into a {_BLOOM_M}-bit bitmap ({_BLOOM_K} xxhash64 "
@@ -272,7 +238,7 @@ def join_bloom_pruned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RULE_MIN_PAIR = 3
 
 
-@_stage(
+@register(
     "graph_assoc_rules",
     "Market-basket association rules on the order->part bipartite "
     f"graph: part pairs co-purchased in >= {_RULE_MIN_PAIR} orders, "
@@ -406,7 +372,7 @@ def graph_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 _N_SHARDS = 8
 
 
-@_stage(
+@register(
     "pipeline_epoch_shuffle_shards",
     "Deterministic epoch-1 dataloader layout: global shuffle order = "
     "rank of md5('epoch1_' || doc_id) (exact global rank via "
@@ -458,7 +424,7 @@ def pipeline_epoch_shuffle_shards(
 _ROLLUP_SPLIT = "2024-03-01 00:00:00"
 
 
-@_stage(
+@register(
     "ev_rollup_incremental_merge",
     "Incremental view maintenance: the hourly (hour, event_type) "
     f"rollup of events before {_ROLLUP_SPLIT} (the stored base) "
@@ -532,7 +498,7 @@ _PMI_VOCAB = 40
 _PMI_MIN_PAIR = 5
 
 
-@_stage(
+@register(
     "txt_cooccurrence_pmi",
     f"Document-level co-occurrence PMI for the top-{_PMI_VOCAB} vocab "
     "words (by doc frequency): pair doc-frequencies from a self-join "
@@ -641,7 +607,28 @@ def txt_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CURVE_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
 
 
-@_stage(
+def _curve_oracle() -> str:
+    from clueso_spark.plans.dedup_queries import _MINHASH_ORACLE
+
+    ts = ", ".join(str(t) for t in _CURVE_THRESHOLDS)
+    return f"""
+    with pairs as ({_MINHASH_ORACLE}),
+    t as (select unnest([{ts}]) as threshold),
+    at as (select t.threshold, p.doc_a, p.doc_b
+           from t join pairs p on p.jaccard >= t.threshold),
+    np as (select threshold, cast(count(*) as bigint) as n_pairs
+           from at group by threshold),
+    d as (select threshold, doc_a as d from at
+          union
+          select threshold, doc_b from at),
+    nd as (select threshold, cast(count(distinct d) as bigint) as n_docs
+           from d group by threshold)
+    select np.threshold, np.n_pairs, nd.n_docs
+    from np join nd using (threshold)
+    """
+
+
+@register(
     "dedup_threshold_curve",
     "MinHash near-dedup threshold tuning curve: verified candidate "
     f"pairs from the registered LSH machinery, counted at Jaccard >= "
@@ -650,7 +637,7 @@ _CURVE_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
     "serves every curve point (the threshold is a filter on the "
     "verified stream). The audit every near-dedup rollout runs before "
     "picking its cutoff.",
-    None,  # composed below from the registered minhash oracle
+    _curve_oracle(),  # composed from the registered minhash oracle
     "dedup", "minhash", "tuning",
 )
 def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -685,30 +672,6 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return n_pairs.join(docs_in, "threshold")
 
 
-def _curve_oracle() -> str:
-    from clueso_spark.plans.dedup_queries import _MINHASH_ORACLE
-
-    ts = ", ".join(str(t) for t in _CURVE_THRESHOLDS)
-    return f"""
-    with pairs as ({_MINHASH_ORACLE}),
-    t as (select unnest([{ts}]) as threshold),
-    at as (select t.threshold, p.doc_a, p.doc_b
-           from t join pairs p on p.jaccard >= t.threshold),
-    np as (select threshold, cast(count(*) as bigint) as n_pairs
-           from at group by threshold),
-    d as (select threshold, doc_a as d from at
-          union
-          select threshold, doc_b from at),
-    nd as (select threshold, cast(count(distinct d) as bigint) as n_docs
-           from d group by threshold)
-    select np.threshold, np.n_pairs, nd.n_docs
-    from np join nd using (threshold)
-    """
-
-
-STAGED["dedup_threshold_curve"].oracle = _curve_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Decile lift / gains table over purchase value: the model-eval /
 # marketing workhorse. Third caller of the de-globalized ranked
@@ -718,7 +681,7 @@ STAGED["dedup_threshold_curve"].oracle = _curve_oracle()
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_decile_lift",
     "Decile gains table over per-user purchase value: users ranked by "
     "decimal-exact monetary (desc, user_id tiebreak) WITHOUT a global "
@@ -820,7 +783,7 @@ def _boot_mult(u_expr: str) -> str:
     return f"(case {branches} else 5 end)"
 
 
-@_stage(
+@register(
     "agg_poisson_bootstrap",
     f"Poisson bootstrap ({_BOOT_B} replicas) of mean document length: "
     "per (doc, replica) multiplicity = Poisson(1) inverse-CDF of a "
@@ -885,7 +848,7 @@ def agg_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "st_foreach_batch_upsert",
     "Structured Streaming foreachBatch upsert: per micro-batch, the "
     "batch's latest row per user_id (ts desc, event_id tiebreak) "
@@ -986,7 +949,7 @@ def upsert_state_sink(state_root: str):
 _SHARD_BYTES = 16_384
 
 
-@_stage(
+@register(
     "mm_shard_manifest",
     "WebDataset-style shard manifest: records ordered by content "
     "address (md5 of doc_id), shard = floor(preceding byte total / "
@@ -1046,7 +1009,7 @@ def mm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RAKE_TOP = 20
 
 
-@_stage(
+@register(
     "txt_rake_keywords",
     f"RAKE keyword extraction, corpus top-{_RAKE_TOP}: stopword-"
     "delimited phrases via gaps-and-islands (phrase id = running "
@@ -1149,7 +1112,7 @@ def txt_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "pipeline_incremental_corpus_diff",
     "Corpus snapshot diff per source: old snapshot = md5 buckets 0-8, "
     "new = buckets 1-9, with 1-in-20 of the shared docs rewritten "
@@ -1255,7 +1218,3 @@ def pipeline_incremental_corpus_diff(
         )
     )
 
-
-# Round-8 promotion, executed: importing this module (it is listed in
-# catalog.QUERY_MODULES) lands every staged query in the live registry.
-promote()

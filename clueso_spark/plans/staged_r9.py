@@ -7,7 +7,7 @@ runs the exact driver comparison -- row count + schema +
 order-insensitive value hash -- against their DuckDB oracles at sf0.001
 and sf0.01) because the round-8 driver window was fully allocated.
 Round 9 executed the promotion: this module is in catalog.QUERY_MODULES,
-``promote()`` runs at import, every name heads the round-9 driver
+registers at import, every name heads the round-9 driver
 window, and all 17 are perf-tracked in bench.py HEADLINE (same commit).
 
 Registry arithmetic: 165 + 17 = 182 registered queries against the
@@ -41,41 +41,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clueso_spark.functions.text import tokens
-from clueso_spark.plans.catalog import CatalogQuery
+from clueso_spark.plans.catalog import register
 from clueso_spark.plans.staged_r6 import _l2
 from clueso_spark.sources.tables import load_table
-
-STAGED: dict[str, CatalogQuery] = {}
-
-
-def _stage(
-    name: str,
-    description: str,
-    oracle: str | None,
-    *tags: str,
-    oracle_valid=None,
-):
-    def wrap(fn):
-        STAGED[name] = CatalogQuery(
-            name, description, fn, oracle, tuple(tags), oracle_valid
-        )
-        return fn
-
-    return wrap
-
-
-def promote() -> None:
-    """Move every staged query into the live registry (idempotent).
-
-    Executed at import since round 9 (this module is listed in
-    catalog.QUERY_MODULES); the module body keeps the STAGED dict so
-    the per-tier pytest parity gates keep running against the same
-    objects the registry serves."""
-    from clueso_spark.plans.catalog import REGISTRY
-
-    for name, cq in STAGED.items():
-        REGISTRY[name] = cq
-
 
 # ---------------------------------------------------------------------------
 # SCD-2 interval build: turn an append-only event log into
@@ -87,7 +55,7 @@ def promote() -> None:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_scd2_intervals",
     "SCD-2 interval build: per user, each event opens a validity "
     "interval closed by the user's next event (lead over ts, event_id "
@@ -146,7 +114,7 @@ def ev_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FUNNEL_WINDOW_US = 7 * 24 * 3600 * 1_000_000
 
 
-@_stage(
+@register(
     "ev_window_funnel",
     "Ordered 3-stage conversion funnel with a 7-day window: per user "
     "the earliest signup, the earliest click strictly after it within "
@@ -255,7 +223,7 @@ _BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in _BM25_TERMS)
 _BM25_K = 10
 
 
-@_stage(
+@register(
     "txt_bm25_topk",
     f"BM25 top-{_BM25_K} retrieval for the fixed query "
     f"{_BM25_TERMS}: postings built by filtering the token stream to "
@@ -375,7 +343,7 @@ def txt_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "agg_ols_trend",
     "Per-priority OLS trend of daily order counts: x = days since "
     "1990-01-01, y = orders that day; slope/intercept from the exact "
@@ -454,7 +422,7 @@ def agg_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "pipeline_importance_sample",
     "Importance-weighted Bernoulli sample: weight w = clamp(n_chars "
     "div 50, 1, 100) percent, keep iff md5('imp_'||doc_id)-derived "
@@ -518,7 +486,7 @@ def pipeline_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_activity_streaks",
     "Longest consecutive-active-day streak per user via "
     "gaps-and-islands (island key = day - per-user row_number over "
@@ -602,7 +570,7 @@ _MOM_KURT = (
 )
 
 
-@_stage(
+@register(
     "agg_exact_moments",
     "Per-source mean/variance/skewness/kurtosis of document length "
     "from exact bigint power sums (n, S1..S4): one partial-aggregated "
@@ -661,7 +629,7 @@ def agg_exact_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "window_cume_percent_rank",
     "Per-nation percent_rank and cume_dist of customer account "
     "balance (ties share ranks; each value is a single IEEE division "
@@ -706,7 +674,7 @@ def window_cume_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_dau_wau_stickiness",
     "Per-day DAU, exact trailing-7-day WAU (explode each distinct "
     "(user, day) to the 7 window positions it supports -> one keyed "
@@ -786,7 +754,7 @@ def ev_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "agg_gini_concentration",
     "Per-nation Gini coefficient of customer spend (exact cents via "
     "decimal sums; rank-index closed form; one final double division "
@@ -882,7 +850,7 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMV_K = 64
 
 
-@_stage(
+@register(
     "sim_source_jaccard_bottomk",
     f"Bottom-{_KMV_K} (KMV) Jaccard similarity between every source "
     "pair: per-source signature = the k lexicographically-smallest "
@@ -1012,7 +980,7 @@ def sim_source_jaccard_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_time_weighted_value",
     "Per-event-type time-weighted average value (TWAP over the SCD-2 "
     "validity intervals): value scaled to exact hundredths, duration "
@@ -1080,7 +1048,7 @@ def ev_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "agg_weighted_median",
     "Per-returnflag weighted median of extended price, weighted by "
     "quantity (exact bigint weights): histogram pre-aggregation per "
@@ -1158,7 +1126,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "ev_cusum_changepoint",
     "Per-event-type CUSUM change point over daily counts: exact "
     "integer deviations (c_d*D - T, so the mean never becomes a "
@@ -1249,7 +1217,7 @@ def ev_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QUANTILE_PCTS = (25, 50, 90, 99)
 
 
-@_stage(
+@register(
     "agg_exact_quantiles",
     "Exact p25/p50/p90/p99 of event value per event type with NO "
     "per-group sort: value-domain histogram (exact hundredths), one "
@@ -1334,7 +1302,7 @@ def agg_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@_stage(
+@register(
     "st_static_enrichment",
     "STREAMING stream-static enrichment: the events stream inner-joins "
     "the static customer dimension on user_id = c_custkey (broadcast "
@@ -1394,7 +1362,7 @@ _KHOP_SEED_BOUND = 50  # seeds = graph vertices with partkey < bound
 _KHOP_MIN_SUPPORT = 2  # same edge rule as graph_triangle_count
 
 
-@_stage(
+@register(
     "graph_khop_reach",
     "Bounded BFS: how many parts are reachable within 0..3 hops of the "
     f"seed set (graph vertices with partkey < {_KHOP_SEED_BOUND}) on "
@@ -1496,7 +1464,3 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = row if out is None else out.unionAll(row)
     return out
 
-
-# Round-9 promotion, executed: importing this module (it is listed in
-# catalog.QUERY_MODULES) lands every staged query in the live registry.
-promote()

@@ -24,9 +24,9 @@ pinned in tests/test_merge_query.py (the store cannot distinguish
 Scale note: the server is a thin driver-side shim -- each request
 builds one executor plan and materializes one page (``limit`` rows,
 keyset-bounded), so response size is page-sized regardless of corpus
-size. Long-running service deployments would put this behind the
-bucket cache manager (operators/cache.py) exactly like the reference's
-Livy session reuses its SessionCacheManager.
+size. An executor wired by ``config.build_engine`` already sits behind
+the bucket cache manager (operators/cache.py), as the reference's Livy
+session reuses its SessionCacheManager.
 
 Security: the ``search`` predicate is an arbitrary Spark SQL boolean
 expression, the same language the reference exposes -- but the

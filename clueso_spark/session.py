@@ -177,12 +177,14 @@ def get_spark(app_name: str = "clueso-spark", **extra_conf: str) -> SparkSession
     # reach the already-running JVM/scheduler -- silently inert. For a
     # knob meant to drive A/B experiments that corrupts the comparison
     # (both arms run the same effective conf), so warn per ignored key
-    # (ADVICE r15). conf.isModifiable is the authoritative test; value
-    # comparison cannot detect this (verified: an inert core conf still
-    # reads back as the requested value).
+    # (ADVICE r15). conf.isModifiable is the authoritative test; the
+    # session conf cannot detect this (verified: an inert core conf still
+    # reads back as the requested value), but the SparkContext's launch
+    # conf can: a key launched with the same value already applies.
     if existing is not None and spark is existing:
+        launch_conf = spark.sparkContext.getConf()
         for k, v in env_conf.items():
-            if not spark.conf.isModifiable(k):
+            if not spark.conf.isModifiable(k) and launch_conf.get(k, None) != v:
                 import warnings
 
                 warnings.warn(

@@ -63,10 +63,11 @@ def table_bytes(sf_dir: str, name: str) -> int | None:
     which on the 100 TB object-store deployment is exactly backwards
     (VERDICT r15 perf-weak item: the helper re-inserted the corpus
     shuffle precisely where it was built to remove it). Callers map
-    None to the conservative at-scale branch instead."""
+    None to the conservative at-scale branch instead. A ``file://``
+    root is local."""
     import os
 
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    path = f"{sf_dir.removeprefix('file://').rstrip('/')}/{name}.parquet"
     if "://" in path:
         return None
     try:

@@ -7,10 +7,12 @@ against local tmp dirs instead of a dockerized S3.
 
 from __future__ import annotations
 
+import importlib
 import json
 
 import pytest
 
+from clueso_spark.plans.catalog import REGISTRY, CatalogQuery
 from clueso_spark.session import get_spark
 from clueso_spark.sources.store import MetadataStore
 
@@ -25,6 +27,12 @@ def spark():
         },
     )
     yield sess
+
+
+def registered_by(module: str) -> dict[str, CatalogQuery]:
+    """The catalog entries ``module`` defines, in registration order."""
+    importlib.import_module(module)
+    return {n: cq for n, cq in REGISTRY.items() if cq.spark.__module__ == module}
 
 
 @pytest.fixture()

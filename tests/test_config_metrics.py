@@ -95,20 +95,14 @@ def test_env_extra_conf_parsing():
     ) == {"spark.x": "a=b"}
 
 
-def test_env_extra_conf_warns_when_existing_session_ignores(
-    spark, monkeypatch
-):
-    """ADVICE r15: getOrCreate() on an existing session silently drops
-    builder confs; an env override meant for an A/B must WARN when it
-    did not take effect, or the experiment runs both arms identically."""
+def _env_conf_warnings(spark, monkeypatch, env_conf: str) -> list[str]:
+    """Call get_spark() again on the running session with
+    SPARK_GRAFT_EXTRA_CONF=env_conf; return the RuntimeWarnings raised."""
     import warnings
 
     from clueso_spark.session import get_spark
 
-    # a STATIC conf an existing session cannot apply at runtime
-    monkeypatch.setenv(
-        "SPARK_GRAFT_EXTRA_CONF", "spark.executor.memoryOverheadFactor=0.42"
-    )
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", env_conf)
     # getOrCreate on the existing session APPLIES every modifiable
     # builder conf (get_spark's defaults included) to it -- snapshot and
     # restore the ones the shared test session depends on, or this test
@@ -125,11 +119,30 @@ def test_env_extra_conf_warns_when_existing_session_ignores(
             warnings.simplefilter("always")
             got = get_spark("env-conf-warn-probe")
         assert got is spark or got.sparkContext is spark.sparkContext
-        assert any(
-            "memoryOverheadFactor" in str(w.message)
-            and issubclass(w.category, RuntimeWarning)
-            for w in seen
-        ), [str(w.message) for w in seen]
     finally:
         for k, v in restore.items():
             spark.conf.set(k, v)
+    return [str(w.message) for w in seen if issubclass(w.category, RuntimeWarning)]
+
+
+def test_env_extra_conf_warns_when_existing_session_ignores(
+    spark, monkeypatch
+):
+    """ADVICE r15: getOrCreate() on an existing session silently drops
+    builder confs; an env override meant for an A/B must WARN when it
+    did not take effect, or the experiment runs both arms identically."""
+    # a STATIC conf an existing session cannot apply at runtime
+    seen = _env_conf_warnings(
+        spark, monkeypatch, "spark.executor.memoryOverheadFactor=0.42"
+    )
+    assert any("memoryOverheadFactor" in m for m in seen), seen
+
+
+def test_env_extra_conf_silent_when_launch_conf_matches(spark, monkeypatch):
+    """A core conf the running session was LAUNCHED with, at the same
+    value, already applies: repeating it must not warn."""
+    k = "spark.serializer"
+    v = spark.sparkContext.getConf().get(k)
+    assert v
+    seen = _env_conf_warnings(spark, monkeypatch, f"{k}={v}")
+    assert not any(k in m for m in seen), seen

@@ -212,30 +212,6 @@ def test_search_scan_prunes_nested_message_fields(spark, store):
         assert "content-md5" in line  # result column subfields survive
 
 
-def test_executor_max_by_strategy_matches_window(spark, store):
-    """A max_by-configured executor returns the same search results as
-    the default window executor on the same store."""
-    from clueso_spark.operators.query import MetadataQuery, MetadataQueryExecutor
-    from clueso_spark.streaming.ingest import parse_events
-    from tests.conftest import op, put_doc, raw_df, wire_event
-
-    b = "mbexec"
-    lines = [
-        wire_event(op(i), "put", b, f"k{i % 7:03d}", put_doc(f"k{i % 7:03d}", b))
-        for i in range(1, 22)
-    ] + [wire_event(op(30), "delete", b, "k003", put_doc("k003", b))]
-    store.write_landing(parse_events(raw_df(spark, lines)))
-    q = MetadataQuery(b, "", limit=100)
-    win = MetadataQueryExecutor(spark, store).execute(q).collect()
-    agg = (
-        MetadataQueryExecutor(spark, store, merge_strategy="max_by")
-        .execute(q)
-        .collect()
-    )
-    assert [r.asDict() for r in win] == [r.asDict() for r in agg]
-    assert "k003" not in [r["key"] for r in win]
-
-
 def _per_conjunct_page(ex, q):
     """Reference page: one DataFrame call per conjunct (user predicate,
     keyset, version-key filter), then project, order and limit over the

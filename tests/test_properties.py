@@ -423,29 +423,6 @@ def test_banded_embedding_lsh_is_sound(spark, tmp_path_factory, vecs):
             assert (i, j) in got, (i, j, got)
 
 
-@settings(max_examples=8, deadline=None)
-@given(rows=events_strategy)
-def test_latest_rows_max_by_strategy_agrees_with_window(spark, rows):
-    """The scale-path hash-aggregate (max_by) must produce the same
-    latest state as the reference-parity window strategy on any
-    canonicalized event stream."""
-    from clueso_spark.operators.merge import latest_rows
-
-    df = spark.createDataFrame(
-        [(k, f"{n:012d}_0", t) for k, n, t in rows],
-        "key string, opIndex string, type string",
-    )
-    win = {
-        (r["key"], r["opIndex"], r["type"])
-        for r in latest_rows(df).collect()
-    }
-    agg = {
-        (r["key"], r["opIndex"], r["type"])
-        for r in latest_rows(df, strategy="max_by").collect()
-    }
-    assert win == agg
-
-
 # -- text array-algebra laws (functions/text.py zip_with rewrite) ---------
 
 words_strategy = st.lists(

@@ -36,6 +36,12 @@ def test_table_bytes_single_file():
     assert table_bytes(SF_DIR, "documents") > 0
 
 
+def test_table_bytes_file_uri_is_local(tmp_path):
+    (tmp_path / "documents.parquet").write_bytes(b"x" * 123)
+    assert table_bytes(f"file://{tmp_path}", "documents") == 123
+    assert table_bytes(f"file://{tmp_path}/", "documents") == 123
+
+
 def test_table_bytes_unknown_is_none():
     # unknown != 0: a 0 would read as "tiny input" and re-insert the
     # corpus shuffle at the exact deployment the helper targets

@@ -18,8 +18,10 @@ from clueso_spark.plans.staged_r6 import (
     _RANGE_TAU,
     _TOPK_K,
     KNN_K,
-    STAGED,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r6")
 
 SF = "/root/testdata/sf0.001"
 
@@ -27,7 +29,7 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def rows(spark):
     """name -> collected rows at sf0.001 (one Spark run per op)."""
-    return {name: cq.spark(spark, SF).collect() for name, cq in STAGED.items()}
+    return {name: cq.spark(spark, SF).collect() for name, cq in QUERIES.items()}
 
 
 def test_containment_dominates_jaccard(rows):

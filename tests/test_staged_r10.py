@@ -14,15 +14,17 @@ from __future__ import annotations
 import pytest
 
 from clueso_spark.plans.parity import compare, duckdb_connect
-from clueso_spark.plans.staged_r10 import STAGED, promote
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r10")
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_staged_parity(spark, name, sf_dir):
-    cq = STAGED[name]
+    cq = QUERIES[name]
     df = cq.spark(spark, sf_dir)
     if cq.oracle_valid is not None and not cq.oracle_valid(sf_dir):
         assert df.count() >= 0
@@ -35,7 +37,7 @@ def test_staged_parity(spark, name, sf_dir):
 def test_staged_rows_nonempty(spark):
     """Every staged query returns at least one row at sf0.01 (the
     driver's smoke bar for registered queries)."""
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         assert cq.spark(spark, SF_DIRS[1]).count() > 0, name
 
 
@@ -51,7 +53,7 @@ def test_staged_plan_shapes(spark):
         "ev_funnel_time_percentiles",  # 1-row total broadcast
         "ev_lorenz_power_users",  # 1-row totals + 10-row decile ladder
     }
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         plan = cq.spark(spark, SF_DIRS[1])._jdf.queryExecution().toString()
         assert "CartesianProduct" not in plan, (name, plan)
         if name not in sanctioned_bnlj:
@@ -72,13 +74,10 @@ def test_promotion_is_live_and_benched():
     from clueso_spark.plans.catalog import all_queries
 
     live = all_queries()
-    missing = sorted(set(STAGED) - set(live))
+    missing = sorted(set(QUERIES) - set(live))
     assert missing == [], missing
-    unbenched = sorted(set(STAGED) - set(bench.HEADLINE))
+    unbenched = sorted(set(QUERIES) - set(bench.HEADLINE))
     assert unbenched == [], unbenched
-    # promote() stays idempotent after the import-time call
-    promote()
-    assert len(all_queries()) == len(live)
 
 
 def test_lateral_join_is_keyed_not_rescan(spark):
@@ -86,7 +85,7 @@ def test_lateral_join_is_keyed_not_rescan(spark):
     keyed rank (window / join), never a per-outer-row re-scan or a
     nested-loop over the fact table."""
     plan = (
-        STAGED["join_lateral_top2_per_order"]
+        QUERIES["join_lateral_top2_per_order"]
         .spark(spark, SF_DIRS[0])
         ._jdf.queryExecution()
         .toString()
@@ -101,7 +100,7 @@ def test_sessionize_windows_are_user_partitioned(spark):
     import re
 
     plan = (
-        STAGED["ev_bounce_rate_sessions"]
+        QUERIES["ev_bounce_rate_sessions"]
         .spark(spark, SF_DIRS[0])
         ._jdf.queryExecution()
         .toString()

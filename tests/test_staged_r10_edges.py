@@ -13,10 +13,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from clueso_spark.plans.staged_r10 import _WELCH_A, _WELCH_B, STAGED
+from clueso_spark.plans.staged_r10 import _WELCH_A, _WELCH_B
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r10")
 
 #: ops whose inputs the edge corpora below cover (the whole tier)
-_ALL = sorted(STAGED)
+_ALL = sorted(QUERIES)
 
 
 def _write_sf(tmp_path, docs=(), events=(), orders=(), customers=(),
@@ -88,7 +91,7 @@ def test_empty_inputs_do_not_crash(spark, tmp_path):
     empty), never raises."""
     sf = _write_sf(tmp_path)
     for name in _ALL:
-        rows = STAGED[name].spark(spark, sf).collect()
+        rows = QUERIES[name].spark(spark, sf).collect()
         assert isinstance(rows, list), name
 
 
@@ -104,7 +107,7 @@ def test_welch_single_member_source_yields_null_not_crash(spark, tmp_path):
             (3, "ccc", "en", _WELCH_B, 30),
         ],
     )
-    rows = STAGED["agg_welch_ttest"].spark(spark, sf).collect()
+    rows = QUERIES["agg_welch_ttest"].spark(spark, sf).collect()
     assert len(rows) == 1
     assert rows[0]["n1"] == 1 and rows[0]["n2"] == 2
 
@@ -118,7 +121,7 @@ def test_ks_identical_distributions_give_zero(spark, tmp_path):
             for src in [(_WELCH_A if i % 2 == 0 else _WELCH_B)]
         ],
     )
-    rows = STAGED["agg_ks_two_sample"].spark(spark, sf).collect()
+    rows = QUERIES["agg_ks_two_sample"].spark(spark, sf).collect()
     # evens i=0,2,..,10 give i%3 = {0,2,1,0,2,1}; odds give {1,0,2,1,0,2}:
     # both sources see the identical multiset {100:2, 101:2, 102:2}, so
     # the KS statistic must be EXACTLY zero
@@ -139,7 +142,7 @@ def test_funnel_percentiles_empty_when_nobody_converts(spark, tmp_path):
             (2, t0, 2, "click", 1.0, "{}"),  # no purchase anywhere
         ],
     )
-    rows = STAGED["ev_funnel_time_percentiles"].spark(spark, sf).collect()
+    rows = QUERIES["ev_funnel_time_percentiles"].spark(spark, sf).collect()
     assert rows == []
 
 
@@ -151,7 +154,7 @@ def test_lorenz_single_user(spark, tmp_path):
         tmp_path,
         events=[(i, t0, 7, "click", 1.0, "{}") for i in range(5)],
     )
-    rows = STAGED["ev_lorenz_power_users"].spark(spark, sf).collect()
+    rows = QUERIES["ev_lorenz_power_users"].spark(spark, sf).collect()
     # N=1: boundaries floor(k*1/10) are 0 for k<10; only decile 10 has a
     # boundary (1), so exactly one row with the full share
     assert len(rows) == 1
@@ -169,7 +172,7 @@ def test_phash_no_collisions_on_distinct_long_texts(spark, tmp_path):
             for i in range(6)
         ],
     )
-    rows = STAGED["mm_phash_hamming_dedup"].spark(spark, sf).collect()
+    rows = QUERIES["mm_phash_hamming_dedup"].spark(spark, sf).collect()
     for r in rows:
         assert r["hamming"] <= 6  # any survivor is a genuine near-dup
 
@@ -197,7 +200,7 @@ def test_label_propagation_two_components(spark, tmp_path):
         (k, c, p, dt.datetime(2026, 1, 1), pr) for k, c, p, _, pr in orders
     ]
     sf = _write_sf(tmp_path, orders=orders, lineitems=lineitems)
-    rows = STAGED["graph_label_propagation"].spark(spark, sf).collect()
+    rows = QUERIES["graph_label_propagation"].spark(spark, sf).collect()
     got = {r["community"]: r["n_nodes"] for r in rows}
     # component A: {1, 1000011, 1000012} -> label 1; B: {2, 1000021} -> 2
     assert got == {1: 3, 2: 2}
@@ -214,7 +217,7 @@ def test_katz_star_center_dominates(spark, tmp_path):
         ("N", 1.0, 1.0, 0.0, 0.0, 1, 100 + s, s, s) for s in range(1, 5)
     ]
     sf = _write_sf(tmp_path, orders=orders, lineitems=lineitems)
-    rows = STAGED["graph_katz_centrality"].spark(spark, sf).collect()
+    rows = QUERIES["graph_katz_centrality"].spark(spark, sf).collect()
     top = min(rows, key=lambda r: r["rk"])
     assert top["node"] == 5  # the customer hub
     assert top["rk"] == 1

@@ -21,15 +21,17 @@ from clueso_spark.plans.staged_r10 import (
     _PHASH_MAX_HAMMING,
     _WELCH_A,
     _WELCH_B,
-    STAGED,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r10")
 
 SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def rows(spark):
-    return {name: cq.spark(spark, SF).collect() for name, cq in STAGED.items()}
+    return {name: cq.spark(spark, SF).collect() for name, cq in QUERIES.items()}
 
 
 @pytest.fixture(scope="module")

@@ -13,15 +13,17 @@ from __future__ import annotations
 import pytest
 
 from clueso_spark.plans.parity import compare, duckdb_connect
-from clueso_spark.plans.staged_r11 import STAGED, promote
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r11")
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_staged_parity(spark, name, sf_dir):
-    cq = STAGED[name]
+    cq = QUERIES[name]
     df = cq.spark(spark, sf_dir)
     if cq.oracle_valid is not None and not cq.oracle_valid(sf_dir):
         assert df.count() >= 0
@@ -34,7 +36,7 @@ def test_staged_parity(spark, name, sf_dir):
 def test_staged_rows_nonempty(spark):
     """Every staged query returns at least one row at sf0.01 (the
     driver's smoke bar for registered queries)."""
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         assert cq.spark(spark, SF_DIRS[1]).count() > 0, name
 
 
@@ -49,7 +51,7 @@ def test_staged_plan_shapes(spark):
         # 1-row exact-count broadcast joined to the 1-row sketch summary
         "agg_kmv_distinct",
     }
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         plan = cq.spark(spark, SF_DIRS[1])._jdf.queryExecution().toString()
         assert "CartesianProduct" not in plan, (name, plan)
         if name not in sanctioned_bnlj:
@@ -70,13 +72,10 @@ def test_promotion_is_live_and_benched():
     from clueso_spark.plans.catalog import all_queries
 
     live = all_queries()
-    missing = sorted(set(STAGED) - set(live))
+    missing = sorted(set(QUERIES) - set(live))
     assert missing == [], missing
-    unbenched = sorted(set(STAGED) - set(bench.HEADLINE))
+    unbenched = sorted(set(QUERIES) - set(bench.HEADLINE))
     assert unbenched == [], unbenched
-    # promote() stays idempotent after the import-time call
-    promote()
-    assert len(all_queries()) == len(live)
 
 
 def test_no_global_single_partition_windows(spark):
@@ -94,7 +93,7 @@ def test_no_global_single_partition_windows(spark):
         "agg_mann_whitney",
     ):
         plan = (
-            STAGED[name]
+            QUERIES[name]
             .spark(spark, SF_DIRS[0])
             ._jdf.queryExecution()
             .executedPlan()

@@ -10,7 +10,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from clueso_spark.plans.staged_r11 import _EWMA_TAPS, STAGED
+from clueso_spark.plans.staged_r11 import _EWMA_TAPS
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r11")
 
 
 @pytest.fixture(scope="module")
@@ -23,9 +26,9 @@ def empty_sf(tmp_path_factory):
     return write_empty_corpus(str(tmp_path_factory.mktemp("empty_r11")))
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_empty_corpus_returns_not_raises(spark, name, empty_sf):
-    rows = STAGED[name].spark(spark, empty_sf).collect()
+    rows = QUERIES[name].spark(spark, empty_sf).collect()
     assert isinstance(rows, list)
 
 
@@ -50,7 +53,7 @@ def _ev(eid, uid, minute, etype, val):
 def test_rolling_median_single_event_user(spark, tmp_path):
     """n = 1 frame: median_x2 = 2x the lone value."""
     sf = _events_table(tmp_path, [_ev(1, 7, 0, "click", 3.5)])
-    rows = STAGED["window_rolling_median"].spark(spark, sf).collect()
+    rows = QUERIES["window_rolling_median"].spark(spark, sf).collect()
     assert len(rows) == 1
     assert rows[0]["n_in_frame"] == 1
     assert rows[0]["median_x2_cents"] == 700
@@ -63,7 +66,7 @@ def test_ewma_emits_nothing_below_full_history(spark, tmp_path):
         tmp_path,
         [_ev(i, 7, i, "click", 1.0) for i in range(_EWMA_TAPS - 1)],
     )
-    assert STAGED["ev_ewma_smoothed"].spark(spark, sf).count() == 0
+    assert QUERIES["ev_ewma_smoothed"].spark(spark, sf).count() == 0
 
 
 def test_mann_whitney_one_empty_sample(spark, tmp_path):
@@ -73,7 +76,7 @@ def test_mann_whitney_one_empty_sample(spark, tmp_path):
     sf = _events_table(
         tmp_path, [_ev(i, i, i, "click", float(i)) for i in range(1, 5)]
     )
-    row = STAGED["agg_mann_whitney"].spark(spark, sf).collect()[0]
+    row = QUERIES["agg_mann_whitney"].spark(spark, sf).collect()[0]
     assert (row["n_a"], row["n_b"]) == (4, 0)
     assert (row["u2_a"], row["u2_b"]) == (0, 0)
     assert row["identity_resid"] == 0
@@ -90,7 +93,7 @@ def test_top_paths_short_sessions_keep_partial_paths(spark, tmp_path):
             _ev(3, 2, 0, "view", 1.0),
         ],
     )
-    rows = STAGED["ev_top_paths"].spark(spark, sf).collect()
+    rows = QUERIES["ev_top_paths"].spark(spark, sf).collect()
     got = {r["path"]: r["n_sessions"] for r in rows}
     assert got == {"signup>click": 1, "view": 1}
 
@@ -145,7 +148,7 @@ def test_edit_distance_suffix_family_catches_leading_edit(spark, tmp_path):
         (7, "totally different content with no shared affixes here"),
     ]
     sf = _documents_table(tmp_path, docs)
-    rows = STAGED["dedup_edit_distance"].spark(spark, sf).collect()
+    rows = QUERIES["dedup_edit_distance"].spark(spark, sf).collect()
     got = {(r["doc_a"], r["doc_b"]): r["edit_distance"] for r in rows}
     assert got.get((1, 2)) == 1, "suffix family must catch the leading edit"
     assert got.get((3, 4)) == 1, "prefix family must keep the trailing edit"
@@ -159,7 +162,7 @@ def test_edit_distance_families_dedup_pairs(spark, tmp_path):
     distinct is part of the output contract, not an optimization."""
     t = "identical twin documents share both blocking keys equally"
     sf = _documents_table(tmp_path, [(1, t), (2, t)])
-    rows = STAGED["dedup_edit_distance"].spark(spark, sf).collect()
+    rows = QUERIES["dedup_edit_distance"].spark(spark, sf).collect()
     assert [(r["doc_a"], r["doc_b"], r["edit_distance"]) for r in rows] == [
         (1, 2, 0)
     ]

@@ -18,7 +18,10 @@ import pyarrow.parquet as pq
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from clueso_spark.plans.staged_r11 import STAGED
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r11")
+
 
 _SCHEMA = pa.schema(
     [
@@ -83,7 +86,7 @@ def test_mann_whitney_random_tie_structures(spark, raw):
     r2b = sum(2 * less[v] + cnt[v] + 1 for v in b)
     u2a = r2a - len(a) * (len(a) + 1)
     u2b = r2b - len(b) * (len(b) + 1)
-    got = STAGED["agg_mann_whitney"].spark(spark, _write(rows)).collect()[0]
+    got = QUERIES["agg_mann_whitney"].spark(spark, _write(rows)).collect()[0]
     assert (got["n_a"], got["n_b"]) == (len(a), len(b))
     assert (got["u2_a"], got["u2_b"]) == (u2a, u2b)
     assert got["identity_resid"] == 0
@@ -109,7 +112,7 @@ def test_rolling_median_random_ts_collisions(spark, raw):
             want[eid] = (n, frame[(n - 1) // 2] + frame[n // 2])
     got = {
         r["event_id"]: (r["n_in_frame"], r["median_x2_cents"])
-        for r in STAGED["window_rolling_median"]
+        for r in QUERIES["window_rolling_median"]
         .spark(spark, _write(rows))
         .collect()
     }

@@ -18,8 +18,10 @@ from clueso_spark.plans.staged_r11 import (
     _EQUIDEPTH_K,
     _EWMA_TAPS,
     _EWMA_WEIGHTS,
-    STAGED,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r11")
 
 SF = "/root/testdata/sf0.001"
 
@@ -51,7 +53,7 @@ def test_pivot_row_sums_equal_plain_group_counts(spark):
 
     got = {
         r["l_linestatus"]: r["qty_a"] + r["qty_n"] + r["qty_r"]
-        for r in STAGED["agg_pivot_shipmode"].spark(spark, SF).collect()
+        for r in QUERIES["agg_pivot_shipmode"].spark(spark, SF).collect()
     }
     want = {
         r["l_linestatus"]: r["t"]
@@ -82,11 +84,11 @@ def test_rolling_median_bounded_and_translation_equivariant(
     sf_b = _events_table(tmp_path / "b", shifted)
     a = {
         r["event_id"]: r["median_x2_cents"]
-        for r in STAGED["window_rolling_median"].spark(spark, sf_a).collect()
+        for r in QUERIES["window_rolling_median"].spark(spark, sf_a).collect()
     }
     b = {
         r["event_id"]: r["median_x2_cents"]
-        for r in STAGED["window_rolling_median"].spark(spark, sf_b).collect()
+        for r in QUERIES["window_rolling_median"].spark(spark, sf_b).collect()
     }
     assert set(a) == set(b)
     for eid in a:
@@ -101,7 +103,7 @@ def test_ewma_constant_series_is_weight_sum(spark, tmp_path):
     sf = _events_table(
         tmp_path, [_ev(i, 1, i, "click", 2.0) for i in range(12)]
     )
-    rows = STAGED["ev_ewma_smoothed"].spark(spark, sf).collect()
+    rows = QUERIES["ev_ewma_smoothed"].spark(spark, sf).collect()
     assert len(rows) == 12 - (_EWMA_TAPS - 1)
     expect = 200 * (8**_EWMA_TAPS - 7**_EWMA_TAPS)
     assert sum(_EWMA_WEIGHTS) == 8**_EWMA_TAPS - 7**_EWMA_TAPS
@@ -114,7 +116,7 @@ def test_sweepline_conservation(spark):
     reported active count equals opens-so-far minus closes-so-far and
     is strictly positive on reported (busiest) days."""
     rows = (
-        STAGED["ev_sweepline_active_intervals"].spark(spark, SF).collect()
+        QUERIES["ev_sweepline_active_intervals"].spark(spark, SF).collect()
     )
     assert len(rows) == 15
     assert all(r["active"] > 0 for r in rows)
@@ -128,7 +130,7 @@ def test_equidepth_bucket_sizes_and_edges(spark):
     first; value ranges are non-overlapping and ascending with bucket
     id; sizes sum to the relation count."""
     rows = sorted(
-        STAGED["agg_equidepth_histogram"].spark(spark, SF).collect(),
+        QUERIES["agg_equidepth_histogram"].spark(spark, SF).collect(),
         key=lambda r: r["bucket"],
     )
     assert [r["bucket"] for r in rows] == list(
@@ -149,7 +151,7 @@ def test_cumulative_distinct_is_monotone_and_totals(spark):
     from clueso_spark.sources.tables import load_table
 
     rows = sorted(
-        STAGED["ev_cumulative_distinct_users"].spark(spark, SF).collect(),
+        QUERIES["ev_cumulative_distinct_users"].spark(spark, SF).collect(),
         key=lambda r: r["day"],
     )
     run = 0
@@ -179,12 +181,12 @@ def test_mann_whitney_swap_symmetry(spark, tmp_path):
     (tmp_path / "a").mkdir()
     (tmp_path / "b").mkdir()
     ra = (
-        STAGED["agg_mann_whitney"]
+        QUERIES["agg_mann_whitney"]
         .spark(spark, _events_table(tmp_path / "a", rows_a))
         .collect()[0]
     )
     rb = (
-        STAGED["agg_mann_whitney"]
+        QUERIES["agg_mann_whitney"]
         .spark(spark, _events_table(tmp_path / "b", rows_b))
         .collect()[0]
     )
@@ -197,7 +199,7 @@ def test_shortest_paths_closure_is_monotone(spark):
     """Reached-set growth law: n_reached is nondecreasing across
     rounds, and round 0's sum_dist is 0 (seeds at distance zero)."""
     rows = sorted(
-        STAGED["graph_shortest_paths"].spark(spark, SF).collect(),
+        QUERIES["graph_shortest_paths"].spark(spark, SF).collect(),
         key=lambda r: r["k"],
     )
     assert rows[0]["sum_dist"] == 0
@@ -226,6 +228,6 @@ def test_edit_distance_finds_planted_near_dup(spark, tmp_path):
     pq.write_table(
         pa.Table.from_pylist(rows), str(tmp_path / "documents.parquet")
     )
-    got = STAGED["dedup_edit_distance"].spark(spark, str(tmp_path)).collect()
+    got = QUERIES["dedup_edit_distance"].spark(spark, str(tmp_path)).collect()
     pairs = {(r["doc_a"], r["doc_b"]): r["edit_distance"] for r in got}
     assert pairs == {(0, 1): 3}  # dog -> cat: 3 substitutions

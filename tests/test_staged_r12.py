@@ -12,15 +12,17 @@ from __future__ import annotations
 import pytest
 
 from clueso_spark.plans.parity import compare, duckdb_connect
-from clueso_spark.plans.staged_r12 import STAGED, promote
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r12")
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_staged_parity(spark, name, sf_dir):
-    cq = STAGED[name]
+    cq = QUERIES[name]
     df = cq.spark(spark, sf_dir)
     if cq.oracle_valid is not None and not cq.oracle_valid(sf_dir):
         assert df.count() >= 0
@@ -33,7 +35,7 @@ def test_staged_parity(spark, name, sf_dir):
 def test_staged_rows_nonempty(spark):
     """Every staged query returns at least one row at sf0.01 (the
     driver's smoke bar for registered queries)."""
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         assert cq.spark(spark, SF_DIRS[1]).count() > 0, name
 
 
@@ -61,7 +63,7 @@ def test_staged_plan_shapes(spark):
         # 1-row corpus-min-day broadcast rebasing the week buckets
         "ev_bitmap_retention",
     }
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         plan = cq.spark(spark, SF_DIRS[1])._jdf.queryExecution().toString()
         assert "CartesianProduct" not in plan, (name, plan)
         if name not in sanctioned_bnlj:
@@ -84,9 +86,9 @@ def test_promotion_is_live_and_heads_the_window():
     from clueso_spark.plans.catalog import all_queries
 
     live = all_queries()
-    missing = sorted(set(STAGED) - set(live))
+    missing = sorted(set(QUERIES) - set(live))
     assert missing == [], missing
-    unbenched = sorted(set(STAGED) - set(bench.HEADLINE))
+    unbenched = sorted(set(QUERIES) - set(bench.HEADLINE))
     assert unbenched == [], unbenched
     # round-13 edition: 21 of the 26 carry r12 driver greens; the five
     # round-12 deferrals (FORMER_DEFERRED) hold slots 0-4 of the
@@ -95,19 +97,16 @@ def test_promotion_is_live_and_heads_the_window():
     names = list(live)
     window = set(names[:50])
     latest, _ = _latest_green_rounds()
-    stranded = sorted(set(STAGED) - window - set(latest))
+    stranded = sorted(set(QUERIES) - window - set(latest))
     assert stranded == [], stranded
     assert tuple(names[: len(FORMER_DEFERRED)]) == FORMER_DEFERRED
-    assert set(FORMER_DEFERRED) == set(STAGED) & window
-    # promote() stays idempotent after the import-time call
-    promote()
-    assert len(all_queries()) == len(live)
+    assert set(FORMER_DEFERRED) == set(QUERIES) & window
 
 
 def test_index_delta_maintenance_equals_rebuild(spark):
     """The LSM invariant is hash-verified data, but pin it as a law
     too: every band's maintained count equals the rebuild."""
-    rows = STAGED["dedup_minhash_index_delta"].spark(
+    rows = QUERIES["dedup_minhash_index_delta"].spark(
         spark, SF_DIRS[1]
     ).collect()
     assert len(rows) == 8
@@ -118,7 +117,7 @@ def test_cms_estimates_dominate_truth(spark):
     """The count-min guarantee: estimate >= exact count, for every
     probed heavy hitter, at both SFs."""
     for sf in SF_DIRS:
-        rows = STAGED["agg_cms_partial_merge"].spark(spark, sf).collect()
+        rows = QUERIES["agg_cms_partial_merge"].spark(spark, sf).collect()
         assert rows, sf
         assert all(r["ge_truth"] == 1 for r in rows), sf
         assert all(r["overcount"] >= 0 for r in rows), sf
@@ -129,7 +128,7 @@ def test_hdr_buckets_contain_exact_quantiles(spark):
     inside the sketch's answered bucket (relative error <= 2x by
     construction of log2 buckets)."""
     for sf in SF_DIRS:
-        rows = STAGED["agg_hdr_quantile_merge"].spark(spark, sf).collect()
+        rows = QUERIES["agg_hdr_quantile_merge"].spark(spark, sf).collect()
         assert {r["pct"] for r in rows} == {50, 90, 99}, sf
         assert all(r["within_bucket"] == 1 for r in rows), sf
 
@@ -138,7 +137,7 @@ def test_kcore_monotonically_shrinks(spark):
     """Peeling can only remove: node and edge counts are non-increasing
     across rounds."""
     rows = sorted(
-        STAGED["graph_kcore_decomposition"].spark(spark, SF_DIRS[1]).collect(),
+        QUERIES["graph_kcore_decomposition"].spark(spark, SF_DIRS[1]).collect(),
         key=lambda r: r["round"],
     )
     assert [r["round"] for r in rows] == [1, 2, 3]
@@ -152,7 +151,7 @@ def test_interval_union_bounds(spark):
     <= n_events * interval length."""
     from clueso_spark.plans.staged_r12 import _IVL_LEN_US
 
-    rows = STAGED["ev_interval_union_length"].spark(
+    rows = QUERIES["ev_interval_union_length"].spark(
         spark, SF_DIRS[1]
     ).collect()
     assert rows
@@ -165,7 +164,7 @@ def test_asof_tolerance_never_exceeds_bound(spark):
     carry the -1 sentinel in both columns."""
     from clueso_spark.plans.staged_r12 import _ASOF_TOL_US
 
-    rows = STAGED["ev_asof_tolerance_join"].spark(spark, SF_DIRS[1]).collect()
+    rows = QUERIES["ev_asof_tolerance_join"].spark(spark, SF_DIRS[1]).collect()
     assert rows
     for r in rows:
         if r["click_id"] == -1:
@@ -190,7 +189,7 @@ def test_no_corpus_sized_global_windows(spark):
         "txt_textrank_keywords": 1,  # 20-row post-limit rank
         "graph_adamic_adar_linkpred": 1,  # 20-row post-limit rank
     }
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         # executedPlan only: queryExecution().toString() prints four
         # plan sections and would quadruple-count each window spec
         plan = (
@@ -248,7 +247,7 @@ def test_dbscan_grid_coincident_pile(spark, tmp_path):
     pq.write_table(table, str(tmp_path / "events.parquet"))
     out = {
         r["user_id"]: (r["n_neighbors"], r["is_core"])
-        for r in STAGED["sim_dbscan_grid"].spark(spark, str(tmp_path)).collect()
+        for r in QUERIES["sim_dbscan_grid"].spark(spark, str(tmp_path)).collect()
     }
     assert len(out) == 302
     for u in range(300):
@@ -259,7 +258,7 @@ def test_dbscan_grid_coincident_pile(spark, tmp_path):
     # relation -- the analyzed plan must aggregate on (x, y) before
     # the join, so the pile contributes ONE row per join side
     plan = (
-        STAGED["sim_dbscan_grid"]
+        QUERIES["sim_dbscan_grid"]
         .spark(spark, str(tmp_path))
         ._jdf.queryExecution()
         .analyzed()

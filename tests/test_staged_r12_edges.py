@@ -17,8 +17,10 @@ import pytest
 from clueso_spark.plans.staged_r12 import (
     _ASOF_TOL_US,
     _IVL_LEN_US,
-    STAGED,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r12")
 
 
 @pytest.fixture(scope="module")
@@ -31,9 +33,9 @@ def empty_sf(tmp_path_factory):
     return write_empty_corpus(str(tmp_path_factory.mktemp("empty_r12")))
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_empty_corpus_returns_not_raises(spark, name, empty_sf):
-    rows = STAGED[name].spark(spark, empty_sf).collect()
+    rows = QUERIES[name].spark(spark, empty_sf).collect()
     assert isinstance(rows, list)
 
 
@@ -97,7 +99,7 @@ def test_asof_tolerance_boundary_inclusive(spark, tmp_path):
     )
     got = {
         r["purchase_id"]: (r["click_id"], r["gap_us"])
-        for r in STAGED["ev_asof_tolerance_join"].spark(spark, sf).collect()
+        for r in QUERIES["ev_asof_tolerance_join"].spark(spark, sf).collect()
     }
     assert got == {
         1: (-1, -1),
@@ -123,7 +125,7 @@ def test_interval_union_overlap_and_duplicates(spark, tmp_path):
     )
     got = {
         r["user_id"]: r["covered_us"]
-        for r in STAGED["ev_interval_union_length"].spark(spark, sf).collect()
+        for r in QUERIES["ev_interval_union_length"].spark(spark, sf).collect()
     }
     assert got == {1: L, 2: L + L // 2, 3: 2 * L}
 
@@ -139,7 +141,7 @@ def test_seasonal_constant_days_have_zero_deviants(spark, tmp_path):
                 _ev(eid, 1, day * 86_400_000_000 + k * 1_000_000, "view")
             )
     sf = _events_table(tmp_path, rows)
-    out = STAGED["ev_seasonal_dow_deviation"].spark(spark, sf).collect()
+    out = QUERIES["ev_seasonal_dow_deviation"].spark(spark, sf).collect()
     assert len(out) == 7
     for r in out:
         assert r["median2_daily"] == 6  # doubled median of [3, 3]
@@ -159,7 +161,7 @@ def test_chunk_gc_all_docs_deleted(spark, tmp_path):
         tmp_path,
         [_doc(i, f"unique text body number {i} " * 8) for i in ids],
     )
-    rows = STAGED["mm_chunk_gc_accounting"].spark(spark, sf).collect()
+    rows = QUERIES["mm_chunk_gc_accounting"].spark(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r["n_live"] == 0
@@ -185,7 +187,7 @@ def test_chunk_gc_shared_chunk_retained(spark, tmp_path):
     sf = _docs_table(
         tmp_path, [_doc(deleted, shared_text), _doc(kept, shared_text)]
     )
-    rows = STAGED["mm_chunk_gc_accounting"].spark(spark, sf).collect()
+    rows = QUERIES["mm_chunk_gc_accounting"].spark(spark, sf).collect()
     r = rows[0]
     assert r["n_dead"] == 0
     assert r["blocks_reclaimed"] == 0
@@ -205,7 +207,7 @@ def test_dataset_card_median_and_dups(spark, tmp_path):
             _doc(5, "  bbbb  "),    # normalizes to dup too (len 8)
         ],
     )
-    rows = STAGED["pipeline_dataset_card"].spark(spark, sf).collect()
+    rows = QUERIES["pipeline_dataset_card"].spark(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r["n_docs"] == 5
@@ -281,7 +283,7 @@ def test_kcore_path_graph_peels_to_empty(spark, tmp_path):
         str(tmp_path / "lineitem.parquet"),
     )
     rows = sorted(
-        STAGED["graph_kcore_decomposition"]
+        QUERIES["graph_kcore_decomposition"]
         .spark(spark, str(tmp_path))
         .collect(),
         key=lambda r: r["round"],
@@ -300,7 +302,7 @@ def test_cms_single_user_estimate_is_exact(spark, tmp_path):
         tmp_path,
         [_ev(i, 7, i * 1_000_000, "view") for i in range(1, 21)],
     )
-    rows = STAGED["agg_cms_partial_merge"].spark(spark, sf).collect()
+    rows = QUERIES["agg_cms_partial_merge"].spark(spark, sf).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["user_id"], r["true_cnt"], r["cms_estimate"], r["overcount"]) == (
@@ -319,7 +321,7 @@ def test_hdr_power_of_two_boundary(spark, tmp_path):
         tmp_path,
         [_ev(i, 1, i * 1_000_000, "view", 40.96) for i in range(1, 11)],
     )
-    rows = STAGED["agg_hdr_quantile_merge"].spark(spark, sf).collect()
+    rows = QUERIES["agg_hdr_quantile_merge"].spark(spark, sf).collect()
     for r in rows:
         assert r["bucket"] == 12
         assert r["est_low"] == 4096
@@ -345,7 +347,7 @@ def test_range_bucketed_window_boundaries(spark, tmp_path):
     )
     got = {
         r["error_id"]: r["n_open_windows"]
-        for r in STAGED["join_range_bucketed_global"].spark(spark, sf).collect()
+        for r in QUERIES["join_range_bucketed_global"].spark(spark, sf).collect()
     }
     assert got == {2: 1, 3: 1, 4: 0, 5: 0}
 
@@ -358,7 +360,7 @@ def test_relative_recall_planted_identical_docs(spark, tmp_path):
     sf = _docs_table(tmp_path, [_doc(1, text), _doc(2, text)])
     out = {
         r["family"]: r
-        for r in STAGED["dedup_lsh_relative_recall"].spark(spark, sf).collect()
+        for r in QUERIES["dedup_lsh_relative_recall"].spark(spark, sf).collect()
     }
     for fam in ("A", "B"):
         r = out[fam]

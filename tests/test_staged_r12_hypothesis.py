@@ -24,8 +24,10 @@ from hypothesis import strategies as st
 from clueso_spark.plans.staged_r12 import (
     _ASOF_TOL_US,
     _IVL_LEN_US,
-    STAGED,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r12")
 
 _SCHEMA = pa.schema(
     [
@@ -109,7 +111,7 @@ def test_asof_tolerance_random_collisions(spark, raw):
                 want[eid] = (u, -1, -1)
     got = {
         r["purchase_id"]: (r["user_id"], r["click_id"], r["gap_us"])
-        for r in STAGED["ev_asof_tolerance_join"]
+        for r in QUERIES["ev_asof_tolerance_join"]
         .spark(spark, _write(rows))
         .collect()
     }
@@ -158,7 +160,7 @@ def test_interval_union_random_overlaps(spark, raw):
         want[u] = (len(starts), covered)
     got = {
         r["user_id"]: (r["n_events"], r["covered_us"])
-        for r in STAGED["ev_interval_union_length"]
+        for r in QUERIES["ev_interval_union_length"]
         .spark(spark, _write(rows))
         .collect()
     }
@@ -212,7 +214,7 @@ def test_seasonal_dow_random_tie_structures(spark, raw):
         want[dow] = (med2, k, deviant)
     got = {
         r["dow"]: (r["median2_daily"], r["n_days"], r["n_deviant"])
-        for r in STAGED["ev_seasonal_dow_deviation"]
+        for r in QUERIES["ev_seasonal_dow_deviation"]
         .spark(spark, _write(rows))
         .collect()
     }
@@ -271,7 +273,7 @@ def test_max_drawdown_random_collisions(spark, raw):
             r["max_drawdown_cents"],
             r["final_bal_cents"],
         )
-        for r in STAGED["window_max_drawdown"]
+        for r in QUERIES["window_max_drawdown"]
         .spark(spark, _write(rows))
         .collect()
     }
@@ -322,7 +324,7 @@ def test_bitmap_retention_random_patterns(spark, raw):
             )
     got = {
         (r["user_id"], r["week"]): (r["active_days"], r["retained_days"])
-        for r in STAGED["ev_bitmap_retention"]
+        for r in QUERIES["ev_bitmap_retention"]
         .spark(spark, _write(rows))
         .collect()
     }
@@ -383,7 +385,7 @@ def test_theta_sketch_random_sets(spark, raw):
     nb, eb = est(cohorts["b"])
     nu, eu = est(cohorts["u"])
     [row] = (
-        STAGED["agg_theta_sketch_setops"].spark(spark, _write(rows)).collect()
+        QUERIES["agg_theta_sketch_setops"].spark(spark, _write(rows)).collect()
     )
     assert (row["exact_a"], row["exact_b"], row["exact_union"]) == (
         na or None,

@@ -12,8 +12,10 @@ import pytest
 from clueso_spark.plans.staged_r12 import (
     _AA_TOP,
     _TR_TOP,
-    STAGED,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r12")
 
 SF = "/root/testdata/sf0.001"
 
@@ -21,7 +23,7 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def rows(spark):
     """name -> collected rows at sf0.001 (one Spark run per op)."""
-    return {name: cq.spark(spark, SF).collect() for name, cq in STAGED.items()}
+    return {name: cq.spark(spark, SF).collect() for name, cq in QUERIES.items()}
 
 
 def test_hdr_quantiles_are_monotone(rows):

@@ -14,7 +14,9 @@ from __future__ import annotations
 import pytest
 
 from clueso_spark.plans.parity import compare, duckdb_connect
-from clueso_spark.plans.staged_r13 import STAGED, promote
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r13")
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
@@ -31,14 +33,14 @@ def test_tier_was_sized_to_round13_capacity():
     from tests.test_entry import _latest_green_rounds
 
     latest, _ = _latest_green_rounds()
-    not_green = sorted(n for n in STAGED if latest.get(n, 0) < 13)
+    not_green = sorted(n for n in QUERIES if latest.get(n, 0) < 13)
     assert not_green == [], not_green
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_staged_parity(spark, name, sf_dir):
-    cq = STAGED[name]
+    cq = QUERIES[name]
     df = cq.spark(spark, sf_dir)
     if cq.oracle_valid is not None and not cq.oracle_valid(sf_dir):
         assert df.count() >= 0
@@ -51,7 +53,7 @@ def test_staged_parity(spark, name, sf_dir):
 def test_staged_rows_nonempty(spark):
     """Every staged query returns at least one row at sf0.01 (the
     driver's smoke bar for registered queries)."""
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         assert cq.spark(spark, SF_DIRS[1]).count() > 0, name
 
 
@@ -63,7 +65,7 @@ def test_staged_plan_shapes(spark):
         # the corpus is touched by broadcast-HASH joins on cell/tenant)
         "sim_filtered_ann",
     }
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         plan = cq.spark(spark, SF_DIRS[1])._jdf.queryExecution().toString()
         assert "CartesianProduct" not in plan, (name, plan)
         if name not in sanctioned_bnlj:
@@ -86,18 +88,15 @@ def test_promotion_is_live_and_heads_the_window():
     from clueso_spark.plans.catalog import all_queries
 
     live = all_queries()
-    missing = sorted(set(STAGED) - set(live))
+    missing = sorted(set(QUERIES) - set(live))
     assert missing == [], missing
-    unbenched = sorted(set(STAGED) - set(bench.HEADLINE))
+    unbenched = sorted(set(QUERIES) - set(bench.HEADLINE))
     assert unbenched == [], unbenched
     names = list(live)
     window = set(names[:50])
     latest, _ = _latest_green_rounds()
-    stranded = sorted(set(STAGED) - window - set(latest))
+    stranded = sorted(set(QUERIES) - window - set(latest))
     assert stranded == [], stranded
-    # promote() stays idempotent after the import-time call
-    promote()
-    assert len(all_queries()) == len(live)
 
 
 def test_filtered_ann_prefilter_never_trails_postfilter(spark):
@@ -107,7 +106,7 @@ def test_filtered_ann_prefilter_never_trails_postfilter(spark):
     n_pre >= n_post_survivors. The recall gap the op exists to
     measure must point the right way at both oracle SFs."""
     for sf_dir in SF_DIRS:
-        rows = STAGED["sim_filtered_ann"].spark(spark, sf_dir).collect()
+        rows = QUERIES["sim_filtered_ann"].spark(spark, sf_dir).collect()
         assert rows, sf_dir
         for r in rows:
             assert r["pre_hits"] >= r["post_hits"], r
@@ -138,7 +137,7 @@ def test_cdc_store_delta_gc_really_fires(spark):
     }
     out_chunks = {
         r["chunk_hash"]
-        for r in STAGED["mm_cdc_store_delta"]
+        for r in QUERIES["mm_cdc_store_delta"]
         .spark(spark, SF_DIRS[1])
         .select("chunk_hash")
         .collect()
@@ -154,7 +153,7 @@ def test_retention_matrix_offset_zero_is_cohort_size(spark):
     week, so the offset-0 row of each cohort must equal the cohort
     size exactly (retention_x10000 == 10000)."""
     rows = (
-        STAGED["ev_retention_cohort_matrix"]
+        QUERIES["ev_retention_cohort_matrix"]
         .spark(spark, SF_DIRS[1])
         .collect()
     )
@@ -195,7 +194,6 @@ def test_cusum_immediate_alarm_and_reset(spark, tmp_path):
     from clueso_spark.plans.staged_r13 import (
         _CUSUM_H_CENTS,
         _CUSUM_K_CENTS,
-        STAGED,
     )
 
     big = (_CUSUM_K_CENTS + _CUSUM_H_CENTS + 1) / 100.0  # S = H+1 > H
@@ -213,7 +211,7 @@ def test_cusum_immediate_alarm_and_reset(spark, tmp_path):
     )
     got = {
         r["user_id"]: (r["n_alarms"], r["max_cusum"], r["first_alarm_event_id"])
-        for r in STAGED["window_cusum_changepoint"].spark(spark, sf).collect()
+        for r in QUERIES["window_cusum_changepoint"].spark(spark, sf).collect()
     }
     assert got[7] == (1, _CUSUM_H_CENTS + 1, 1)
     assert got[8] == (0, _CUSUM_H_CENTS, -1)
@@ -229,12 +227,11 @@ def test_cusum_first_alarm_is_processing_order_not_min_id(spark, tmp_path):
     from clueso_spark.plans.staged_r13 import (
         _CUSUM_H_CENTS,
         _CUSUM_K_CENTS,
-        STAGED,
     )
 
     big = (_CUSUM_K_CENTS + _CUSUM_H_CENTS + 1) / 100.0
     sf = _events_table(tmp_path, [(9, 5, 0, big), (3, 5, 1, big)])
-    [row] = STAGED["window_cusum_changepoint"].spark(spark, sf).collect()
+    [row] = QUERIES["window_cusum_changepoint"].spark(spark, sf).collect()
     assert row["n_alarms"] == 2
     assert row["first_alarm_event_id"] == 9, row
 
@@ -243,8 +240,6 @@ def test_retention_single_week_user(spark, tmp_path):
     """A user active in exactly one week contributes only the offset-0
     cell; a user active in weeks (w, w+2) skips offset 1 -- the matrix
     is sparse, not gap-filled."""
-    from clueso_spark.plans.staged_r13 import STAGED
-
     sf = _events_table(
         tmp_path,
         [
@@ -253,7 +248,7 @@ def test_retention_single_week_user(spark, tmp_path):
             (3, 2, 14, 1.0),
         ],
     )
-    rows = STAGED["ev_retention_cohort_matrix"].spark(spark, sf).collect()
+    rows = QUERIES["ev_retention_cohort_matrix"].spark(spark, sf).collect()
     got = {
         (r["week_offset"]): (r["n_active"], r["cohort_size"])
         for r in rows

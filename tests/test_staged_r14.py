@@ -11,7 +11,9 @@ from __future__ import annotations
 import pytest
 
 from clueso_spark.plans.parity import compare, duckdb_connect
-from clueso_spark.plans.staged_r14 import STAGED, promote
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r14")
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
@@ -28,14 +30,14 @@ def test_tier_was_sized_to_round14_capacity():
     from tests.test_entry import _latest_green_rounds
 
     latest, _ = _latest_green_rounds()
-    not_green = sorted(n for n in STAGED if latest.get(n, 0) < 14)
+    not_green = sorted(n for n in QUERIES if latest.get(n, 0) < 14)
     assert not_green == [], not_green
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_staged_parity(spark, name, sf_dir):
-    cq = STAGED[name]
+    cq = QUERIES[name]
     df = cq.spark(spark, sf_dir)
     if cq.oracle_valid is not None and not cq.oracle_valid(sf_dir):
         assert df.count() >= 0
@@ -48,7 +50,7 @@ def test_staged_parity(spark, name, sf_dir):
 def test_staged_rows_nonempty(spark):
     """Every staged query returns at least one row at sf0.01 (the
     driver's smoke bar for registered queries)."""
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         assert cq.spark(spark, SF_DIRS[1]).count() > 0, name
 
 
@@ -64,7 +66,7 @@ def test_staged_plan_shapes(spark):
         # arm joins on the word key (broadcast HASH join)
         "sim_rrf_fusion",
     }
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         if name.startswith("st_"):
             continue  # streaming plans execute on build; laws below
         plan = cq.spark(spark, SF_DIRS[1])._jdf.queryExecution().toString()
@@ -89,18 +91,15 @@ def test_promotion_is_live_and_heads_the_window():
     from clueso_spark.plans.catalog import all_queries
 
     live = all_queries()
-    missing = sorted(set(STAGED) - set(live))
+    missing = sorted(set(QUERIES) - set(live))
     assert missing == [], missing
-    unbenched = sorted(set(STAGED) - set(bench.HEADLINE))
+    unbenched = sorted(set(QUERIES) - set(bench.HEADLINE))
     assert unbenched == [], unbenched
     names = list(live)
     window = set(names[:50])
     latest, _ = _latest_green_rounds()
-    stranded = sorted(set(STAGED) - window - set(latest))
+    stranded = sorted(set(QUERIES) - window - set(latest))
     assert stranded == [], stranded
-    # promote() stays idempotent after the import-time call
-    promote()
-    assert len(all_queries()) == len(live)
 
 
 # ---------------------------------------------------------------------------
@@ -208,7 +207,7 @@ def test_outer_join_decomposes_into_inner_plus_evictable_anti(spark):
     from clueso_spark.sources.tables import load_table
 
     sf = SF_DIRS[1]
-    out = STAGED["st_stream_stream_outer_join"].spark(spark, sf)
+    out = QUERIES["st_stream_stream_outer_join"].spark(spark, sf)
     got_matched = {
         (r["click_id"], r["purchase_id"])
         for r in out.where("purchase_id is not null").collect()
@@ -262,8 +261,8 @@ def test_outer_join_reruns_in_same_session(spark):
     repeatedly in one session; the memory-sink name must be reusable
     after termination."""
     sf = SF_DIRS[0]
-    first = STAGED["st_stream_stream_outer_join"].spark(spark, sf).count()
-    second = STAGED["st_stream_stream_outer_join"].spark(spark, sf).count()
+    first = QUERIES["st_stream_stream_outer_join"].spark(spark, sf).count()
+    second = QUERIES["st_stream_stream_outer_join"].spark(spark, sf).count()
     assert first == second > 0
 
 
@@ -305,7 +304,7 @@ def test_maxsim_numpy_third_opinion(spark):
 
     got = [
         (r["probe_id"], r["vec_id"], round(r["maxsim"], 6), r["rk"])
-        for r in STAGED["sim_colbert_maxsim"]
+        for r in QUERIES["sim_colbert_maxsim"]
         .spark(spark, sf)
         .orderBy("probe_id", "rk")
         .collect()
@@ -329,7 +328,7 @@ def test_maxsim_dominates_whole_vector_dot(spark):
             tbl["vec_id"].to_pylist(), tbl["embedding"].to_pylist()
         )
     }
-    rows = STAGED["sim_colbert_maxsim"].spark(spark, sf).collect()
+    rows = QUERIES["sim_colbert_maxsim"].spark(spark, sf).collect()
     assert rows
     for r in rows:
         full_dot = float(vecs[r["probe_id"]] @ vecs[r["vec_id"]])
@@ -347,7 +346,7 @@ def test_rrf_arithmetic_law(spark):
     1e9 // (60 + rank) summed over the arms where rank > 0; and at
     least one fused row must draw from BOTH arms at sf0.01 (else the
     op degenerates to a single ranker and fusion is untested)."""
-    rows = STAGED["sim_rrf_fusion"].spark(spark, SF_DIRS[1]).collect()
+    rows = QUERIES["sim_rrf_fusion"].spark(spark, SF_DIRS[1]).collect()
     assert rows
     both = 0
     for r in rows:
@@ -388,7 +387,7 @@ def test_rrf_lexical_arm_python_third_opinion(spark):
         for rk, (d, _) in enumerate(scored[:20], start=1):
             lex_rank[(p, d)] = rk
 
-    rows = STAGED["sim_rrf_fusion"].spark(spark, sf).collect()
+    rows = QUERIES["sim_rrf_fusion"].spark(spark, sf).collect()
     assert rows
     seen_with_lex = 0
     for r in rows:
@@ -408,6 +407,6 @@ def test_staged_empty_corpus_returns_not_raises(spark, tmp_path_factory):
     from empty_sweep import write_empty_corpus
 
     sf = write_empty_corpus(str(tmp_path_factory.mktemp("empty_r14")))
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         rows = cq.spark(spark, sf).collect()
         assert isinstance(rows, list), name

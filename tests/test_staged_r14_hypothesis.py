@@ -25,9 +25,11 @@ from clueso_spark.plans.staged_r14 import (
     _HOUR_US,
     _MV_DIM,
     _MV_SUB,
-    STAGED,
 )
 from clueso_spark.plans.streaming_queries import stream_state_partitions
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r14")
 
 _EV_SCHEMA = pa.schema(
     [
@@ -134,7 +136,7 @@ def test_outer_join_matches_literal_model(spark, events):
         for eid, (kind, user, off) in enumerate(events)
     ]
     sf_dir = _write_events(rows)
-    out = STAGED["st_stream_stream_outer_join"].spark(spark, sf_dir).collect()
+    out = QUERIES["st_stream_stream_outer_join"].spark(spark, sf_dir).collect()
     got_matched = {
         (r["click_id"], r["purchase_id"])
         for r in out
@@ -177,7 +179,7 @@ def test_maxsim_matches_literal_model(spark, vecs):
     )
     got = [
         (r["probe_id"], r["vec_id"], round(r["maxsim"], 6), r["rk"])
-        for r in STAGED["sim_colbert_maxsim"]
+        for r in QUERIES["sim_colbert_maxsim"]
         .spark(spark, sf_dir)
         .orderBy("probe_id", "rk")
         .collect()

@@ -11,7 +11,9 @@ import hashlib
 import pytest
 
 from clueso_spark.plans.parity import compare, duckdb_connect
-from clueso_spark.plans.staged_r15 import STAGED, promote
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r15")
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
@@ -27,13 +29,13 @@ def test_tier_is_sized_to_round15_projection():
 
     latest, _ = _latest_green_rounds()
     r10 = [n for n, r in latest.items() if r == 10]
-    assert len(STAGED) <= WINDOW - len(r10), (len(STAGED), len(r10))
+    assert len(QUERIES) <= WINDOW - len(r10), (len(QUERIES), len(r10))
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_staged_parity(spark, name, sf_dir):
-    cq = STAGED[name]
+    cq = QUERIES[name]
     df = cq.spark(spark, sf_dir)
     if cq.oracle_valid is not None and not cq.oracle_valid(sf_dir):
         assert df.count() >= 0
@@ -44,7 +46,7 @@ def test_staged_parity(spark, name, sf_dir):
 
 
 def test_staged_rows_nonempty(spark):
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         assert cq.spark(spark, SF_DIRS[1]).count() > 0, name
 
 
@@ -57,7 +59,7 @@ def test_staged_plan_shapes(spark):
         # scalar broadcast shape
         "txt_bpe_merge_steps",
     }
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         plan = cq.spark(spark, SF_DIRS[1])._jdf.queryExecution().toString()
         assert "CartesianProduct" not in plan, (name, plan)
         if name not in sanctioned_bnlj:
@@ -77,17 +79,14 @@ def test_promotion_is_live_and_heads_the_window():
     from clueso_spark.plans.catalog import all_queries
 
     live = all_queries()
-    missing = sorted(set(STAGED) - set(live))
+    missing = sorted(set(QUERIES) - set(live))
     assert missing == [], missing
-    unbenched = sorted(set(STAGED) - set(bench.HEADLINE))
+    unbenched = sorted(set(QUERIES) - set(bench.HEADLINE))
     assert unbenched == [], unbenched
     names = list(live)
     window = set(names[:50])
-    outside = sorted(set(STAGED) - window)
+    outside = sorted(set(QUERIES) - window)
     assert outside == [], outside
-    # promote() stays idempotent after the import-time call
-    promote()
-    assert len(all_queries()) == len(live)
 
 
 # ---------------------------------------------------------------------------
@@ -165,7 +164,7 @@ def test_bpe_consecutive_pair_adversaries(spark, tmp_path):
             r["freq"],
             r["n_tokens_after"],
         )
-        for r in STAGED["txt_bpe_merge_steps"]
+        for r in QUERIES["txt_bpe_merge_steps"]
         .spark(spark, str(tmp_path))
         .orderBy("step")
         .collect()
@@ -194,7 +193,7 @@ def test_bpe_matches_python_reference_on_corpus(spark):
             r["freq"],
             r["n_tokens_after"],
         )
-        for r in STAGED["txt_bpe_merge_steps"]
+        for r in QUERIES["txt_bpe_merge_steps"]
         .spark(spark, sf)
         .orderBy("step")
         .collect()
@@ -246,7 +245,7 @@ def test_vocab_coverage_python_third_opinion(spark):
             r["n_oov_types"],
             r["oov_permyriad"],
         )
-        for r in STAGED["txt_vocab_coverage_oov"].spark(spark, sf).collect()
+        for r in QUERIES["txt_vocab_coverage_oov"].spark(spark, sf).collect()
     }
     assert got == want
 
@@ -315,7 +314,7 @@ def test_lateness_audit_python_third_opinion(spark):
             r["max_late_us"],
             r["late_permyriad"],
         )
-        for r in STAGED["ev_lateness_audit"].spark(spark, sf).collect()
+        for r in QUERIES["ev_lateness_audit"].spark(spark, sf).collect()
     }
     assert got == want
     assert any(v[1] > 0 for v in got.values())  # lateness actually occurs
@@ -363,7 +362,7 @@ def test_randomwalk_python_third_opinion(spark):
 
     got = {
         (r["walk_id"], r["step"], r["node"])
-        for r in STAGED["graph_randomwalk_corpus"].spark(spark, sf).collect()
+        for r in QUERIES["graph_randomwalk_corpus"].spark(spark, sf).collect()
     }
     assert got == want
     # every walk has exactly 4 rows (steps 0-3): no dead ends by
@@ -381,6 +380,6 @@ def test_staged_empty_corpus_returns_not_raises(spark, tmp_path_factory):
     from empty_sweep import write_empty_corpus
 
     sf = write_empty_corpus(str(tmp_path_factory.mktemp("empty_r15")))
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         rows = cq.spark(spark, sf).collect()
         assert isinstance(rows, list), name

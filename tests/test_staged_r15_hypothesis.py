@@ -20,8 +20,11 @@ import pyarrow.parquet as pq
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from clueso_spark.plans.staged_r15 import _LATE_SHARDS, STAGED
+from clueso_spark.plans.staged_r15 import _LATE_SHARDS
+from tests.conftest import registered_by
 from tests.test_staged_r15 import _bpe_reference
+
+QUERIES = registered_by("clueso_spark.plans.staged_r15")
 
 _DOC_SCHEMA = pa.schema(
     [
@@ -73,7 +76,7 @@ def test_bpe_matches_literal_model(spark, texts):
             r["freq"],
             r["n_tokens_after"],
         )
-        for r in STAGED["txt_bpe_merge_steps"]
+        for r in QUERIES["txt_bpe_merge_steps"]
         .spark(spark, sf_dir)
         .orderBy("step")
         .collect()
@@ -166,6 +169,6 @@ def test_lateness_matches_literal_model(spark, events):
             r["max_late_us"],
             r["late_permyriad"],
         )
-        for r in STAGED["ev_lateness_audit"].spark(spark, sf_dir).collect()
+        for r in QUERIES["ev_lateness_audit"].spark(spark, sf_dir).collect()
     }
     assert got == want, (events, got, want)

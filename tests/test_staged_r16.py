@@ -14,9 +14,10 @@ from clueso_spark.plans.parity import compare, duckdb_connect
 from clueso_spark.plans.staged_r16 import (
     _TRIPLET_ANCHORS,
     _TRIPLET_MARGIN,
-    STAGED,
-    promote,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r16")
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
@@ -38,14 +39,14 @@ def test_tier_is_sized_to_round16_projection():
 
     latest, _ = _latest_green_rounds()
     r11 = [n for n, r in latest.items() if r == 11]
-    assert len(STAGED) <= WINDOW - len(r11), (len(STAGED), len(r11))
-    assert len(entrymod.queries()) + len(STAGED) == 5 * WINDOW
+    assert len(QUERIES) <= WINDOW - len(r11), (len(QUERIES), len(r11))
+    assert len(entrymod.queries()) + len(QUERIES) == 5 * WINDOW
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_staged_parity(spark, name, sf_dir):
-    cq = STAGED[name]
+    cq = QUERIES[name]
     df = cq.spark(spark, sf_dir)
     con = duckdb_connect(sf_dir)
     res = compare(name, df, cq.oracle, con)
@@ -53,7 +54,7 @@ def test_staged_parity(spark, name, sf_dir):
 
 
 def test_staged_rows_one_per_anchor(spark):
-    df = STAGED["sim_triplet_mining"].spark(spark, SF_DIRS[1])
+    df = QUERIES["sim_triplet_mining"].spark(spark, SF_DIRS[1])
     rows = df.collect()
     assert sorted(r["anchor_id"] for r in rows) == list(
         range(_TRIPLET_ANCHORS)
@@ -65,7 +66,7 @@ def test_staged_plan_shape(spark):
     broadcast scoring join (the similarity tier's standard shape); no
     CartesianProduct anywhere."""
     plan = (
-        STAGED["sim_triplet_mining"]
+        QUERIES["sim_triplet_mining"]
         .spark(spark, SF_DIRS[1])
         ._jdf.queryExecution()
         .toString()
@@ -77,20 +78,15 @@ def test_staged_plan_shape(spark):
 
 
 def test_staging_is_not_live():
-    """Honesty guard: no staged name is registered until round 16
-    executes the promotion."""
-    from clueso_spark.plans.catalog import REGISTRY, all_queries
+    """Honesty guard: the staged name is registered under the
+    ``"staged"`` tag, so the driver contract leaves it out until round
+    16 executes the promotion (by deleting the tag)."""
+    from clueso_spark.plans.catalog import all_queries
 
     live = all_queries()
-    overlap = sorted(set(STAGED) & set(live))
+    overlap = sorted(set(QUERIES) & set(live))
     assert overlap == [], overlap
-    try:
-        promote()
-        assert set(STAGED) <= set(REGISTRY)
-    finally:
-        for name in STAGED:
-            REGISTRY.pop(name, None)
-    assert not set(STAGED) & set(REGISTRY)
+    assert all("staged" in cq.tags for cq in QUERIES.values())
 
 
 # ---------------------------------------------------------------------------
@@ -142,7 +138,7 @@ def test_margin_skips_near_ties(spark, tmp_path):
     sf = _write_embeddings(tmp_path, vecs)
     rows = {
         r["anchor_id"]: r
-        for r in STAGED["sim_triplet_mining"].spark(spark, sf).collect()
+        for r in QUERIES["sim_triplet_mining"].spark(spark, sf).collect()
     }
     r0 = rows[0]
     assert r0["pos_id"] == 10 and r0["pos_cos"] == 1.0
@@ -164,7 +160,7 @@ def test_cos_ties_resolve_to_smallest_vec_id(spark, tmp_path):
     sf = _write_embeddings(tmp_path, vecs)
     rows = {
         r["anchor_id"]: r
-        for r in STAGED["sim_triplet_mining"].spark(spark, sf).collect()
+        for r in QUERIES["sim_triplet_mining"].spark(spark, sf).collect()
     }
     assert rows[0]["pos_id"] == 20
     assert rows[0]["neg_id"] == 30
@@ -179,7 +175,7 @@ def test_no_admissible_negative_yields_null(spark, tmp_path):
     vecs[40] = one_hot
     vecs[41] = _unit(0.999)  # inside the band relative to pos_cos 1.0
     sf = _write_embeddings(tmp_path, vecs)
-    rows = STAGED["sim_triplet_mining"].spark(spark, sf).collect()
+    rows = QUERIES["sim_triplet_mining"].spark(spark, sf).collect()
     assert len(rows) == 8
     for r in rows:
         assert r["pos_cos"] == 1.0
@@ -197,7 +193,7 @@ def test_empty_corpus_returns_not_raises(spark, tmp_path_factory):
     from empty_sweep import write_empty_corpus
 
     sf = write_empty_corpus(str(tmp_path_factory.mktemp("empty_r16")))
-    assert STAGED["sim_triplet_mining"].spark(spark, sf).count() == 0
+    assert QUERIES["sim_triplet_mining"].spark(spark, sf).count() == 0
 
 
 def reference_triplets(vecs):
@@ -246,7 +242,7 @@ def test_third_opinion_from_definition(spark):
     expected = reference_triplets(vecs)
     got = {
         r["anchor_id"]: (r["pos_id"], r["pos_cos"], r["neg_id"])
-        for r in STAGED["sim_triplet_mining"].spark(spark, SF_DIRS[0]).collect()
+        for r in QUERIES["sim_triplet_mining"].spark(spark, SF_DIRS[0]).collect()
     }
     for a in expected:
         assert got[a][0] == expected[a][0], (a, got[a], expected[a])

@@ -18,8 +18,11 @@ import pyarrow.parquet as pq
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from clueso_spark.plans.staged_r16 import _TRIPLET_ANCHORS, STAGED
+from clueso_spark.plans.staged_r16 import _TRIPLET_ANCHORS
+from tests.conftest import registered_by
 from tests.test_staged_r16 import reference_triplets
+
+QUERIES = registered_by("clueso_spark.plans.staged_r16")
 
 #: corpora of >= anchors+2 vectors on a tiny 3-d integer grid
 #: (components 0..2, never all-zero): few distinct directions, so
@@ -53,7 +56,7 @@ def test_triplets_match_literal_model(spark, vecs):
     )
     got = {
         r["anchor_id"]: (r["pos_id"], r["neg_id"])
-        for r in STAGED["sim_triplet_mining"].spark(spark, sf_dir).collect()
+        for r in QUERIES["sim_triplet_mining"].spark(spark, sf_dir).collect()
     }
     expected = {
         a: (p, n)

@@ -11,15 +11,17 @@ from __future__ import annotations
 import pytest
 
 from clueso_spark.plans.parity import compare, duckdb_connect
-from clueso_spark.plans.staged_r6 import STAGED, promote
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r6")
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_staged_parity(spark, name, sf_dir):
-    cq = STAGED[name]
+    cq = QUERIES[name]
     df = cq.spark(spark, sf_dir)
     if cq.oracle_valid is not None and not cq.oracle_valid(sf_dir):
         assert df.count() >= 0
@@ -32,7 +34,7 @@ def test_staged_parity(spark, name, sf_dir):
 def test_staged_rows_nonempty(spark):
     """Every staged query returns at least one row at sf0.01 (the
     driver's smoke bar for registered queries)."""
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         assert cq.spark(spark, SF_DIRS[1]).count() > 0, name
 
 
@@ -45,7 +47,7 @@ _NON_DOC = {
     "ev_rfm_segmentation",
     "graph_node_similarity",
 }
-_DOC_NAMES = [n for n in STAGED if n not in _NON_DOC]
+_DOC_NAMES = [n for n in QUERIES if n not in _NON_DOC]
 
 
 def _write_docs(spark, path, rows):
@@ -92,7 +94,7 @@ def test_staged_empty_corpus_does_not_crash(spark, tmp_path):
         ),
         f"{sf}/lineitem.parquet",
     )
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         rows = cq.spark(spark, sf).collect()
         assert isinstance(rows, list), name
 
@@ -120,7 +122,7 @@ def test_staged_unicode_corpus_parity(spark, tmp_path):
         f"select * from '{sf}/documents.parquet/*.parquet'"
     )
     for name in _DOC_NAMES:
-        cq = STAGED[name]
+        cq = QUERIES[name]
         res = compare(name, cq.spark(spark, sf), cq.oracle, con)
         assert res.ok, (name, res.detail)
 
@@ -145,7 +147,7 @@ def test_staged_plan_shapes(spark):
     from tests.test_plans import plan_of
 
     offenders = {}
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         spark.catalog.clearCache()
         plan = plan_of(cq.spark(spark, SF_DIRS[0]))
         if "CartesianProduct" in plan:
@@ -160,19 +162,13 @@ def test_staged_plan_shapes(spark):
 def test_promotion_is_live():
     """Round 6 executed the promotion: every staged query must be IN the
     live registry (same object, oracle intact) -- staged_r6 is in
-    QUERY_MODULES and promote() runs at import."""
+    QUERY_MODULES and registers at import."""
     from clueso_spark.plans.catalog import all_queries
 
     live = all_queries()
-    for name, cq in STAGED.items():
+    for name, cq in QUERIES.items():
         assert live.get(name) is cq, name
         assert cq.oracle is None or "select" in cq.oracle.lower()
-    # idempotence: a second promote() must not change the registry
-    from clueso_spark.plans.catalog import REGISTRY
-
-    before = dict(REGISTRY)
-    promote()
-    assert REGISTRY == before
 
 
 def test_round6_window_executed():
@@ -198,7 +194,7 @@ def test_round6_window_executed():
     executed = json.load(open(os.path.join(repo, "CORRECTNESS_r06.json")))
     assert set(ROUND6_WINDOW) == set(executed)
     assert len(set(ROUND6_WINDOW)) == 50
-    assert set(STAGED) <= set(ROUND6_WINDOW)
+    assert set(QUERIES) <= set(ROUND6_WINDOW)
     unresolvable = [n for n in ROUND6_WINDOW if n not in live]
     assert not unresolvable, unresolvable
     # round-6 aging invariant, re-checked against the artifact set it

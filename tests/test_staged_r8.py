@@ -13,19 +13,20 @@ import pytest
 
 from clueso_spark.plans.parity import compare, duckdb_connect
 from clueso_spark.plans.staged_r8 import (
-    STAGED,
-    promote,
     upsert_latest,
     upsert_state_sink,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r8")
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_staged_parity(spark, name, sf_dir):
-    cq = STAGED[name]
+    cq = QUERIES[name]
     df = cq.spark(spark, sf_dir)
     if cq.oracle_valid is not None and not cq.oracle_valid(sf_dir):
         assert df.count() >= 0
@@ -38,14 +39,14 @@ def test_staged_parity(spark, name, sf_dir):
 def test_staged_rows_nonempty(spark):
     """Every staged query returns at least one row at sf0.01 (the
     driver's smoke bar for registered queries)."""
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         assert cq.spark(spark, SF_DIRS[1]).count() > 0, name
 
 
 def test_staged_plan_shapes(spark):
     """No staged plan contains an unsanctioned CartesianProduct (the
     all-pairs smell none of these ops should ever need)."""
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         if name == "st_foreach_batch_upsert":
             continue  # runs a stream at construction; shape pinned below
         plan = cq.spark(spark, SF_DIRS[1])._jdf.queryExecution().toString()
@@ -56,7 +57,7 @@ def test_domain_caps_plans_window_group_limit(spark):
     """The rank-filter branch of pipeline_domain_caps must compile to
     WindowGroupLimit (partial per-source top-CAP BEFORE the window
     exchange) -- the property its docstring claims at 100 TB scale."""
-    cq = STAGED["pipeline_domain_caps"]
+    cq = QUERIES["pipeline_domain_caps"]
     plan = cq.spark(spark, SF_DIRS[1])._jdf.queryExecution().toString()
     assert "WindowGroupLimit" in plan, plan
 
@@ -67,7 +68,7 @@ def test_epoch_shards_exactly_balanced(spark):
     expectation -- this layout is balanced by construction)."""
     from pyspark.sql import functions as F
 
-    df = STAGED["pipeline_epoch_shuffle_shards"].spark(spark, SF_DIRS[1])
+    df = QUERIES["pipeline_epoch_shuffle_shards"].spark(spark, SF_DIRS[1])
     sizes = [
         r["n"]
         for r in df.groupBy("shard").agg(F.count("*").alias("n")).collect()
@@ -93,7 +94,7 @@ def test_bloom_prune_never_false_rejects(spark):
         urgent, li["l_orderkey"] == urgent["o_orderkey"]
     ).count()
     got = (
-        STAGED["join_bloom_pruned_revenue"]
+        QUERIES["join_bloom_pruned_revenue"]
         .spark(spark, sf)
         .agg(F.sum("n_items"))
         .collect()[0][0]
@@ -183,10 +184,7 @@ def test_promotion_is_live_and_benched():
     from clueso_spark.plans.catalog import all_queries
 
     live = all_queries()
-    missing = sorted(set(STAGED) - set(live))
+    missing = sorted(set(QUERIES) - set(live))
     assert missing == [], missing
-    unbenched = sorted(set(STAGED) - set(bench.HEADLINE))
+    unbenched = sorted(set(QUERIES) - set(bench.HEADLINE))
     assert unbenched == [], unbenched
-    # promote() stays idempotent after the import-time call
-    promote()
-    assert len(all_queries()) == len(live)

@@ -13,15 +13,17 @@ from __future__ import annotations
 import pytest
 
 from clueso_spark.plans.parity import compare, duckdb_connect
-from clueso_spark.plans.staged_r9 import STAGED, promote
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r9")
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_staged_parity(spark, name, sf_dir):
-    cq = STAGED[name]
+    cq = QUERIES[name]
     df = cq.spark(spark, sf_dir)
     if cq.oracle_valid is not None and not cq.oracle_valid(sf_dir):
         assert df.count() >= 0
@@ -34,7 +36,7 @@ def test_staged_parity(spark, name, sf_dir):
 def test_staged_rows_nonempty(spark):
     """Every staged query returns at least one row at sf0.01 (the
     driver's smoke bar for registered queries)."""
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         assert cq.spark(spark, SF_DIRS[1]).count() > 0, name
 
 
@@ -48,7 +50,7 @@ def test_staged_plan_shapes(spark):
         # the corpus-sized signature joins are broadcast equi-joins)
         "sim_source_jaccard_bottomk",
     }
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         plan = cq.spark(spark, SF_DIRS[1])._jdf.queryExecution().toString()
         assert "CartesianProduct" not in plan, (name, plan)
         if name not in sanctioned_bnlj:
@@ -60,7 +62,7 @@ def test_streaks_windows_are_user_partitioned(spark):
     partitioned by user_id -- a global window here would serialize the
     whole corpus through one task at 100 TB."""
     plan = (
-        STAGED["ev_activity_streaks"]
+        QUERIES["ev_activity_streaks"]
         .spark(spark, SF_DIRS[1])
         ._jdf.queryExecution()
         .toString()
@@ -86,13 +88,10 @@ def test_promotion_is_live_and_benched():
     from clueso_spark.plans.catalog import all_queries
 
     live = all_queries()
-    missing = sorted(set(STAGED) - set(live))
+    missing = sorted(set(QUERIES) - set(live))
     assert missing == [], missing
-    unbenched = sorted(set(STAGED) - set(bench.HEADLINE))
+    unbenched = sorted(set(QUERIES) - set(bench.HEADLINE))
     assert unbenched == [], unbenched
-    # promote() stays idempotent after the import-time call
-    promote()
-    assert len(all_queries()) == len(live)
 
 
 def _write_sf(tmp_path, docs=(), events=(), orders=(), customers=(),
@@ -165,7 +164,7 @@ def test_staged_empty_inputs_do_not_crash(spark, tmp_path):
     """Empty tables: every staged query returns a list (possibly empty),
     never raises -- div-by-zero and null leads must null out."""
     sf = _write_sf(tmp_path)
-    for name, cq in sorted(STAGED.items()):
+    for name, cq in sorted(QUERIES.items()):
         rows = cq.spark(spark, sf).collect()
         assert isinstance(rows, list), name
 
@@ -179,7 +178,7 @@ def test_weighted_median_lower_median_semantics(spark, tmp_path):
         lineitems=[("A", 1.0, 2.0, 1, 10), ("A", 2.0, 1.0, 1, 11),
                    ("A", 3.0, 1.0, 2, 10), ("B", 5.0, 1.0, 2, 11)],
     )
-    rows = {r["flag"]: r for r in STAGED["agg_weighted_median"]
+    rows = {r["flag"]: r for r in QUERIES["agg_weighted_median"]
             .spark(spark, sf).collect()}
     assert rows["A"]["w_median_price"] == 1.0
     assert rows["A"]["total_weight"] == 4
@@ -197,7 +196,7 @@ def test_jaccard_bottomk_identical_and_disjoint_sources(spark, tmp_path):
     ]
     sf = _write_sf(tmp_path, docs=docs)
     out = {(r["src_a"], r["src_b"]): r["jaccard_est"]
-           for r in STAGED["sim_source_jaccard_bottomk"]
+           for r in QUERIES["sim_source_jaccard_bottomk"]
            .spark(spark, sf).collect()}
     assert out[("s1", "s2")] == 1.0
     assert out[("s1", "s3")] == 0.0
@@ -215,7 +214,7 @@ def test_cusum_constant_series_flags_first_day(spark, tmp_path):
         for d in range(3) for i in range(5)  # 5 events/day, 3 days
     ]
     sf = _write_sf(tmp_path, events=events)
-    [row] = STAGED["ev_cusum_changepoint"].spark(spark, sf).collect()
+    [row] = QUERIES["ev_cusum_changepoint"].spark(spark, sf).collect()
     assert row["event_type"] == "click"
     assert row["max_scaled_dev"] == 0
     assert row["cp_day"] == (base - dt.datetime(1970, 1, 1)).days
@@ -230,7 +229,7 @@ def test_stickiness_single_user_single_day(spark, tmp_path):
         tmp_path,
         events=[(1, dt.datetime(2024, 1, 5), 7, "view", 1.0, "{}")],
     )
-    [row] = STAGED["ev_dau_wau_stickiness"].spark(spark, sf).collect()
+    [row] = QUERIES["ev_dau_wau_stickiness"].spark(spark, sf).collect()
     assert (row["dau"], row["wau"], row["stickiness"]) == (1, 1, 1.0)
 
 
@@ -256,7 +255,7 @@ def test_window_funnel_levels(spark, tmp_path):
     ]
     sf = _write_sf(tmp_path, events=events)
     out = {r["level"]: r["n_users"]
-           for r in STAGED["ev_window_funnel"].spark(spark, sf).collect()}
+           for r in QUERIES["ev_window_funnel"].spark(spark, sf).collect()}
     assert out == {3: 1, 2: 1, 1: 1}
 
 
@@ -271,7 +270,7 @@ def test_exact_quantiles_nearest_rank(spark, tmp_path):
     ]
     sf = _write_sf(tmp_path, events=events)
     out = {r["pct"]: r["q_value"]
-           for r in STAGED["agg_exact_quantiles"].spark(spark, sf).collect()}
+           for r in QUERIES["agg_exact_quantiles"].spark(spark, sf).collect()}
     assert out == {25: 3.0, 50: 5.0, 90: 9.0, 99: 10.0}
 
 
@@ -284,7 +283,7 @@ def test_funnel_scans_push_their_stage_filters(spark):
     funnel stage."""
     import re
 
-    df = STAGED["ev_window_funnel"].spark(spark, SF_DIRS[0])
+    df = QUERIES["ev_window_funnel"].spark(spark, SF_DIRS[0])
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )

@@ -16,8 +16,10 @@ from clueso_spark.plans.staged_r9 import (
     _BM25_K,
     _KMV_K,
     _QUANTILE_PCTS,
-    STAGED,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r9")
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,7 +27,7 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def rows(spark):
     """name -> collected rows at sf0.001 (one Spark run per op)."""
-    return {name: cq.spark(spark, SF).collect() for name, cq in STAGED.items()}
+    return {name: cq.spark(spark, SF).collect() for name, cq in QUERIES.items()}
 
 
 @pytest.fixture(scope="module")

@@ -16,7 +16,9 @@ from collections import Counter
 import pyarrow.parquet as pq
 import pytest
 
-from clueso_spark.plans.staged_r6 import STAGED
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r6")
 
 SF = "/root/testdata/sf0.001"
 
@@ -43,7 +45,7 @@ def _int_div(a: int, b: int) -> int:
 def test_char_entropy_third_opinion(spark, docs):
     got = {
         r["doc_id"]: (r["n_chars_total"], r["entropy_scaled"])
-        for r in STAGED["txt_char_entropy"].spark(spark, SF).collect()
+        for r in QUERIES["txt_char_entropy"].spark(spark, SF).collect()
     }
     for doc_id, text in docs:
         n = len(text)
@@ -78,7 +80,7 @@ def test_zipf_slope_third_opinion(spark, docs):
     sxx = sum(x * x for x in xs)
     slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
     intercept = (sy - slope * sx) / (n * 1_000_000.0)
-    row = STAGED["txt_zipf_slope"].spark(spark, SF).collect()[0]
+    row = QUERIES["txt_zipf_slope"].spark(spark, SF).collect()[0]
     assert row["n_terms"] == n
     assert row["slope"] == round(slope, 6)
     assert row["intercept_log2"] == round(intercept, 6)
@@ -99,7 +101,7 @@ def test_bigram_perplexity_third_opinion(spark, docs):
     n_tot = len(all_bigrams)
     got = {
         r["doc_id"]: (r["n_bigrams"], r["xent_scaled"])
-        for r in STAGED["txt_bigram_perplexity"].spark(spark, SF).collect()
+        for r in QUERIES["txt_bigram_perplexity"].spark(spark, SF).collect()
     }
     assert set(got) == set(per_doc_bigrams)
     for doc_id, bgs in per_doc_bigrams.items():
@@ -141,7 +143,7 @@ def test_ccnet_buckets_third_opinion(spark, docs):
         checksum[band] += xent_scaled
     rows = {
         r["band"]: (r["n_docs"], r["n_chars"], r["xent_checksum"])
-        for r in STAGED["pipeline_ccnet_buckets"].spark(spark, SF).collect()
+        for r in QUERIES["pipeline_ccnet_buckets"].spark(spark, SF).collect()
     }
     assert rows == {
         b: (bands[b], chars[b], checksum[b]) for b in bands

@@ -23,8 +23,10 @@ from clueso_spark.plans.staged_r11 import (
     _BF_SUPP_BASE,
     _EWMA_TAPS,
     _EWMA_WEIGHTS,
-    STAGED,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r11")
 
 SF = "/root/testdata/sf0.001"
 _DAY_US = 86_400_000_000
@@ -69,7 +71,7 @@ def test_mann_whitney_third_opinion(spark, events):
     u2a = r2a - len(a) * (len(a) + 1)
     u2b = r2b - len(b) * (len(b) + 1)
     assert u2a + u2b == 2 * len(a) * len(b)  # textbook identity
-    row = STAGED["agg_mann_whitney"].spark(spark, SF).collect()[0]
+    row = QUERIES["agg_mann_whitney"].spark(spark, SF).collect()[0]
     assert (row["n_a"], row["n_b"]) == (len(a), len(b))
     assert (row["u2_a"], row["u2_b"]) == (u2a, u2b)
     assert row["identity_resid"] == 0
@@ -89,7 +91,7 @@ def test_rolling_median_third_opinion(spark, events):
             want[eid] = (n, frame[(n - 1) // 2] + frame[n // 2])
     got = {
         r["event_id"]: (r["n_in_frame"], r["median_x2_cents"])
-        for r in STAGED["window_rolling_median"].spark(spark, SF).collect()
+        for r in QUERIES["window_rolling_median"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -109,7 +111,7 @@ def test_ewma_third_opinion(spark, events):
             )
     got = {
         r["event_id"]: r["ewma_scaled"]
-        for r in STAGED["ev_ewma_smoothed"].spark(spark, SF).collect()
+        for r in QUERIES["ev_ewma_smoothed"].spark(spark, SF).collect()
     }
     assert got == want
     # weight vector sanity: geometric 7/8 decay scaled by 8^taps
@@ -129,7 +131,7 @@ def test_sweepline_third_opinion(spark):
         d0 = (r["l_shipdate"].date() - epoch).days
         intervals.append((d0, d0 + (int(r["l_quantity"]) % 7) + 1))
     rows = (
-        STAGED["ev_sweepline_active_intervals"].spark(spark, SF).collect()
+        QUERIES["ev_sweepline_active_intervals"].spark(spark, SF).collect()
     )
     assert len(rows) == 15
     for row in rows:
@@ -181,7 +183,7 @@ def test_bellman_ford_third_opinion(spark):
         want.append((len(dist), sum(dist.values())))
     got = sorted(
         (r["k"], r["n_reached"], r["sum_dist"])
-        for r in STAGED["graph_shortest_paths"].spark(spark, SF).collect()
+        for r in QUERIES["graph_shortest_paths"].spark(spark, SF).collect()
     )
     assert got == [(k, n, s) for k, (n, s) in enumerate(want)]
 
@@ -191,7 +193,7 @@ def test_kmv_third_opinion(spark):
     must be the identical integer."""
     import hashlib
 
-    from clueso_spark.plans.staged_r11 import _KMV_BITS_HEX, _KMV_K, STAGED
+    from clueso_spark.plans.staged_r11 import _KMV_BITS_HEX, _KMV_K
 
     orders = pq.read_table(f"{SF}/orders.parquet").to_pylist()
     custkeys = {r["o_custkey"] for r in orders}
@@ -208,7 +210,7 @@ def test_kmv_third_opinion(spark):
         want_est = len(bottom)
     else:
         want_est = (_KMV_K - 1) * (2 ** (4 * _KMV_BITS_HEX)) // bottom[-1]
-    row = STAGED["agg_kmv_distinct"].spark(spark, SF).collect()[0]
+    row = QUERIES["agg_kmv_distinct"].spark(spark, SF).collect()[0]
     assert row["n_exact"] == len(custkeys)
     assert row["kth_hash"] == (bottom[-1] if bottom else 0)
     assert row["est_kmv"] == want_est
@@ -219,8 +221,6 @@ def test_kmv_third_opinion(spark):
 def test_mad_anomalies_third_opinion(spark, events):
     """Literal per-user medians: doubled median, doubled deviations,
     quadrupled MAD, anomaly count -- from plain Python sorts."""
-    from clueso_spark.plans.staged_r11 import STAGED
-
     by_user = defaultdict(list)
     for e in events:
         by_user[e["user_id"]].append((e["event_id"], _cents(e["value"])))
@@ -244,7 +244,7 @@ def test_mad_anomalies_third_opinion(spark, events):
             r["mad_x4_cents"],
             r["n_anomalies"],
         )
-        for r in STAGED["ev_user_value_anomalies"].spark(spark, SF).collect()
+        for r in QUERIES["ev_user_value_anomalies"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -259,7 +259,6 @@ def test_winnowing_third_opinion(spark):
         _WINNOW_K,
         _WINNOW_MIN_SHARED,
         _WINNOW_W,
-        STAGED,
     )
 
     docs = pq.read_table(f"{SF}/documents.parquet").to_pylist()
@@ -284,7 +283,7 @@ def test_winnowing_third_opinion(spark):
             want[(a, b)] = shared
     got = {
         (r["doc_a"], r["doc_b"]): r["n_shared"]
-        for r in STAGED["dedup_winnowing"].spark(spark, SF).collect()
+        for r in QUERIES["dedup_winnowing"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -296,8 +295,6 @@ def test_cdc_chunking_third_opinion(spark):
     leaves the chunk boundaries in the untouched suffix aligned (the
     reason CDC beats fixed-stride for dedup)."""
     import hashlib
-
-    from clueso_spark.plans.staged_r11 import STAGED
 
     docs = pq.read_table(f"{SF}/documents.parquet").to_pylist()
 
@@ -321,7 +318,7 @@ def test_cdc_chunking_third_opinion(spark):
             want[d["doc_id"]] = (n_blocks, len(sizes), max(sizes))
     got = {
         r["doc_id"]: (r["n_blocks"], r["n_chunks"], r["max_chunk_blocks"])
-        for r in STAGED["mm_cdc_chunking"].spark(spark, SF).collect()
+        for r in QUERIES["mm_cdc_chunking"].spark(spark, SF).collect()
     }
     assert got == want
     # insertion stability: prepend 4 bytes (one whole block) -- every
@@ -355,8 +352,6 @@ def test_cdc_dedup_third_opinion(spark):
     import hashlib
     from collections import Counter
 
-    from clueso_spark.plans.staged_r11 import STAGED
-
     docs = pq.read_table(f"{SF}/documents.parquet").to_pylist()
     chunk_counts: Counter = Counter()
     chunk_blocks: dict[str, int] = {}
@@ -384,7 +379,7 @@ def test_cdc_dedup_third_opinion(spark):
     blocks_saved = sum(
         (cnt - 1) * chunk_blocks[k] for k, cnt in chunk_counts.items()
     )
-    row = STAGED["mm_cdc_dedup"].spark(spark, SF).collect()[0]
+    row = QUERIES["mm_cdc_dedup"].spark(spark, SF).collect()[0]
     assert (
         row["n_chunks"],
         row["n_distinct"],

@@ -36,8 +36,10 @@ from clueso_spark.plans.staged_r12 import (
     _TR_ROUNDS,
     _TR_SCALE,
     _TR_TOP,
-    STAGED,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r12")
 
 SF = "/root/testdata/sf0.001"
 _DAY_US = 86_400_000_000
@@ -111,7 +113,7 @@ def test_hdr_quantile_third_opinion(spark, events):
             r["exact_cents"],
             r["within_bucket"],
         )
-        for r in STAGED["agg_hdr_quantile_merge"].spark(spark, SF).collect()
+        for r in QUERIES["agg_hdr_quantile_merge"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -144,7 +146,7 @@ def test_cms_third_opinion(spark, events):
             r["overcount"],
             r["ge_truth"],
         )
-        for r in STAGED["agg_cms_partial_merge"].spark(spark, SF).collect()
+        for r in QUERIES["agg_cms_partial_merge"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -163,7 +165,7 @@ def test_kl_drift_third_opinion(spark, events):
     m = sum(di[t] for t in shared)
     L = lambda x: round(math.log2(x) * 1_000_000)  # noqa: E731
     num = sum(ci[t] * (L(ci[t] * m) - L(di[t] * n)) for t in shared)
-    rows = STAGED["agg_kl_divergence_drift"].spark(spark, SF).collect()
+    rows = QUERIES["agg_kl_divergence_drift"].spark(spark, SF).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (
@@ -209,7 +211,7 @@ def test_kcore_third_opinion(spark):
     got = [
         (r["round"], r["n_nodes"], r["n_edges"])
         for r in sorted(
-            STAGED["graph_kcore_decomposition"].spark(spark, SF).collect(),
+            QUERIES["graph_kcore_decomposition"].spark(spark, SF).collect(),
             key=lambda r: r["round"],
         )
     ]
@@ -246,7 +248,7 @@ def test_textrank_third_opinion(spark, documents):
     got = [
         (x["word"], x["rank_scaled"], x["rk"])
         for x in sorted(
-            STAGED["txt_textrank_keywords"].spark(spark, SF).collect(),
+            QUERIES["txt_textrank_keywords"].spark(spark, SF).collect(),
             key=lambda x: x["rk"],
         )
     ]
@@ -270,7 +272,7 @@ def test_interval_union_third_opinion(spark, events):
         want[u] = (len(evs), covered)
     got = {
         r["user_id"]: (r["n_events"], r["covered_us"])
-        for r in STAGED["ev_interval_union_length"].spark(spark, SF).collect()
+        for r in QUERIES["ev_interval_union_length"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -305,7 +307,7 @@ def test_asof_tolerance_third_opinion(spark, events):
                     want[eid] = (u, -1, -1)
     got = {
         r["purchase_id"]: (r["user_id"], r["click_id"], r["gap_us"])
-        for r in STAGED["ev_asof_tolerance_join"].spark(spark, SF).collect()
+        for r in QUERIES["ev_asof_tolerance_join"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -332,7 +334,7 @@ def test_seasonal_dow_third_opinion(spark, events):
             r["n_days"],
             r["n_deviant"],
         )
-        for r in STAGED["ev_seasonal_dow_deviation"].spark(spark, SF).collect()
+        for r in QUERIES["ev_seasonal_dow_deviation"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -413,7 +415,7 @@ def test_index_delta_third_opinion(spark, documents):
             r["matches_rebuild"],
             r["n_probe_candidates"],
         )
-        for r in STAGED["dedup_minhash_index_delta"].spark(spark, SF).collect()
+        for r in QUERIES["dedup_minhash_index_delta"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -436,7 +438,7 @@ def test_range_bucketed_third_opinion(spark, events):
         )
     got = {
         r["error_id"]: r["n_open_windows"]
-        for r in STAGED["join_range_bucketed_global"]
+        for r in QUERIES["join_range_bucketed_global"]
         .spark(spark, SF)
         .collect()
     }
@@ -515,7 +517,7 @@ def test_lsh_relative_recall_third_opinion(spark, documents):
             r["recall_rel_scaled"],
             r["precision_scaled"],
         )
-        for r in STAGED["dedup_lsh_relative_recall"].spark(spark, SF).collect()
+        for r in QUERIES["dedup_lsh_relative_recall"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -539,7 +541,7 @@ def test_modularity_third_opinion(spark):
             if lbl[u] == lbl[v]:
                 ec[lbl[u]] += 1  # counts each intra edge twice
     q_num = sum(4 * m * (ec[c] // 2) - dc[c] * dc[c] for c in dc)
-    rows = STAGED["graph_modularity_communities"].spark(spark, SF).collect()
+    rows = QUERIES["graph_modularity_communities"].spark(spark, SF).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["m"], r["n_communities"], r["q_num"]) == (m, len(dc), q_num)

@@ -26,8 +26,10 @@ from clueso_spark.plans.staged_r12 import (
     _KMV_M,
     _LCC_MIN_SUPPORT,
     _NOV_N,
-    STAGED,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r12")
 
 SF = "/root/testdata/sf0.001"
 _DAY_US = 86_400_000_000
@@ -77,7 +79,7 @@ def test_ngram_novelty_third_opinion(spark, documents):
         want[doc] = (len(ngs), novel, (10000 * novel) // len(ngs))
     got = {
         r["doc_id"]: (r["n_ngrams"], r["n_novel"], r["novelty_x10000"])
-        for r in STAGED["txt_ngram_novelty"].spark(spark, SF).collect()
+        for r in QUERIES["txt_ngram_novelty"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -108,7 +110,7 @@ def test_boilerplate_chunks_third_opinion(spark, documents):
         )
     got = {
         r["doc_id"]: (r["n_chunks"], r["n_boiler"], r["retained_tokens"])
-        for r in STAGED["txt_boilerplate_chunks"].spark(spark, SF).collect()
+        for r in QUERIES["txt_boilerplate_chunks"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -135,7 +137,7 @@ def test_theta_sketch_third_opinion(spark, events):
     na, ea = est(cohorts["a"])
     nb, eb = est(cohorts["b"])
     nu, eu = est(cohorts["u"])
-    [row] = STAGED["agg_theta_sketch_setops"].spark(spark, SF).collect()
+    [row] = QUERIES["agg_theta_sketch_setops"].spark(spark, SF).collect()
     assert (
         row["exact_a"],
         row["exact_b"],
@@ -175,7 +177,7 @@ def test_max_drawdown_third_opinion(spark, events):
             r["max_drawdown_cents"],
             r["final_bal_cents"],
         )
-        for r in STAGED["window_max_drawdown"].spark(spark, SF).collect()
+        for r in QUERIES["window_max_drawdown"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -189,7 +191,7 @@ def test_salted_join_equals_unsalted(spark, events):
         want[t][1] += _cents(e["value"]) * len(t)
     got = {
         r["event_type"]: (r["n_events"], r["weighted_cents"])
-        for r in STAGED["join_salted_skew"].spark(spark, SF).collect()
+        for r in QUERIES["join_salted_skew"].spark(spark, SF).collect()
     }
     assert got == {t: tuple(v) for t, v in want.items()}
 
@@ -198,7 +200,7 @@ def test_salted_join_key_carries_salt(spark):
     """The physical join key must include the salt column -- otherwise
     the op silently degrades to the plain join it claims to spread."""
     plan = (
-        STAGED["join_salted_skew"]
+        QUERIES["join_salted_skew"]
         .spark(spark, SF)
         ._jdf.queryExecution()
         .executedPlan()
@@ -237,14 +239,14 @@ def test_bitmap_retention_third_opinion(spark, events):
             r["retained_days"],
             r["active_next_week"],
         )
-        for r in STAGED["ev_bitmap_retention"].spark(spark, SF).collect()
+        for r in QUERIES["ev_bitmap_retention"].spark(spark, SF).collect()
     }
     assert got == want
 
 
 def test_bitmap_retention_laws(spark):
     """retained <= active; no next week => retained 0."""
-    rows = STAGED["ev_bitmap_retention"].spark(spark, SF).collect()
+    rows = QUERIES["ev_bitmap_retention"].spark(spark, SF).collect()
     for r in rows:
         assert 1 <= r["active_days"] <= 7
         assert 0 <= r["retained_days"] <= r["active_days"]
@@ -274,7 +276,7 @@ def test_dbscan_grid_third_opinion(spark, events):
         want[u] = (x, y, n, 1 if n >= _DB_MINPTS else 0)
     got = {
         r["user_id"]: (r["x"], r["y"], r["n_neighbors"], r["is_core"])
-        for r in STAGED["sim_dbscan_grid"].spark(spark, SF).collect()
+        for r in QUERIES["sim_dbscan_grid"].spark(spark, SF).collect()
     }
     assert got == want
     # neighbor relation is symmetric -> total count is even
@@ -310,7 +312,7 @@ def test_local_clustering_third_opinion(spark):
         want[v] = (d, t, (20000 * t) // (d * (d - 1)))
     got = {
         r["node"]: (r["degree"], r["n_triangles"], r["lcc_x10000"])
-        for r in STAGED["graph_local_clustering"].spark(spark, SF).collect()
+        for r in QUERIES["graph_local_clustering"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -318,7 +320,7 @@ def test_local_clustering_third_opinion(spark):
 def test_local_clustering_sums_to_global(spark):
     """Cross-op law: per-node triangle credits sum to exactly 3x the
     registered graph_triangle_count total (same edge definition)."""
-    per_node = STAGED["graph_local_clustering"].spark(spark, SF).collect()
+    per_node = QUERIES["graph_local_clustering"].spark(spark, SF).collect()
     [glob] = all_queries()["graph_triangle_count"].spark(spark, SF).collect()
     assert (
         sum(r["n_triangles"] for r in per_node) == 3 * glob["n_triangles"]
@@ -358,7 +360,7 @@ def test_hits_third_opinion(spark):
     )[:_HITS_TOP]
     got = [
         (r["part"], r["auth_round1"], r["auth_round2"])
-        for r in STAGED["graph_hits_authority"].spark(spark, SF).collect()
+        for r in QUERIES["graph_hits_authority"].spark(spark, SF).collect()
     ]
     assert got == want
 
@@ -397,7 +399,7 @@ def test_rolling_regression_third_opinion(spark, events):
             r["slope_den"],
             r["slope_x10000"],
         )
-        for r in STAGED["window_rolling_regression"]
+        for r in QUERIES["window_rolling_regression"]
         .spark(spark, SF)
         .collect()
     }

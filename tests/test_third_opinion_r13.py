@@ -21,8 +21,10 @@ from clueso_spark.plans.staged_r13 import (
     _FANN_PROBES,
     _FANN_TENANTS,
     _FANN_TOPK,
-    STAGED,
 )
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r13")
 
 SF = "/root/testdata/sf0.001"
 _DAY_US = 86_400_000_000
@@ -63,7 +65,7 @@ def test_cusum_matches_textbook_recurrence(spark):
             r["max_cusum"],
             r["first_alarm_event_id"],
         )
-        for r in STAGED["window_cusum_changepoint"].spark(spark, SF).collect()
+        for r in QUERIES["window_cusum_changepoint"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -120,7 +122,7 @@ def test_retention_matrix_from_raw_parquet(spark):
             r["cohort_size"],
             r["retention_x10000"],
         )
-        for r in STAGED["ev_retention_cohort_matrix"]
+        for r in QUERIES["ev_retention_cohort_matrix"]
         .spark(spark, SF)
         .collect()
     }
@@ -178,7 +180,7 @@ def test_cdc_store_delta_matches_python_incremental_apply(spark):
     want = {h: (rc, nb) for h, (rc, nb) in store.items()}
     got = {
         r["chunk_hash"]: (r["refcount"], r["nb"])
-        for r in STAGED["mm_cdc_store_delta"].spark(spark, SF).collect()
+        for r in QUERIES["mm_cdc_store_delta"].spark(spark, SF).collect()
     }
     assert got == want
 
@@ -257,6 +259,6 @@ def test_filtered_ann_from_raw_parquet(spark):
             r["n_post_survivors"],
             r["post_hits"],
         )
-        for r in STAGED["sim_filtered_ann"].spark(spark, SF).collect()
+        for r in QUERIES["sim_filtered_ann"].spark(spark, SF).collect()
     }
     assert got == want

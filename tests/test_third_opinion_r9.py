@@ -18,7 +18,10 @@ from collections import Counter, defaultdict
 import pyarrow.parquet as pq
 import pytest
 
-from clueso_spark.plans.staged_r9 import _BM25_K, _BM25_TERMS, STAGED
+from clueso_spark.plans.staged_r9 import _BM25_K, _BM25_TERMS
+from tests.conftest import registered_by
+
+QUERIES = registered_by("clueso_spark.plans.staged_r9")
 
 SF = "/root/testdata/sf0.001"
 
@@ -56,7 +59,7 @@ def test_bm25_third_opinion(spark, docs):
     want = sorted(score.items(), key=lambda kv: (-kv[1], kv[0]))[:_BM25_K]
     got = [
         (r["doc_id"], r["score_s"])
-        for r in STAGED["txt_bm25_topk"].spark(spark, SF).collect()
+        for r in QUERIES["txt_bm25_topk"].spark(spark, SF).collect()
     ]
     assert got == want
 
@@ -75,7 +78,7 @@ def test_moments_third_opinion(spark, docs):
         s[4] += c * c * c * c
     got = {
         r["source"]: r
-        for r in STAGED["agg_exact_moments"].spark(spark, SF).collect()
+        for r in QUERIES["agg_exact_moments"].spark(spark, SF).collect()
     }
     assert set(got) == set(sums)
     for src, (n, s1, s2, s3, s4) in sums.items():
@@ -122,7 +125,7 @@ def test_gini_third_opinion(spark):
         )
     got = {
         r["n_name"]: r
-        for r in STAGED["agg_gini_concentration"].spark(spark, SF).collect()
+        for r in QUERIES["agg_gini_concentration"].spark(spark, SF).collect()
     }
     assert set(got) == set(by_nation)
     for nation, rows in by_nation.items():

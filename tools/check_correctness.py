@@ -18,26 +18,22 @@ def main() -> int:
     ap.add_argument(
         "--staged",
         action="store_true",
-        help="also check the pre-registration tiers "
-        "(plans/staged_r16.py; earlier tiers are "
-        "already live)",
+        help='also check the "staged"-tagged queries',
     )
     ap.add_argument("names", nargs="*", help="subset of query names")
     args = ap.parse_args()
 
     sys.path.insert(0, "/root/repo")
+    from clueso_spark.plans.catalog import all_queries, staged_queries
     from clueso_spark.plans.parity import run_catalog
     from clueso_spark.session import get_spark
 
     spark = get_spark(
         "check-correctness", **{"spark.sql.shuffle.partitions": "8"}
     )
-    if args.staged:
-        # promote every still-staged tier (already-registered tiers
-        # promote at import and these calls are idempotent no-ops)
-        from clueso_spark.plans.staged_r16 import promote as promote_r16
-
-        promote_r16()
+    names = args.names or None
+    if args.staged and not names:
+        names = [*all_queries(), *staged_queries()]
 
     def emit(r):
         status = "OK  " if r.ok else "FAIL"
@@ -52,7 +48,7 @@ def main() -> int:
             flush=True,
         )
 
-    results = run_catalog(spark, args.sf_dir, args.names or None, on_result=emit)
+    results = run_catalog(spark, args.sf_dir, names, on_result=emit)
     n_fail = sum(0 if r.ok else 1 for r in results)
     print(f"\n{len(results) - n_fail}/{len(results)} queries match")
     return 1 if n_fail else 0

@@ -42,7 +42,11 @@ def main() -> int:
     sys.path.insert(0, "/root/repo")
     tmp = write_empty_corpus(tempfile.mkdtemp(prefix="empty_sf_"))
 
-    from clueso_spark.plans.catalog import all_queries, release_persisted
+    from clueso_spark.plans.catalog import (
+        all_queries,
+        release_persisted,
+        staged_queries,
+    )
     from clueso_spark.session import get_spark
 
     spark = get_spark("empty-sweep", **{"spark.sql.shuffle.partitions": "4"})
@@ -50,11 +54,8 @@ def main() -> int:
     reg = dict(all_queries())
     args = [a for a in sys.argv[1:] if a != "--staged"]
     if "--staged" in sys.argv[1:]:
-        # include the pre-registration tier (plans/staged_r13.py) --
         # same flag contract as check_correctness.py / plan_audit.py
-        from clueso_spark.plans.staged_r13 import STAGED
-
-        reg.update(STAGED)
+        reg.update(staged_queries())
     names = args[0].split(",") if args else list(reg)
     fails: list[tuple[str, str]] = []
     for name in names:

@@ -39,6 +39,30 @@ def plan_metrics(plan: str) -> dict[str, int]:
     }
 
 
+def audit_session():
+    """The audit conf, shared with tools/plan_dump.py so dumps and
+    budgets compare: 8 shuffle partitions, AQE off (AdaptiveSparkPlan
+    hides the `*(n)` codegen markers until runtime finalization;
+    exchange/scan counts are identical either way)."""
+    from clueso_spark.session import get_spark
+
+    spark = get_spark(
+        "plan-audit",
+        **{
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.adaptive.enabled": "false",
+        },
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def plan_string(df, mode: str = "formatted") -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), mode
+    )
+
+
 def audit(registry, spark) -> dict[str, dict[str, int]]:
     from pyspark.sql import DataFrame
 
@@ -80,15 +104,10 @@ def audit(registry, spark) -> dict[str, dict[str, int]]:
         eager_jobs = _multi_task_jobs(
             set(tracker.getJobIdsForGroup(None)) - jobs_before
         )
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        out[name] = plan_metrics(plan)
+        out[name] = plan_metrics(plan_string(df))
         out[name]["eager_jobs"] = eager_jobs
         # codegen spans only annotate the simple-mode plan (`*(n)` prefixes)
-        simple = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "simple"
-        )
+        simple = plan_string(df, "simple")
         out[name]["codegen_spans"] = len(set(re.findall(r"\*\((\d+)\)", simple)))
     return out
 
@@ -99,34 +118,19 @@ def main() -> int:
     ap.add_argument(
         "--staged",
         action="store_true",
-        help="include the pre-registration tiers (plans/staged_r16.py; "
-        "earlier tiers are live); extra budget keys are "
-        "inert until promotion, when the budget gate picks them up "
+        help='include the "staged"-tagged queries; extra budget keys '
+        "are inert until promotion, when the budget gate picks them up "
         "automatically",
     )
     args = ap.parse_args()
 
     sys.path.insert(0, "/root/repo")
-    from clueso_spark.plans.catalog import all_queries
-    from clueso_spark.session import get_spark
+    from clueso_spark.plans.catalog import all_queries, staged_queries
 
-    # AQE off for the audit ONLY: AdaptiveSparkPlan hides the `*(n)`
-    # codegen markers until runtime finalization; exchange/scan counts
-    # are identical either way
-    spark = get_spark(
-        "plan-audit",
-        **{
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    registry = dict(all_queries())
+    spark = audit_session()
+    registry = all_queries()
     if args.staged:
-        from clueso_spark.plans.staged_r16 import STAGED as STAGED_R16
-
-        # earlier tiers (r6/r8/../r15) are all live post-promotion
-        registry.update(STAGED_R16)
+        registry.update(staged_queries())
     metrics = audit(registry, spark)
 
     hdr = ["query", "scans", "exch", "bhj", "smj", "bnlj", "cart", "wscg", "eager"]

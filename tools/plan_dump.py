@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Dump `.explain("formatted")` for named catalog queries to
 plans/<dir>/<query>_<tag>.txt (the optimization-round evidence files the
-judge diffs). Uses the same audit conf as tools/plan_audit.py (AQE off,
-8 shuffle partitions, sf0.001) so dumps are comparable across rounds.
+judge diffs). Uses tools/plan_audit.py's audit session (AQE off, 8
+shuffle partitions) at sf0.001 so dumps are comparable across rounds.
 
 Usage: python tools/plan_dump.py --tag=before [--dir=plans/r16]
            [--sf=/root/testdata/sf0.001] q1 q2 ...
@@ -29,16 +29,9 @@ def main() -> int:
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, here)
     from clueso_spark.plans.catalog import all_queries, release_persisted
-    from clueso_spark.session import get_spark
+    from plan_audit import audit_session, plan_string
 
-    spark = get_spark(
-        "plan-dump",
-        **{
-            "spark.sql.shuffle.partitions": "8",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = audit_session()
     registry = all_queries()
     os.makedirs(os.path.join(here, out_dir), exist_ok=True)
     for name in names:
@@ -47,9 +40,7 @@ def main() -> int:
             continue
         spark.catalog.clearCache()
         df = registry[name].spark(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = plan_string(df)
         path = os.path.join(here, out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

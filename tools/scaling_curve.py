@@ -401,7 +401,7 @@ def main() -> int:
     names = args.queries.split(",")
 
     sys.path.insert(0, "/root/repo")
-    from clueso_spark.plans.catalog import all_queries
+    from clueso_spark.plans.catalog import all_queries, staged_queries
     from clueso_spark.session import get_spark
 
     spark = get_spark("scaling-curve")
@@ -429,12 +429,8 @@ def main() -> int:
         )
         return 0
 
-    # staged operators are curve-eligible before registration (earlier
-    # tiers are no-ops post-promotion, already in all_queries())
-    from clueso_spark.plans.staged_r15 import STAGED as STAGED_R15
-    from clueso_spark.plans.staged_r16 import STAGED as STAGED_R16
-
-    registry = {**all_queries(), **STAGED_R15, **STAGED_R16}
+    # staged operators are curve-eligible before promotion
+    registry = {**all_queries(), **staged_queries()}
     results: dict[str, dict[str, float]] = {n: {} for n in names}
     root = tempfile.mkdtemp(prefix="clueso_curve_")
     try:
