@@ -16,7 +16,6 @@ scale-correct plan: each task keeps an n-row heap, the driver merges.
 
 from __future__ import annotations
 
-import json
 import operator
 from dataclasses import dataclass
 from functools import reduce
@@ -153,7 +152,3 @@ class MetadataQueryExecutor:
             if len(rows) < query.limit:
                 return
             start = rows[-1]["key"]
-
-
-def rows_to_json(rows) -> str:
-    return json.dumps([r.asDict(recursive=True) for r in rows], default=str)

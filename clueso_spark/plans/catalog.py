@@ -75,16 +75,19 @@ def register(
     return wrap
 
 
-#: every module contributing CatalogQuery registrations, imported in
-#: this order by all_queries(). A tier that is not yet driver-verified
-#: registers with the tag ``"staged"``: it is importable and testable,
-#: but all_queries() leaves it out until the tag is deleted.
+#: every module contributing CatalogQuery registrations. all_queries()
+#: orders the names outside PRIORITY by their module's position here
+#: (then by definition order inside the module), so the catalog order
+#: does not depend on which module happened to be imported first. A
+#: tier that is not yet driver-verified registers with the tag
+#: ``"staged"``: it is importable and testable, but all_queries()
+#: leaves it out until the tag is deleted.
 QUERY_MODULES = [
+    "clueso_spark.plans.dedup_queries",
+    "clueso_spark.plans.similarity_queries",
     "clueso_spark.plans.relational",
     "clueso_spark.plans.event_queries",
     "clueso_spark.plans.text_queries",
-    "clueso_spark.plans.dedup_queries",
-    "clueso_spark.plans.similarity_queries",
     "clueso_spark.plans.multimodal_queries",
     "clueso_spark.plans.streaming_queries",
     "clueso_spark.plans.staged_r6",
@@ -254,12 +257,16 @@ def _import_all() -> None:
 def all_queries() -> dict[str, CatalogQuery]:
     """Import all query modules and return the registry in verification
     priority order (see PRIORITY) -- prioritized names first, then the
-    remainder in registration order. ``"staged"``-tagged entries are
-    left out."""
+    remainder by module (QUERY_MODULES order), in definition order
+    within a module. ``"staged"``-tagged entries are left out."""
     _import_all()
     live = {n: cq for n, cq in REGISTRY.items() if "staged" not in cq.tags}
     ordered = {n: live[n] for n in PRIORITY if n in live}
-    ordered.update({n: cq for n, cq in live.items() if n not in ordered})
+    rest = sorted(
+        (n for n in live if n not in ordered),
+        key=lambda n: QUERY_MODULES.index(live[n].spark.__module__),
+    )
+    ordered.update({n: live[n] for n in rest})
     return ordered
 
 
@@ -290,7 +297,3 @@ def dec(col: str | F.Column, width: int = 12, scale: int = 2) -> F.Column:
     are order-independent and reproducible bit-for-bit across engines."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast(f"decimal({width},{scale})")
-
-
-def as_double(c: F.Column) -> F.Column:
-    return c.cast("double")

@@ -626,13 +626,6 @@ sk as (select doc_id, {bitstr} as simhash from sums)
 """
 
 
-def _ngram_bits_at_floor(sf_dir: str) -> bool:
-    return (
-        _ngram_bits(table_row_count(sf_dir, "documents"))
-        == NGRAM_SKETCH_BITS
-    )
-
-
 def _ngram_adaptive_bits(sf_dir: str) -> int:
     return _ngram_bits(table_row_count(sf_dir, "documents"))
 
@@ -874,6 +867,45 @@ def _emb_adaptive_oracle(sf_dir: str) -> str | None:
     )
 
 
+def _embedding_cosine_oracle() -> str:
+    """DuckDB replica of the banded hyperplane LSH dedup; reuses the
+    plane-term builder sim_lsh_ann already verifies cross-engine.
+
+    Built on the EMB_PLANES_PER_BAND floor: the Spark side's adaptive
+    plane count equals the floor for corpora up to ~2^floor *
+    EMB_TARGET_BUCKET vectors, which covers the sf0.01/sf0.001 oracle
+    gates (500 / 50 vectors -> 4 planes). Above the floor the parity
+    harness switches to :func:`_emb_adaptive_oracle`. Since round 15
+    the candidate CTE replicates the bucket-cap star expansion too
+    (the earlier plain self-join silently diverged from the Spark side
+    the moment a floor-domain bucket crossed LSH_BUCKET_CAP -- a
+    latent domain hole the adaptive-oracle work surfaced; a planted
+    adversary pins the fix)."""
+    return _emb_adaptive_sql(EMB_PLANES_PER_BAND)
+
+
+def _emb_adaptive_sql(planes: int) -> str:
+    """The full dedup_embedding_cosine oracle at a given plane count,
+    with the bucket-cap star expansion replicated -- shared by the
+    registered floor oracle and the sf-adaptive builder."""
+    return f"""
+    with e as (select vec_id,
+                      list_transform(embedding, x -> cast(x as double)) v
+               from embeddings),
+    n as (select vec_id, v, list_dot_product(v, v) as sq from e),
+    bands as (
+      {_emb_bands_sql(planes)}
+    ),
+    {_emb_cand_pairs_sql(LSH_BUCKET_CAP)}
+    select vec_a, vec_b,
+           round(list_dot_product(x.v, y.v) / (sqrt(x.sq) * sqrt(y.sq)), 6)
+             as cosine
+    from cand join n x on vec_a = x.vec_id
+              join n y on vec_b = y.vec_id
+    where list_dot_product(x.v, y.v) / (sqrt(x.sq) * sqrt(y.sq)) >= 0.4
+    """
+
+
 @register(
     "dedup_embedding_cosine",
     "Embedding-cosine near-dup via banded random-hyperplane LSH: "
@@ -884,7 +916,7 @@ def _emb_adaptive_oracle(sf_dir: str) -> str | None:
     "keyed shuffle on (band, bucket); bands tune recall, planes-per-band "
     "scale with corpus size to bound bucket population -- the scale "
     "knobs a fixed blocking key lacks.",
-    None,  # bound below -- built from the plane-term SQL builder
+    _embedding_cosine_oracle(),
     "dedup", "embedding", "lsh",
     oracle_valid=_emb_oracle_valid,
     oracle_adaptive=_emb_adaptive_oracle,
@@ -959,56 +991,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("raw_cos") >= 0.4)
         .select("vec_a", "vec_b", F.round("raw_cos", 6).alias("cosine"))
     )
-
-
-def _embedding_cosine_oracle() -> str:
-    """DuckDB replica of the banded hyperplane LSH dedup; reuses the
-    plane-term builder sim_lsh_ann already verifies cross-engine.
-
-    Built on the EMB_PLANES_PER_BAND floor: the Spark side's adaptive
-    plane count equals the floor for corpora up to ~2^floor *
-    EMB_TARGET_BUCKET vectors, which covers the sf0.01/sf0.001 oracle
-    gates (500 / 50 vectors -> 4 planes). Above the floor the parity
-    harness switches to :func:`_emb_adaptive_oracle`. Since round 15
-    the candidate CTE replicates the bucket-cap star expansion too
-    (the earlier plain self-join silently diverged from the Spark side
-    the moment a floor-domain bucket crossed LSH_BUCKET_CAP -- a
-    latent domain hole the adaptive-oracle work surfaced; a planted
-    adversary pins the fix)."""
-    return _emb_adaptive_sql(EMB_PLANES_PER_BAND)
-
-
-def _emb_adaptive_sql(planes: int) -> str:
-    """The full dedup_embedding_cosine oracle at a given plane count,
-    with the bucket-cap star expansion replicated -- shared by the
-    registered floor oracle and the sf-adaptive builder."""
-    return f"""
-    with e as (select vec_id,
-                      list_transform(embedding, x -> cast(x as double)) v
-               from embeddings),
-    n as (select vec_id, v, list_dot_product(v, v) as sq from e),
-    bands as (
-      {_emb_bands_sql(planes)}
-    ),
-    {_emb_cand_pairs_sql(LSH_BUCKET_CAP)}
-    select vec_a, vec_b,
-           round(list_dot_product(x.v, y.v) / (sqrt(x.sq) * sqrt(y.sq)), 6)
-             as cosine
-    from cand join n x on vec_a = x.vec_id
-              join n y on vec_b = y.vec_id
-    where list_dot_product(x.v, y.v) / (sqrt(x.sq) * sqrt(y.sq)) >= 0.4
-    """
-
-
-def _late_bind_embedding_oracle() -> None:
-    # importing similarity_queries at module top would be circular when
-    # the catalog imports dedup first; bind the oracle lazily instead
-    from clueso_spark.plans.catalog import REGISTRY
-
-    REGISTRY["dedup_embedding_cosine"].oracle = _embedding_cosine_oracle()
-
-
-_late_bind_embedding_oracle()
 
 
 _CC_ORACLE = f"""

@@ -2082,14 +2082,35 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
 PR_SCALE = 1_000_000_000_000  # rank unit = 1e-12
 PR_ROUNDS = 3
 PR_TOP = 20
-#: supplier node id offset. 1e12 (round-11 migration off the original
-#: 1e6): custkeys pass 1e6 at SF ~7, so the old offset silently MERGED
-#: customer and supplier nodes at exactly the scale this engine targets
-#: -- invisible to small-SF parity because the oracle embeds the same
-#: encoding. 1e12 clears any plausible custkey (150k x SF < 1e12 up to
-#: SF ~6.6M); tests/test_plans.py pins the no-overlap invariant and
-#: that every graph op shares one encoding (_BF_SUPP_BASE et al.).
-_PR_SUPP_BASE = 1_000_000_000_000
+#: supplier node id offset in every customer-supplier graph. 1e12
+#: (round-11 migration off the original 1e6): custkeys pass 1e6 at SF
+#: ~7, so the old offset silently MERGED customer and supplier nodes at
+#: exactly the scale this engine targets -- invisible to small-SF parity
+#: because the oracle embeds the same encoding. 1e12 clears any
+#: plausible custkey (150k x SF < 1e12 up to SF ~6.6M); tests/test_plans.py
+#: pins the no-overlap invariant.
+SUPP_BASE = 1_000_000_000_000
+
+
+def cust_supp_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The symmetric customer-supplier co-purchase graph as distinct
+    directed (u, v) rows, one per direction (edge = customer ordered
+    from supplier; suppliers offset by SUPP_BASE). Not pinned: each
+    caller persists it in its own slot, partitioned for its own probe
+    key."""
+    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    e0 = (
+        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
+        .select(
+            F.col("o_custkey").alias("c"),
+            (F.lit(SUPP_BASE) + F.col("l_suppkey")).alias("s"),
+        )
+        .distinct()
+    )
+    return e0.select(F.col("c").alias("u"), F.col("s").alias("v")).unionByName(
+        e0.select(F.col("s").alias("u"), F.col("c").alias("v"))
+    )
 
 
 def _pr_round_sql(i: int) -> str:
@@ -2113,16 +2134,16 @@ with e0 as (
   from orders join lineitem on o_orderkey = l_orderkey
 ),
 edges as (
-  select c as u, {_PR_SUPP_BASE} + s as v from e0
+  select c as u, {SUPP_BASE} + s as v from e0
   union all
-  select {_PR_SUPP_BASE} + s as u, c as v from e0
+  select {SUPP_BASE} + s as u, c as v from e0
 ),
 deg as (select u, count(*) as d from edges group by u),
 nn as (select count(*) as n from deg),
 r0 as (select u, ({PR_SCALE} // n) as r from deg cross join nn),
 {",".join(_pr_round_sql(i).strip() for i in range(1, PR_ROUNDS + 1))}
 select u as node,
-       cast(case when u >= {_PR_SUPP_BASE} then 1 else 0 end as bigint)
+       cast(case when u >= {SUPP_BASE} then 1 else 0 end as bigint)
          as is_supplier,
        cast(r as bigint) as rank
 from r{PR_ROUNDS}
@@ -2146,29 +2167,13 @@ limit {PR_TOP}
     "graph", "iterative", "pagerank",
 )
 def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.lit(_PR_SUPP_BASE) + F.col("l_suppkey")).alias("s"),
-        )
-        .distinct()
-    )
-    from clueso_spark.plans.catalog import persist_swap
-
     # pinned PRE-PARTITIONED on u: the degree aggregate and the
     # edge-degree join run exchange-free on the cached partitioning,
     # and every rank round's probe join reuses it too -- without the
     # pin each round re-derived the whole edge subtree from the base
     # tables (6 parquet scans for 3 rounds)
-    edges = persist_swap(
-        spark,
-        "pr_edges",
-        e0.select(F.col("c").alias("u"), F.col("s").alias("v"))
-        .unionByName(e0.select(F.col("s").alias("u"), F.col("c").alias("v")))
-        .repartition("u"),
+    edges = _persist_swap(
+        spark, "pr_edges", cust_supp_edges(spark, sf_dir).repartition("u")
     )
     deg = edges.groupBy("u").agg(F.count("*").alias("d"))
     nn = deg.agg(F.count("*").alias("n"))
@@ -2198,7 +2203,7 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ranks.select(
             F.col("u").alias("node"),
-            F.when(F.col("u") >= _PR_SUPP_BASE, 1)
+            F.when(F.col("u") >= SUPP_BASE, 1)
             .otherwise(0)
             .cast("bigint")
             .alias("is_supplier"),
@@ -2214,7 +2219,67 @@ def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # orientation -- the Suri-Vassilvitskii / Cohen MapReduce pattern).
 # ---------------------------------------------------------------------------
 
-TRI_MIN_SUPPORT = 2  # parts must co-occur in >= 2 distinct orders
+PART_MIN_SUPPORT = 2  # parts must co-occur in >= 2 distinct orders
+
+
+def part_pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part co-purchase graph as (pa, pb) rows, pa < pb: two parts
+    in >= PART_MIN_SUPPORT distinct common orders. Pair generation is
+    ONE keyed shuffle: group parts per order (collect_set dedups within
+    the order, making support = distinct co-orders) and expand the
+    id-ordered pair combinations map-side -- the _bucket_pairs
+    discipline. The orderkey self-join alternative scans the fact table
+    twice and shuffles both branches; per-order fan-out here is bounded
+    by the max basket size."""
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    return (
+        _bucket_pairs(li, ["l_orderkey"], "l_partkey", "pa", "pb")
+        .groupBy("pa", "pb")
+        .agg(F.count("*").alias("support"))
+        .where(F.col("support") >= PART_MIN_SUPPORT)
+        .select("pa", "pb")
+    )
+
+
+def closed_triangles(e0: DataFrame, deg: DataFrame) -> DataFrame:
+    """Every triangle of the part graph ``e0`` (pa, pb) exactly once, as
+    (u, wa, wb): u its (degree, id)-lowest corner, wa < wb the other
+    two. Degree-ordered orientation -- every edge points from its
+    (degree, id)-smaller endpoint, so each wedge is generated once at
+    its lowest-degree apex and the wedge-join cost is sum(out_deg^2),
+    bounded even under power-law degree skew. ``deg`` is (node, d)."""
+    da = deg.select(F.col("node").alias("pa"), F.col("d").alias("da"))
+    db = deg.select(F.col("node").alias("pb"), F.col("d").alias("db"))
+    lower = (F.col("da") < F.col("db")) | (
+        (F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))
+    )
+    # deg is one row per PART (a bounded dimension, not per edge):
+    # broadcast both sides of the degree decoration
+    orient = (
+        e0.join(F.broadcast(da), "pa")
+        .join(F.broadcast(db), "pb")
+        .select(
+            F.when(lower, F.col("pa")).otherwise(F.col("pb")).alias("u"),
+            F.when(lower, F.col("pb")).otherwise(F.col("pa")).alias("v"),
+        )
+    )
+    o2 = orient.select(F.col("u").alias("u2"), F.col("v").alias("v2"))
+    return (
+        orient.join(
+            o2, (F.col("u") == F.col("u2")) & (F.col("v") < F.col("v2"))
+        )
+        .select(
+            "u",
+            F.least("v", "v2").alias("wa"),
+            F.greatest("v", "v2").alias("wb"),
+        )
+        .join(
+            e0,
+            (F.col("wa") == F.col("pa")) & (F.col("wb") == F.col("pb")),
+        )
+        .select("u", "wa", "wb")
+    )
+
 
 TRIANGLE_ORACLE = f"""
 with op as (
@@ -2224,7 +2289,7 @@ with op as (
 ),
 e0 as (
   select pa, pb from op
-  group by 1, 2 having count(*) >= {TRI_MIN_SUPPORT}
+  group by 1, 2 having count(*) >= {PART_MIN_SUPPORT}
 ),
 deg as (
   select node, count(*) as d from (
@@ -2255,7 +2320,7 @@ from tri cross join wedge
 @register(
     "graph_triangle_count",
     "Exact triangle count + global clustering coefficient over the part "
-    f"co-purchase graph (edge = two parts in >= {TRI_MIN_SUPPORT} common "
+    f"co-purchase graph (edge = two parts in >= {PART_MIN_SUPPORT} common "
     "orders; the support threshold is the market-basket trim that keeps "
     "the graph sparse as the corpus grows). Degree-ordered orientation: "
     "every edge points from its (degree, id)-smaller endpoint, so each "
@@ -2267,51 +2332,14 @@ from tri cross join wedge
     "graph", "triangles",
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # pair generation via ONE keyed shuffle: group parts per order
-    # (collect_set dedups within the order, making support = distinct
-    # co-orders), expand the id-ordered pair combinations map-side --
-    # the _bucket_pairs discipline. The orderkey self-join alternative
-    # scans the fact table twice and shuffles both branches; per-order
-    # fan-out here is bounded by the max basket size.
-    e0 = (
-        _bucket_pairs(li, ["l_orderkey"], "l_partkey", "pa", "pb")
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("support"))
-        .where(F.col("support") >= TRI_MIN_SUPPORT)
-        .select("pa", "pb")
-    )
-    e0 = _persist_swap(spark, "triangle_e0", e0)
+    e0 = _persist_swap(spark, "triangle_e0", part_pair_edges(spark, sf_dir))
     deg = (
         e0.select(F.col("pa").alias("node"))
         .unionAll(e0.select(F.col("pb").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("d"))
     )
-    da = deg.select(F.col("node").alias("pa"), F.col("d").alias("da"))
-    db = deg.select(F.col("node").alias("pb"), F.col("d").alias("db"))
-    lower = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))
-    )
-    # deg is one row per PART (a bounded dimension, not per edge):
-    # broadcast both sides of the degree decoration
-    orient = (
-        e0.join(F.broadcast(da), "pa")
-        .join(F.broadcast(db), "pb")
-        .select(
-            F.when(lower, F.col("pa")).otherwise(F.col("pb")).alias("u"),
-            F.when(lower, F.col("pb")).otherwise(F.col("pa")).alias("v"),
-        )
-    )
-    o2 = orient.select(F.col("u").alias("u2"), F.col("v").alias("v2"))
-    wedges = orient.join(
-        o2, (F.col("u") == F.col("u2")) & (F.col("v") < F.col("v2"))
-    ).select(
-        F.least("v", "v2").alias("wa"), F.greatest("v", "v2").alias("wb")
-    )
-    tri = wedges.join(
-        e0, (F.col("wa") == F.col("pa")) & (F.col("wb") == F.col("pb"))
-    ).agg(F.count("*").alias("n_triangles"))
+    tri = closed_triangles(e0, deg).agg(F.count("*").alias("n_triangles"))
     stats = e0.select("pa", "pb").agg(F.count("*").alias("n_edges"))
     dstats = deg.agg(
         F.count("*").alias("n_vertices"),

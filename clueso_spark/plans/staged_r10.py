@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clueso_spark.plans.catalog import persist_swap, register
+from clueso_spark.plans.relational import SUPP_BASE, cust_supp_edges
 from clueso_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -707,17 +708,13 @@ def ev_inter_event_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is the contract (the Pregel-superstep shape).
 # ---------------------------------------------------------------------------
 
-#: same node-id offset as graph_pagerank_copurchase (shared encoding;
-#: round-11 migration 1e6 -> 1e12 -- custkeys pass 1e6 at SF ~7 and the
-#: old offset merged customer/supplier nodes; see _PR_SUPP_BASE)
-_LP_SUPP_BASE = 1_000_000_000_000
 _LP_ROUNDS = 3
 
 
 def _lp_edges_sql() -> str:
     return f"""
     e0 as (
-      select distinct o_custkey as c, {_LP_SUPP_BASE} + l_suppkey as s
+      select distinct o_custkey as c, {SUPP_BASE} + l_suppkey as s
       from orders join lineitem on o_orderkey = l_orderkey
     ),
     e as (select c as u, s as v from e0 union all select s, c from e0)
@@ -759,23 +756,6 @@ _LP_ROUND_SQL = "".join(
     "graph", "communities", "iterative",
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    e0 = (
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.lit(_LP_SUPP_BASE) + F.col("l_suppkey")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = e0.select(
-        F.col("c").alias("u"), F.col("s").alias("v")
-    ).unionByName(e0.select(F.col("s").alias("u"), F.col("c").alias("v")))
     # edges feed every round plus the vertex set: pin once, PRE-
     # PARTITIONED on the per-round probe key u. The cached partitioning
     # is honored at runtime (canChangeCachedPlanOutputPartitioning
@@ -784,7 +764,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-sized at 100 TB, is shuffled exactly once per query
     # instead of once per round (guide §2.4: bucketed-table semantics
     # via a pinned partitioned intermediate).
-    edges = persist_swap(spark, "lp_edges", edges.repartition("u"))
+    edges = persist_swap(
+        spark, "lp_edges", cust_supp_edges(spark, sf_dir).repartition("u")
+    )
     labels = edges.groupBy("u").agg(F.lit(0)).select(
         F.col("u").alias("node"), F.col("u").alias("lbl")
     )
@@ -884,30 +866,12 @@ _KATZ_TOP = 20
     "graph", "centrality", "katz",
 )
 def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    e0 = (
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.lit(_LP_SUPP_BASE) + F.col("l_suppkey")).alias("s"),
-        )
-        .distinct()
-    )
     # pinned PRE-PARTITIONED on u, the key every walk round probes:
     # cached partitioning is reused at runtime, so the edge list is
     # shuffled once per query instead of once per round (the same
     # discipline as graph_label_propagation)
     edges = persist_swap(
-        spark,
-        "katz_edges",
-        e0.select(F.col("c").alias("u"), F.col("s").alias("v"))
-        .unionByName(e0.select(F.col("s").alias("u"), F.col("c").alias("v")))
-        .repartition("u"),
+        spark, "katz_edges", cust_supp_edges(spark, sf_dir).repartition("u")
     )
     # w1 and w2 each feed TWO consumers (the next walk round + the
     # final score join) -- the SCALE.md double-consumption rule: one

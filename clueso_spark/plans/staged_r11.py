@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clueso_spark.plans.catalog import persist_swap, register
+from clueso_spark.plans.relational import SUPP_BASE
 from clueso_spark.sources.tables import load_table
 
 #: day bucket: microseconds div one day (cross-engine truncation pinned)
@@ -632,21 +633,13 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BF_ROUNDS = 3
-#: supplier-node id offset, 1e12: custkeys pass 1e6 at SF ~7, so a
-#: small offset would MERGE customer and supplier nodes -- silently
-#: wrong results that small-SF parity cannot catch because the oracle
-#: embeds the same encoding. Custkeys stay far below 1e12 at any
-#: plausible SF. Round 11 migrated the older graph ops
-#: (_PR_SUPP_BASE / _LP_SUPP_BASE) onto this same encoding;
-#: tests/test_plans.py pins that all three agree.
-_BF_SUPP_BASE = 1_000_000_000_000
 _BF_SEED_MOD = 20
 
 
 def _bf_edges_sql() -> str:
     return f"""
     e0 as (
-      select o_custkey as c, {_BF_SUPP_BASE} + l_suppkey as s,
+      select o_custkey as c, {SUPP_BASE} + l_suppkey as s,
              min(cast(l_quantity as bigint)) as w
       from orders join lineitem on o_orderkey = l_orderkey
       group by o_custkey, l_suppkey
@@ -682,7 +675,7 @@ def _bf_round_sql(k: int) -> str:
     d0 as (
       select u as node, cast(0 as bigint) as dist
       from (select u from e group by u)
-      where u < {_BF_SUPP_BASE} and u % {_BF_SEED_MOD} = 0
+      where u < {SUPP_BASE} and u % {_BF_SEED_MOD} = 0
     )
     {"".join(_bf_round_sql(k) for k in range(1, _BF_ROUNDS + 1))}
     {" union all ".join(
@@ -705,7 +698,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy(
             F.col("o_custkey").alias("c"),
-            (F.lit(_BF_SUPP_BASE) + F.col("l_suppkey")).alias("s"),
+            (F.lit(SUPP_BASE) + F.col("l_suppkey")).alias("s"),
         )
         .agg(F.min("q").alias("w"))
     )
@@ -725,7 +718,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("u")
         .agg(F.lit(0).cast("bigint").alias("dist"))
         .where(
-            (F.col("u") < _BF_SUPP_BASE) & (F.col("u") % _BF_SEED_MOD == 0)
+            (F.col("u") < SUPP_BASE) & (F.col("u") % _BF_SEED_MOD == 0)
         )
         .select(F.col("u").alias("node"), "dist")
     )

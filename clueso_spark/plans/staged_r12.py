@@ -100,6 +100,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clueso_spark.plans.catalog import persist_swap, register
+from clueso_spark.plans.relational import (
+    PART_MIN_SUPPORT,
+    PR_SCALE,
+    closed_triangles,
+    cust_supp_edges,
+    part_pair_edges,
+)
+from clueso_spark.plans.staged_r10 import _lp_edges_sql
 from clueso_spark.plans.staged_r11 import _DAY_US, _cents, _day
 from clueso_spark.sources.tables import load_table, load_table_spread
 
@@ -728,7 +736,7 @@ def _kcore_round_sql(r: int) -> str:
     "coreness preprocessing for community/influence pipelines, exact "
     "integers in any engine.",
     f"""
-    with {__import__("clueso_spark.plans.staged_r10", fromlist=["x"])._lp_edges_sql()}
+    with {_lp_edges_sql()}
     {"".join(_kcore_round_sql(r).strip() for r in range(1, _KCORE_ROUNDS + 1))}
     select * from (
       {" union all ".join(
@@ -742,29 +750,7 @@ def _kcore_round_sql(r: int) -> str:
     "graph", "kcore", "iterative",
 )
 def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    from clueso_spark.plans.staged_r10 import _LP_SUPP_BASE
-
-    e0 = (
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.lit(_LP_SUPP_BASE) + F.col("l_suppkey")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = persist_swap(
-        spark,
-        "kcore_edges",
-        e0.select(F.col("c").alias("u"), F.col("s").alias("v")).unionByName(
-            e0.select(F.col("s").alias("u"), F.col("c").alias("v"))
-        ),
-    )
+    edges = persist_swap(spark, "kcore_edges", cust_supp_edges(spark, sf_dir))
     rows = []
     cur = edges
     for r in range(1, _KCORE_ROUNDS + 1):
@@ -809,7 +795,6 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (score, pair) with rank AFTER TakeOrdered.
 # ---------------------------------------------------------------------------
 
-_AA_MIN_SUPPORT = 2
 _AA_MAX_DEG = 16
 _AA_TOP = 20
 _AA_SCALE = 1_000_000_000_000
@@ -818,7 +803,7 @@ _AA_SCALE = 1_000_000_000_000
 @register(
     "graph_adamic_adar_linkpred",
     "Adamic-Adar link prediction over the part co-purchase graph "
-    f"(co-occurrence support >= {_AA_MIN_SUPPORT}): non-adjacent part "
+    f"(co-occurrence support >= {PART_MIN_SUPPORT}): non-adjacent part "
     "pairs scored by sum over common neighbors z of "
     f"{_AA_SCALE} div round(log2(deg z) * 1e6), wedges generated only "
     f"through centers with deg in [2, {_AA_MAX_DEG}] (hubs carry the "
@@ -833,7 +818,7 @@ _AA_SCALE = 1_000_000_000_000
     ),
     e0 as (
       select pa, pb from op
-      group by 1, 2 having count(*) >= {_AA_MIN_SUPPORT}
+      group by 1, 2 having count(*) >= {PART_MIN_SUPPORT}
     ),
     sym as (select pa as u, pb as v from e0
             union all select pb, pa from e0),
@@ -870,30 +855,7 @@ _AA_SCALE = 1_000_000_000_000
     "graph", "linkpred", "similarity",
 )
 def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    op = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_orderkey").alias("ok"),
-            F.col("a.l_partkey").alias("pa"),
-            F.col("b.l_partkey").alias("pb"),
-        )
-        .distinct()
-    )
-    e0 = (
-        op.groupBy("pa", "pb")
-        .agg(F.count("*").alias("supp"))
-        .where(F.col("supp") >= _AA_MIN_SUPPORT)
-        .select("pa", "pb")
-    )
-    e0 = persist_swap(spark, "aa_edges", e0)
+    e0 = persist_swap(spark, "aa_edges", part_pair_edges(spark, sf_dir))
     sym = e0.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionByName(
         e0.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
     )
@@ -951,7 +913,6 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
 # weight-proportional: (r * w) div strength.
 # ---------------------------------------------------------------------------
 
-_TR_SCALE = 1_000_000_000_000
 _TR_ROUNDS = 3
 _TR_TOP = 20
 _TR_MIN_LEN = 3
@@ -967,7 +928,7 @@ def _tr_round_sql(i: int) -> str:
     ),
     r{i} as (
       select i{i}.u,
-             (15 * ({_TR_SCALE} // nn.n) + 85 * inflow) // 100 as r
+             (15 * ({PR_SCALE} // nn.n) + 85 * inflow) // 100 as r
       from i{i} cross join nn
     )"""
 
@@ -998,7 +959,7 @@ def _tr_round_sql(i: int) -> str:
     ),
     st as (select u, cast(sum(w) as bigint) as s from e group by u),
     nn as (select cast(count(*) as bigint) as n from st),
-    r0 as (select u, ({_TR_SCALE} // n) as r from st cross join nn),
+    r0 as (select u, ({PR_SCALE} // n) as r from st cross join nn),
     {",".join(_tr_round_sql(i).strip().lstrip(",") for i in range(1, _TR_ROUNDS + 1))},
     ranked as (
       select u as word, cast(r as bigint) as rank_scaled,
@@ -1045,7 +1006,7 @@ def txt_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = persist_swap(spark, "textrank_strength", st)
     nn = F.broadcast(st.agg(F.count("*").alias("n")))
     ranks = st.crossJoin(nn).select(
-        "u", F.expr(f"{_TR_SCALE} div n").alias("r")
+        "u", F.expr(f"{PR_SCALE} div n").alias("r")
     )
     ew = e.join(st, "u")  # (u, v, w, s)
     for _ in range(_TR_ROUNDS):
@@ -1058,7 +1019,7 @@ def txt_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranks = inflow.crossJoin(nn).select(
             F.col("v").alias("u"),
             F.expr(
-                f"(15 * ({_TR_SCALE} div n) + 85 * inflow) div 100"
+                f"(15 * ({PR_SCALE} div n) + 85 * inflow) div 100"
             ).alias("r"),
         )
     top = ranks.orderBy(F.col("r").desc(), "u").limit(_TR_TOP)
@@ -1935,31 +1896,11 @@ def _modularity_oracle() -> str:
 def graph_modularity_communities(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from clueso_spark.plans.staged_r10 import _LP_SUPP_BASE
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    e0 = (
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.lit(_LP_SUPP_BASE) + F.col("l_suppkey")).alias("s"),
-        )
-        .distinct()
-    )
     # pinned PRE-PARTITIONED on the per-round probe key u (same cached-
     # partitioning reuse as graph_label_propagation: the corpus-sized
     # edge list is shuffled once per query, not once per round)
     edges = persist_swap(
-        spark,
-        "mod_edges",
-        e0.select(F.col("c").alias("u"), F.col("s").alias("v"))
-        .unionByName(e0.select(F.col("s").alias("u"), F.col("c").alias("v")))
-        .repartition("u"),
+        spark, "mod_edges", cust_supp_edges(spark, sf_dir).repartition("u")
     )
     labels = edges.groupBy("u").agg(F.lit(0)).select(
         F.col("u").alias("node"), F.col("u").alias("lbl")
@@ -2727,13 +2668,10 @@ def sim_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly once), one extra 3-way corner explode + node-keyed count.
 # ---------------------------------------------------------------------------
 
-_LCC_MIN_SUPPORT = 2  # same co-purchase trim as graph_triangle_count
-
-
 @register(
     "graph_local_clustering",
     "Per-node local clustering coefficient over the part co-purchase "
-    f"graph (edge = >= {_LCC_MIN_SUPPORT} common orders): triangles "
+    f"graph (edge = >= {PART_MIN_SUPPORT} common orders): triangles "
     "found once via degree-ordered orientation, each credits its 3 "
     "corners; lcc = 2*tri/(d*(d-1)) as exact permyriad, nodes with "
     "d >= 2. The node-level transitivity signal community detection "
@@ -2746,7 +2684,7 @@ _LCC_MIN_SUPPORT = 2  # same co-purchase trim as graph_triangle_count
     ),
     e0 as (
       select pa, pb from op
-      group by 1, 2 having count(*) >= {_LCC_MIN_SUPPORT}
+      group by 1, 2 having count(*) >= {PART_MIN_SUPPORT}
     ),
     deg as (
       select node, count(*) as d from (
@@ -2786,19 +2724,7 @@ _LCC_MIN_SUPPORT = 2  # same co-purchase trim as graph_triangle_count
     "graph", "triangles", "clustering",
 )
 def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clueso_spark.plans.dedup_queries import _bucket_pairs
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    e0 = (
-        _bucket_pairs(li, ["l_orderkey"], "l_partkey", "pa", "pb")
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("support"))
-        .where(F.col("support") >= _LCC_MIN_SUPPORT)
-        .select("pa", "pb")
-    )
-    e0 = persist_swap(spark, "lcc_e0", e0)
+    e0 = persist_swap(spark, "lcc_e0", part_pair_edges(spark, sf_dir))
     deg = (
         e0.select(F.col("pa").alias("node"))
         .unionAll(e0.select(F.col("pb").alias("node")))
@@ -2806,35 +2732,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("d"))
     )
     deg = persist_swap(spark, "lcc_deg", deg)
-    da = deg.select(F.col("node").alias("pa"), F.col("d").alias("da"))
-    db = deg.select(F.col("node").alias("pb"), F.col("d").alias("db"))
-    lower = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))
-    )
-    orient = (
-        e0.join(F.broadcast(da), "pa")
-        .join(F.broadcast(db), "pb")
-        .select(
-            F.when(lower, F.col("pa")).otherwise(F.col("pb")).alias("u"),
-            F.when(lower, F.col("pb")).otherwise(F.col("pa")).alias("v"),
-        )
-    )
-    o2 = orient.select(F.col("u").alias("u2"), F.col("v").alias("v2"))
-    tri3 = (
-        orient.join(
-            o2, (F.col("u") == F.col("u2")) & (F.col("v") < F.col("v2"))
-        )
-        .select(
-            "u",
-            F.least("v", "v2").alias("wa"),
-            F.greatest("v", "v2").alias("wb"),
-        )
-        .join(
-            e0,
-            (F.col("wa") == F.col("pa")) & (F.col("wb") == F.col("pb")),
-        )
-        .select("u", "wa", "wb")
-    )
+    tri3 = closed_triangles(e0, deg)
     corners = (
         tri3.select(F.col("u").alias("node"))
         .unionAll(tri3.select(F.col("wa").alias("node")))

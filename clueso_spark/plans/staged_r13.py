@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clueso_spark.plans.catalog import persist_swap, register
-from clueso_spark.plans.similarity_queries import _DOT, DIM
+from clueso_spark.plans.similarity_queries import _DOT, DIM, N_PROBES
 from clueso_spark.plans.staged_r11 import _DAY_US
 from clueso_spark.plans.staged_r12 import (
     _GC_CHUNK_CTES,
@@ -81,13 +81,12 @@ from clueso_spark.sources.tables import load_table
 _FANN_TENANTS = 4
 _FANN_NPROBE = 2
 _FANN_TOPK = 5
-_FANN_PROBES = 5  # vec_id < 5, the similarity tier's shared probe set
 
 
 @register(
     "sim_filtered_ann",
     f"Filtered ANN, prefilter vs postfilter: tenant = md5(vec_id) mod "
-    f"{_FANN_TENANTS}; per probe (vec_id < {_FANN_PROBES}, target "
+    f"{_FANN_TENANTS}; per probe (vec_id < {N_PROBES}, target "
     f"tenant = probe_id mod {_FANN_TENANTS}), probe the "
     f"{_FANN_NPROBE} nearest IVF cells (decimal-exact centroids), "
     f"then (a) PREFILTER: top-{_FANN_TOPK} among predicate-passing "
@@ -116,7 +115,7 @@ _FANN_PROBES = 5  # vec_id < 5, the similarity tier's shared probe set
     cn as (select cell, cv, list_dot_product(cv, cv) as csq from cent),
     probes as (select vec_id as probe_id, v as pv, sq as psq,
                       vec_id % {_FANN_TENANTS} as target
-               from n where vec_id < {_FANN_PROBES}),
+               from n where vec_id < {N_PROBES}),
     assign as (
       select probe_id, target, pv, psq, cell from (
         select probes.probe_id, probes.target, probes.pv, probes.psq,
@@ -215,7 +214,7 @@ def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("csq", F.expr(_DOT.format(a="cv", b="cv")))
     )
-    probes = emb.where(F.col("vec_id") < _FANN_PROBES).select(
+    probes = emb.where(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         F.col("v").alias("pv"),
         F.col("sq").alias("psq"),
@@ -328,7 +327,7 @@ def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "probe_id", F.col("target").cast("bigint").alias("target_tenant")
     )
     out = base
-    # every per-probe count frame is <= _FANN_PROBES rows: broadcast
+    # every per-probe count frame is <= N_PROBES rows: broadcast
     # the assembly joins so the 5-row report never plans a sort-merge
     for frame, cols in (
         (n_tenant, ["n_tenant_corpus"]),

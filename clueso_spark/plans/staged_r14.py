@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clueso_spark.plans.catalog import register
+from clueso_spark.plans.similarity_queries import N_PROBES
 
 _HOUR_US = 3_600_000_000
 
@@ -192,7 +193,6 @@ def _outer_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MV_SUB = 8  # sub-vectors per embedding
 _MV_DIM = 8  # dims per sub-vector (8 x 8 = DIM 64)
-_MV_PROBES = 5  # the similarity tier's shared probe set
 _MV_TOPK = 10
 
 
@@ -215,7 +215,7 @@ def _maxsim_expr(pv: str, v: str) -> str:
     f"Multi-vector late-interaction (ColBERT MaxSim) top-{_MV_TOPK}: "
     f"each 64-d embedding = {_MV_SUB} token sub-vectors of {_MV_DIM} "
     f"dims; score(q, d) = sum over q sub-vectors of max dot against "
-    f"any d sub-vector, for {_MV_PROBES} broadcast probes over one "
+    f"any d sub-vector, for {N_PROBES} broadcast probes over one "
     "corpus scan -- the whole MaxSim is a single nested higher-order "
     "projection (zero pre-top-k shuffles). Scores bit-identical "
     "across engines: per-sub-dot left-folds match list_dot_product, "
@@ -226,7 +226,7 @@ def _maxsim_expr(pv: str, v: str) -> str:
                       list_transform(embedding, x -> cast(x as double)) v
                from embeddings),
     probes as (select vec_id as probe_id, v as pv from e
-               where vec_id < {_MV_PROBES}),
+               where vec_id < {N_PROBES}),
     scored as (
       select probe_id, e.vec_id,
              list_reduce(
@@ -255,7 +255,7 @@ def sim_colbert_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb(spark, sf_dir).select("vec_id", "v")
     probes = F.broadcast(
-        emb.where(F.col("vec_id") < _MV_PROBES).select(
+        emb.where(F.col("vec_id") < N_PROBES).select(
             F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
         )
     )
@@ -313,7 +313,7 @@ _RRF_SCALE = 1_000_000_000
 @register(
     "sim_rrf_fusion",
     f"Hybrid retrieval via reciprocal-rank fusion: per probe "
-    f"(vec_id < {_MV_PROBES}), fuse the dense cosine top-"
+    f"(vec_id < {N_PROBES}), fuse the dense cosine top-"
     f"{_RRF_ARM_TOPK} (embeddings) with the lexical distinct-word-"
     f"overlap top-{_RRF_ARM_TOPK} (documents) by "
     f"rrf = {_RRF_SCALE} div ({_RRF_K} + rank) summed over the arms "
@@ -326,7 +326,7 @@ _RRF_SCALE = 1_000_000_000
                from embeddings),
     n as (select vec_id, v, list_dot_product(v, v) sq from e),
     dprobes as (select vec_id as probe_id, v as pv, sq as psq from n
-                where vec_id < {_MV_PROBES}),
+                where vec_id < {N_PROBES}),
     dense as (
       select probe_id, vec_id as id,
              row_number() over (partition by probe_id order by
@@ -342,7 +342,7 @@ _RRF_SCALE = 1_000_000_000
       where w <> ''
     ),
     lprobes as (select doc_id as probe_id, w from words
-                where doc_id < {_MV_PROBES}),
+                where doc_id < {N_PROBES}),
     overlap as (
       select lprobes.probe_id, words.doc_id as id,
              count(*) as n_shared
@@ -389,7 +389,7 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dense arm: cosine top-R, the tier's proven-identical arithmetic
     emb = _emb(spark, sf_dir)
     dprobes = F.broadcast(
-        emb.where(F.col("vec_id") < _MV_PROBES).select(
+        emb.where(F.col("vec_id") < N_PROBES).select(
             F.col("vec_id").alias("probe_id"),
             F.col("v").alias("pv"),
             F.col("sq").alias("psq"),
@@ -419,7 +419,7 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     lprobes = F.broadcast(
-        words.where(F.col("doc_id") < _MV_PROBES).select(
+        words.where(F.col("doc_id") < N_PROBES).select(
             F.col("doc_id").alias("probe_id"), "w"
         )
     )

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clueso_spark.plans.catalog import persist_swap, register
+from clueso_spark.plans.relational import SUPP_BASE, cust_supp_edges
 from clueso_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -446,7 +447,6 @@ def ev_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _WALK_STEPS = 3
-_WALK_SUPP_BASE = 1_000_000_000_000  # the graph tier's shared offset
 
 
 def _walk_step_sql(i: int) -> str:
@@ -474,9 +474,9 @@ w{i} as (
       from orders join lineitem on o_orderkey = l_orderkey
     ),
     edges as (
-      select c as u, {_WALK_SUPP_BASE} + s as v from e0
+      select c as u, {SUPP_BASE} + s as v from e0
       union all
-      select {_WALK_SUPP_BASE} + s as u, c as v from e0
+      select {SUPP_BASE} + s as u, c as v from e0
     ),
     nb as (
       select u, list_sort(list(v)) as nbrs, count(*) as deg
@@ -492,23 +492,7 @@ w{i} as (
     "graph", "randomwalk", "corpus", "iterative",
 )
 def graph_randomwalk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    e0 = (
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.lit(_WALK_SUPP_BASE) + F.col("l_suppkey")).alias("s"),
-        )
-        .distinct()
-    )
-    edges = e0.select(
-        F.col("c").alias("u"), F.col("s").alias("v")
-    ).unionByName(e0.select(F.col("s").alias("u"), F.col("c").alias("v")))
+    edges = cust_supp_edges(spark, sf_dir)
     # indexed-edge layout instead of per-node neighbor ARRAYS: the
     # sorted-neighbor position becomes a row_number, so each walk step
     # is a scalar equi-join -- no wide array columns ever cross a

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from clueso_spark.functions.text import tokens
 from clueso_spark.plans.catalog import register
+from clueso_spark.plans.relational import PART_MIN_SUPPORT, part_pair_edges
 from clueso_spark.plans.staged_r6 import _l2
 from clueso_spark.sources.tables import load_table
 
@@ -1359,14 +1360,13 @@ def st_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _KHOP_SEED_BOUND = 50  # seeds = graph vertices with partkey < bound
-_KHOP_MIN_SUPPORT = 2  # same edge rule as graph_triangle_count
 
 
 @register(
     "graph_khop_reach",
     "Bounded BFS: how many parts are reachable within 0..3 hops of the "
     f"seed set (graph vertices with partkey < {_KHOP_SEED_BOUND}) on "
-    f"the co-purchase graph (edge = >= {_KHOP_MIN_SUPPORT} common "
+    f"the co-purchase graph (edge = >= {PART_MIN_SUPPORT} common "
     "orders)? Three plan-unrolled frontier expansions, each one keyed "
     "equi-join + distinct; no fixpoint loop, no driver collect. "
     "Scale: edges come from the basket-bounded pair expansion, the "
@@ -1379,7 +1379,7 @@ _KHOP_MIN_SUPPORT = 2  # same edge rule as graph_triangle_count
     ),
     e0 as (
       select pa, pb from op
-      group by 1, 2 having count(*) >= {_KHOP_MIN_SUPPORT}
+      group by 1, 2 having count(*) >= {PART_MIN_SUPPORT}
     ),
     e as (select pa as u, pb as v from e0
           union all select pb, pa from e0),
@@ -1409,18 +1409,8 @@ _KHOP_MIN_SUPPORT = 2  # same edge rule as graph_triangle_count
 )
 def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clueso_spark.plans.catalog import persist_swap
-    from clueso_spark.plans.relational import _bucket_pairs
 
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    e0 = (
-        _bucket_pairs(li, ["l_orderkey"], "l_partkey", "pa", "pb")
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("support"))
-        .where(F.col("support") >= _KHOP_MIN_SUPPORT)
-        .select("pa", "pb")
-    )
+    e0 = part_pair_edges(spark, sf_dir)
     # the undirected edge list feeds all three expansion rounds: pinned
     # PRE-PARTITIONED on u so each round's expansion join reuses the
     # cached partitioning (the frontier's distinct already leaves it

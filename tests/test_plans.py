@@ -342,11 +342,9 @@ def test_graph_node_encoding_shared_and_collision_free():
     supplier nodes from SF ~7 (custkey cardinality = 150k x SF) --
     wrong graphs at target scale, invisible to small-SF parity because
     the oracles share the encoding."""
-    from clueso_spark.plans.relational import _PR_SUPP_BASE
-    from clueso_spark.plans.staged_r10 import _LP_SUPP_BASE
-    from clueso_spark.plans.staged_r11 import _BF_SUPP_BASE
+    from clueso_spark.plans.relational import SUPP_BASE
 
-    assert _PR_SUPP_BASE == _LP_SUPP_BASE == _BF_SUPP_BASE == 10**12
+    assert SUPP_BASE == 10**12
     # headroom: even an SF-1M deployment (150 B customers) cannot reach
     # the supplier id range
-    assert 150_000 * 1_000_000 < _PR_SUPP_BASE
+    assert 150_000 * 1_000_000 < SUPP_BASE

@@ -18,11 +18,13 @@ REPO = Path(__file__).resolve().parents[1]
 SNAPSHOT = Path(__file__).with_name("registry_snapshot.json")
 SNAPSHOT_SHA256 = "629994062176efdfdaf213916b1c616d0dd81b94db9ab64d4e8d287411c2f914"
 
-# all_queries() orders names outside PRIORITY by registration, which
-# depends on which modules were imported first; __spark_entry__ is
-# consumed from a fresh interpreter, so the snapshot is taken in one too
+# all_queries() orders names outside PRIORITY by QUERY_MODULES position,
+# whatever was imported first; the snapshot is still taken in a fresh
+# interpreter (as __spark_entry__ is consumed), and PRELOAD lets a test
+# import modules ahead of the catalog to check that the order holds
 _SNAPSHOT_SCRIPT = """
 import hashlib, json
+PRELOAD
 import __spark_entry__
 from clueso_spark.plans.catalog import all_queries
 
@@ -38,6 +40,10 @@ print(json.dumps(snap))
 """
 
 
+def _snapshot(preload: str = "") -> list:
+    return json.loads(_fresh(_SNAPSHOT_SCRIPT.replace("PRELOAD", preload)))
+
+
 def _fresh(script: str) -> str:
     return subprocess.run(
         [sys.executable, "-c", script],
@@ -48,9 +54,20 @@ def _fresh(script: str) -> str:
 def test_registry_matches_snapshot():
     pinned = json.loads(SNAPSHOT.read_text())
     assert hashlib.sha256(json.dumps(pinned).encode()).hexdigest() == SNAPSHOT_SHA256
-    live = json.loads(_fresh(_SNAPSHOT_SCRIPT))
+    live = _snapshot()
     assert len(live) == 249
     assert live == pinned
+
+
+def test_registry_order_independent_of_import_history():
+    # each of these, imported ahead of the catalog, registers its own
+    # names (and those of what it imports) before the rest
+    live = _snapshot(
+        "import clueso_spark.plans.staged_r6\n"
+        "import clueso_spark.plans.staged_r13\n"
+        "import clueso_spark.plans.staged_r16\n"
+    )
+    assert live == json.loads(SNAPSHOT.read_text())
 
 
 def test_staged_query_absent_even_when_imported_first():

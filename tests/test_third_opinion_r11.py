@@ -20,10 +20,10 @@ import pytest
 from clueso_spark.plans.staged_r11 import (
     _BF_ROUNDS,
     _BF_SEED_MOD,
-    _BF_SUPP_BASE,
     _EWMA_TAPS,
     _EWMA_WEIGHTS,
 )
+from clueso_spark.plans.relational import SUPP_BASE as _BF_SUPP_BASE
 from tests.conftest import registered_by
 
 QUERIES = registered_by("clueso_spark.plans.staged_r11")

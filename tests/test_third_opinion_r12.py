@@ -34,9 +34,9 @@ from clueso_spark.plans.staged_r12 import (
     _KCORE_ROUNDS,
     _TR_MIN_LEN,
     _TR_ROUNDS,
-    _TR_SCALE,
     _TR_TOP,
 )
+from clueso_spark.plans.relational import PR_SCALE as _TR_SCALE
 from tests.conftest import registered_by
 
 QUERIES = registered_by("clueso_spark.plans.staged_r12")

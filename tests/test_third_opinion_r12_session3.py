@@ -17,6 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from clueso_spark.plans.catalog import all_queries
+from clueso_spark.plans.relational import PART_MIN_SUPPORT as _LCC_MIN_SUPPORT
 from clueso_spark.plans.staged_r12 import (
     _BP_K,
     _BP_W,
@@ -24,7 +25,6 @@ from clueso_spark.plans.staged_r12 import (
     _DB_MINPTS,
     _KMV_K,
     _KMV_M,
-    _LCC_MIN_SUPPORT,
     _NOV_N,
 )
 from tests.conftest import registered_by

@@ -14,11 +14,11 @@ import pyarrow.parquet as pq
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from clueso_spark.plans.similarity_queries import N_PROBES as _FANN_PROBES
 from clueso_spark.plans.staged_r13 import (
     _CUSUM_H_CENTS,
     _CUSUM_K_CENTS,
     _FANN_NPROBE,
-    _FANN_PROBES,
     _FANN_TENANTS,
     _FANN_TOPK,
 )

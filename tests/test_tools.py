@@ -74,3 +74,29 @@ def test_perfbench_ab_gain_rule():
     assert judge(parent, [p - 1 for p in parent], "lower", 0.25) == (10, "")
     assert judge(parent, [p * 0.7 for p in parent], "higher", 0.25) == (0, "WORSE")
     assert judge(parent, [p * 0.7 for p in parent], "higher", None) == (0, "")
+
+
+def test_tools_put_no_absolute_path_on_sys_path():
+    """A tool run from a second checkout (say, a parent-commit copy for
+    an A/B) must import that checkout's engine, so tools derive the
+    repo root from __file__ instead of naming a fixed path."""
+    import ast
+    from pathlib import Path
+
+    tools = Path(__file__).resolve().parents[1] / "tools"
+    bad = []
+    for path in sorted(tools.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and ast.unparse(node.func.value) == "sys.path"
+                and any(
+                    isinstance(a, ast.Constant)
+                    and isinstance(a.value, str)
+                    and Path(a.value).is_absolute()
+                    for a in node.args
+                )
+            ):
+                bad.append(f"{path.name}:{node.lineno}")
+    assert bad == []

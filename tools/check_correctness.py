@@ -9,6 +9,7 @@ Exit code 0 iff every checked query matches (rows-only queries must run).
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 
@@ -23,7 +24,9 @@ def main() -> int:
     ap.add_argument("names", nargs="*", help="subset of query names")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     from clueso_spark.plans.catalog import all_queries, staged_queries
     from clueso_spark.plans.parity import run_catalog
     from clueso_spark.session import get_spark

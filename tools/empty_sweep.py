@@ -17,6 +17,7 @@ Exit code 0 iff no query crashes.
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
@@ -39,7 +40,9 @@ def write_empty_corpus(dst: str, src: str = "/root/testdata/sf0.001") -> str:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     tmp = write_empty_corpus(tempfile.mkdtemp(prefix="empty_sf_"))
 
     from clueso_spark.plans.catalog import (

@@ -18,6 +18,7 @@ Usage: python tools/funnel_audit.py [--sf-dir DIR] [--runs N]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
@@ -28,7 +29,9 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=5)
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     from clueso_spark.plans.catalog import all_queries
     from clueso_spark.session import get_spark
 

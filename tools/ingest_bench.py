@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -27,7 +28,9 @@ def main() -> int:
     ap.add_argument("--buckets", type=int, default=4)
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     from pyspark.sql import functions as F
 
     from clueso_spark.session import get_spark

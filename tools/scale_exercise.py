@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -36,7 +37,9 @@ def main() -> int:
     ap.add_argument("--root", default=None)
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     from clueso_spark.operators.cache import BucketCacheManager
     from clueso_spark.operators.compact import Compactor
     from clueso_spark.operators.query import MetadataQuery, MetadataQueryExecutor

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -400,7 +401,9 @@ def main() -> int:
     ks = [int(x) for x in args.ks.split(",")]
     names = args.queries.split(",")
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     from clueso_spark.plans.catalog import all_queries, staged_queries
     from clueso_spark.session import get_spark
 
