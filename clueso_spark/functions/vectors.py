@@ -1,9 +1,15 @@
-"""Vector column functions: cosine similarity, norms, LSH sketches.
+"""Vector column functions: dot product, cosine, squared L2, norms, LSH
+sketches.
+
+``dot``, ``cosine_similarity`` and ``squared_l2`` are the similarity
+tier's only vector arithmetic: every plan in ``plans/`` that scores a
+pair of vectors calls them, so a change to the fold (or to a lambda
+name, which shows in the plan) is made here once.
 
 Embeddings arrive as ``array<float>``; every helper casts to double
 *before* arithmetic so both engines compute the identical IEEE sequence
-(sequential left-to-right fold), making scores reproducible enough to
-oracle-verify after a round().
+(sequential left-to-right fold, DuckDB's ``list_dot_product``), making
+scores reproducible enough to oracle-verify after a round().
 
 Scale stance: these are per-row Column expressions -- a cosine against K
 probe vectors is a broadcast nested-loop join (probes broadcast, one pass
@@ -24,7 +30,7 @@ def to_double_array(col: str) -> Column:
 
 def dot(a: str, b: str) -> Column:
     """Sequential-fold dot product of two double arrays."""
-    return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)")
+    return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, t) -> acc + t)")
 
 
 def squared_norm(a: str) -> Column:
@@ -36,6 +42,12 @@ def cosine_similarity(a: str, b: str, norm_a: str, norm_b: str) -> Column:
     precomputed once per row (scale: avoids recomputing the self-norm per
     candidate pair)."""
     return dot(a, b) / (F.sqrt(F.col(norm_a)) * F.sqrt(F.col(norm_b)))
+
+
+def squared_l2(a: str, b: str, sq_a: str, sq_b: str) -> Column:
+    """||a - b||^2 via the identity a.a - 2 a.b + b.b, with the squared
+    norms precomputed per row (the nearest-centroid distance)."""
+    return F.col(sq_a) - 2 * dot(a, b) + F.col(sq_b)
 
 
 def plane_weight(p: int, d: int) -> float:

@@ -139,13 +139,15 @@ class MetadataQueryExecutor:
 
     def pages(self, query: MetadataQuery):
         """Iterate all pages via keyset pagination (each page re-queries with
-        start_key = last key of the previous page)."""
+        start_key = last key of the previous page). Each page goes through
+        execute_collected, so every page counts in the per-bucket
+        metrics."""
         start = query.start_key
         while True:
             page = MetadataQuery(
                 query.bucket_name, query.sql_where_expr, start, query.limit
             )
-            rows = self.execute(page).collect()
+            rows = self.execute_collected(page)
             if not rows:
                 return
             yield rows

@@ -20,6 +20,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clueso_spark.functions.text import STOPWORDS, tokens, word_shingles
+from clueso_spark.functions.vectors import (
+    cosine_similarity,
+    lsh_bucket,
+    squared_norm,
+    to_double_array,
+)
 from clueso_spark.plans.catalog import persist_swap, register
 from clueso_spark.sources.tables import (
     load_table,
@@ -801,6 +807,65 @@ def _emb_oracle_valid(sf_dir: str) -> bool:
     )
 
 
+def lsh_band_pairs(
+    emb: DataFrame, planes: int, cap: int | None = None
+) -> DataFrame:
+    """Candidate pairs ``(vec_a, vec_b)``, ``vec_a < vec_b``, of the
+    banded random-hyperplane LSH index: EMB_BANDS bands of ``planes``
+    planes each, pairs sharing a bucket in ANY band (OR-amplified
+    recall), distinct across bands. ``cap`` is :func:`_bucket_pairs`'
+    star cap: dedup_embedding_cosine passes LSH_BUCKET_CAP,
+    sim_knn_join / sim_range_search pass none.
+
+    Bucket bits come off ``emb``'s RAW float ``embedding`` column:
+    referencing the derived double array would re-inline its
+    transform(...) per element_at -- 64 terms x 16 planes of re-cast
+    work per row (see functions/text.py _zip_shingles). float -> double
+    promotion inside the product is exact, so the bits are identical
+    either way. The (vec_id, band, bucket) long rows carry no vector
+    payload; candidate pairs come from ONE keyed shuffle on (band,
+    bucket) with per-bucket pair expansion."""
+    bands = [
+        lsh_bucket("embedding", planes, 64, first_plane=k * planes).alias(
+            f"bk{k}"
+        )
+        for k in range(EMB_BANDS)
+    ]
+    stack_args = ", ".join(f"{k}, bk{k}" for k in range(EMB_BANDS))
+    long = emb.select("vec_id", *bands).select(
+        "vec_id", F.expr(f"stack({EMB_BANDS}, {stack_args}) as (band, bucket)")
+    )
+    return _bucket_pairs(
+        long, ["band", "bucket"], "vec_id", "vec_a", "vec_b", cap=cap
+    ).distinct()
+
+
+def cosine_pairs(emb: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact cosine ``cos`` for each candidate pair ``(vec_a, vec_b)``
+    of a (vec_id, v) frame: attach each side's (v, sq) with two plain
+    equi-joins and let the optimizer pick the strategy -- local/small
+    corpora broadcast the vector table, big ones shuffle on vec_id.
+    (A melt + per-pair min_by/max_by agg instead forces a shuffle of
+    the full vector payload keyed by PAIR -- candidate-count x 128
+    doubles through one exchange -- with no path for the planner to
+    avoid it.)"""
+    n = emb.withColumn("sq", squared_norm("v")).select("vec_id", "v", "sq")
+    a = n.select(
+        F.col("vec_id").alias("vec_a"),
+        F.col("v").alias("va"),
+        F.col("sq").alias("sqa"),
+    )
+    b = n.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("v").alias("vb"),
+        F.col("sq").alias("sqb"),
+    )
+    cos = cosine_similarity("va", "vb", "sqa", "sqb")
+    return pairs.join(a, "vec_a").join(b, "vec_b").select(
+        "vec_a", "vec_b", cos.alias("cos")
+    )
+
+
 def _emb_bands_sql(planes: int) -> str:
     """The banded hyperplane bucket CTE body at a given plane count --
     the plane-term SQL sim_lsh_ann verifies cross-engine, shared by the
@@ -922,12 +987,6 @@ def _emb_adaptive_sql(planes: int) -> str:
     oracle_adaptive=_emb_adaptive_oracle,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clueso_spark.functions.vectors import (
-        lsh_bucket,
-        squared_norm,
-        to_double_array,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", to_double_array("embedding").alias("v")
     )
@@ -936,60 +995,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count() here would launch a full scan at DataFrame-CONSTRUCTION
     # time, paid by every catalog build and plan inspection
     planes = _emb_planes(table_row_count(sf_dir, "embeddings"))
-    # bucket bits come off the RAW float column: referencing the derived
-    # double array would re-inline its transform(...) per element_at --
-    # 64 terms x 16 planes of re-cast work per row (see functions/text.py
-    # _zip_shingles). float -> double promotion inside the product is
-    # exact, so the bits are identical either way.
-    bands = [
-        lsh_bucket(
-            "embedding",
-            planes,
-            64,
-            first_plane=k * planes,
-        ).alias(f"bk{k}")
-        for k in range(EMB_BANDS)
-    ]
-    stack_args = ", ".join(f"{k}, bk{k}" for k in range(EMB_BANDS))
-    # (vec_id, band, bucket) long rows carry no vector payload; candidate
-    # pairs come from ONE keyed shuffle on (band, bucket) with per-bucket
-    # pair expansion, then distinct across bands (a pair can collide in
-    # several bands).
-    long = emb.select("vec_id", *bands).select(
-        "vec_id", F.expr(f"stack({EMB_BANDS}, {stack_args}) as (band, bucket)")
-    )
-    cand = _bucket_pairs(
-        long, ["band", "bucket"], "vec_id", "vec_a", "vec_b",
-        cap=LSH_BUCKET_CAP,
-    ).distinct()
-    # exact verification: attach each side's (v, sq) with two plain
-    # equi-joins and let the optimizer pick the strategy -- local/small
-    # corpora broadcast the vector table, big ones shuffle on vec_id.
-    # (A melt + per-pair min_by/max_by agg instead forces a shuffle of
-    # the full vector payload keyed by PAIR -- candidate-count x 128
-    # doubles through one exchange -- with no path for the planner to
-    # avoid it.)
-    n = emb.withColumn("sq", squared_norm("v")).select("vec_id", "v", "sq")
-    a = n.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("v").alias("va"),
-        F.col("sq").alias("sqa"),
-    )
-    b = n.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("sq").alias("sqb"),
-    )
-    cos = F.expr(
-        "aggregate(zip_with(va, vb, (x, y) -> x * y), 0D,"
-        " (acc, t) -> acc + t)"
-    ) / (F.sqrt(F.col("sqa")) * F.sqrt(F.col("sqb")))
+    cand = lsh_band_pairs(emb, planes, cap=LSH_BUCKET_CAP)
     return (
-        cand.join(a, "vec_a")
-        .join(b, "vec_b")
-        .select("vec_a", "vec_b", cos.alias("raw_cos"))
-        .where(F.col("raw_cos") >= 0.4)
-        .select("vec_a", "vec_b", F.round("raw_cos", 6).alias("cosine"))
+        cosine_pairs(emb, cand)
+        .where(F.col("cos") >= 0.4)
+        .select("vec_a", "vec_b", F.round("cos", 6).alias("cosine"))
     )
 
 
@@ -1182,7 +1192,7 @@ from best where rk = 1
     oracle_adaptive=_sem_adaptive_oracle,
 )
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clueso_spark.plans.similarity_queries import _DOT, _emb, _lloyd_c1
+    from clueso_spark.plans.similarity_queries import _emb, _lloyd_c1
 
     k = _sem_k(table_row_count(sf_dir, "embeddings"))
     emb = _emb(spark, sf_dir)
@@ -1212,9 +1222,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("bv"),
         F.col("sq").alias("bsq"),
     )
-    cos = F.expr(_DOT.format(a="av", b="bv")) / (
-        F.sqrt(F.col("asq")) * F.sqrt(F.col("bsq"))
-    )
+    cos = cosine_similarity("av", "bv", "asq", "bsq")
     pairs = (
         a.join(
             b,

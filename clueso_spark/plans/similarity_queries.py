@@ -21,7 +21,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clueso_spark.functions.vectors import (
+    cosine_similarity,
+    dot,
     lsh_bucket,
+    squared_l2,
     squared_norm,
     to_double_array,
 )
@@ -33,14 +36,42 @@ TOP_K = 10
 N_PLANES = 4
 DIM = 64
 
-_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, t) -> acc + t)"
-
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "label", to_double_array("embedding").alias("v"))
         .withColumn("sq", squared_norm("v"))
+    )
+
+
+def probe_rows(emb: DataFrame, *extra) -> DataFrame:
+    """The tier's shared probe set: the rows with vec_id < N_PROBES of a
+    (vec_id, v, sq) frame as (probe_id, pv, psq), plus any ``extra``
+    columns. Not broadcast: each caller decides whether its probe side
+    is the broadcast one."""
+    return emb.where(F.col("vec_id") < N_PROBES).select(
+        F.col("vec_id").alias("probe_id"),
+        F.col("v").alias("pv"),
+        F.col("sq").alias("psq"),
+        *extra,
+    )
+
+
+def top_k_per_probe(
+    scored: DataFrame, k: int, score: str = "cos"
+) -> DataFrame:
+    """Each probe's ``k`` best rows of a scored (probe_id, vec_id,
+    ``score``) frame: bigint ``rk`` = row_number over (score desc,
+    vec_id) per probe, kept while rk <= k -- the per-probe top-k heap
+    (TakeOrderedAndProject semantics) every exact and ANN ranker ends
+    in."""
+    w = Window.partitionBy("probe_id").orderBy(
+        F.col(score).desc(), F.col("vec_id")
+    )
+    return (
+        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
+        .where(F.col("rk") <= k)
     )
 
 
@@ -86,24 +117,14 @@ def _brute_topk_from(emb: DataFrame) -> DataFrame:
     sim_ivf_nprobe_curve) pass it here so their exact baseline shares
     the one materialized scan instead of re-reading the corpus and
     re-deriving every norm."""
-    probes = F.broadcast(
-        emb.where(F.col("vec_id") < N_PROBES).select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("v").alias("pv"),
-            F.col("sq").alias("psq"),
-        )
-    )
-    cos = F.expr(_DOT.format(a="pv", b="v")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("sq"))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        probes.join(emb, F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id", cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= TOP_K)
-        .select("probe_id", "vec_id", F.round("cos", 6).alias("cosine"), "rk")
-    )
+    probes = F.broadcast(probe_rows(emb))
+    cos = cosine_similarity("pv", "v", "psq", "sq")
+    return top_k_per_probe(
+        probes.join(emb, F.col("vec_id") != F.col("probe_id")).select(
+            "probe_id", "vec_id", cos.alias("cos")
+        ),
+        TOP_K,
+    ).select("probe_id", "vec_id", F.round("cos", 6).alias("cosine"), "rk")
 
 
 def _lsh_plane_sql(p: int, vec: str) -> str:
@@ -168,28 +189,17 @@ def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("sq", squared_norm("v"))
     )
     probes = F.broadcast(
-        emb.where(F.col("vec_id") < N_PROBES).select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("v").alias("pv"),
-            F.col("sq").alias("psq"),
-            F.col("bucket").alias("pbucket"),
-        )
+        probe_rows(emb, F.col("bucket").alias("pbucket"))
     )
-    cos = F.expr(_DOT.format(a="pv", b="v")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("sq"))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
+    cos = cosine_similarity("pv", "v", "psq", "sq")
+    return top_k_per_probe(
         probes.join(
             emb,
             (F.col("pbucket") == F.col("bucket"))
             & (F.col("vec_id") != F.col("probe_id")),
-        )
-        .select("probe_id", "vec_id", cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= TOP_K)
-        .select("probe_id", "vec_id", F.round("cos", 6).alias("cosine"), "rk")
-    )
+        ).select("probe_id", "vec_id", cos.alias("cos")),
+        TOP_K,
+    ).select("probe_id", "vec_id", F.round("cos", 6).alias("cosine"), "rk")
 
 
 def _center_by_label(pdf):
@@ -336,16 +346,10 @@ def sim_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("cell"),
             F.expr("transform(pc, x -> x.c)").alias("cv"),
         )
-        .withColumn("csq", F.expr(_DOT.format(a="cv", b="cv")))
+        .withColumn("csq", dot("cv", "cv"))
     )
-    probes = emb.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("v").alias("pv"),
-        F.col("sq").alias("psq"),
-    )
-    pcos = F.expr(_DOT.format(a="pv", b="cv")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("csq"))
-    )
+    probes = probe_rows(emb)
+    pcos = cosine_similarity("pv", "cv", "psq", "csq")
     w_cell = Window.partitionBy("probe_id").orderBy(
         F.col("ccos").desc(), F.col("cell")
     )
@@ -356,22 +360,17 @@ def sim_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("crk") == 1)
         .drop("ccos", "crk")
     )
-    cos = F.expr(_DOT.format(a="pv", b="v")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("sq"))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
+    cos = cosine_similarity("pv", "v", "psq", "sq")
+    return top_k_per_probe(
         F.broadcast(assign)
         .join(
             emb,
             (F.col("label") == F.col("cell"))
             & (F.col("vec_id") != F.col("probe_id")),
         )
-        .select("probe_id", F.col("cell").cast("bigint").alias("cell"), "vec_id", cos.alias("cos"))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= 5)
-        .select("probe_id", "cell", "vec_id", F.round("cos", 6).alias("cosine"), "rk")
-    )
+        .select("probe_id", F.col("cell").cast("bigint").alias("cell"), "vec_id", cos.alias("cos")),
+        5,
+    ).select("probe_id", "cell", "vec_id", F.round("cos", 6).alias("cosine"), "rk")
 
 
 K_CLUSTERS = 4
@@ -572,11 +571,7 @@ def assign_nearest(emb: DataFrame, cents: DataFrame, k: int) -> DataFrame:
         F.col("c").alias("gc"),
         F.col("csq").alias("gcsq"),
     )
-    gdist_c = (
-        F.col("csq")
-        - 2 * F.expr(_DOT.format(a="c", b="gc"))
-        + F.col("gcsq")
-    )
+    gdist_c = squared_l2("c", "gc", "csq", "gcsq")
     cw = Window.partitionBy("cid").orderBy("gdist", "gid")
     c2s = (
         cents.crossJoin(F.broadcast(seeds))
@@ -585,9 +580,7 @@ def assign_nearest(emb: DataFrame, cents: DataFrame, k: int) -> DataFrame:
         .where(F.col("grk") == 1)
         .select("gid", "cid", "c", "csq")
     )
-    gdist_v = (
-        F.col("sq") - 2 * F.expr(_DOT.format(a="v", b="gc")) + F.col("gcsq")
-    )
+    gdist_v = squared_l2("v", "gc", "sq", "gcsq")
     vw = Window.partitionBy("vec_id").orderBy("gdist", "gid")
     v2s = (
         emb.crossJoin(F.broadcast(seeds))
@@ -596,9 +589,7 @@ def assign_nearest(emb: DataFrame, cents: DataFrame, k: int) -> DataFrame:
         .where(F.col("grk") == 1)
         .drop("gc", "gcsq", "gdist", "grk")
     )
-    dist = (
-        F.col("sq") - 2 * F.expr(_DOT.format(a="v", b="c")) + F.col("csq")
-    )
+    dist = squared_l2("v", "c", "sq", "csq")
     w = Window.partitionBy("vec_id").orderBy("dist", "cid")
     return (
         v2s.join(F.broadcast(c2s), "gid")
@@ -614,10 +605,7 @@ def _nearest(emb: DataFrame, cents: DataFrame) -> DataFrame:
     dot-product identity ||v-c||^2 = v.v - 2 v.c + c.c; the fold order
     matches DuckDB's list_dot_product for exact parity)."""
     scored = emb.crossJoin(F.broadcast(cents)).withColumn(
-        "dist",
-        F.col("sq")
-        - 2 * F.expr(_DOT.format(a="v", b="c"))
-        + F.col("csq"),
+        "dist", squared_l2("v", "c", "sq", "csq")
     )
     w = Window.partitionBy("vec_id").orderBy("dist", "cid")
     return (
@@ -651,7 +639,7 @@ def _lloyd_c1(emb: DataFrame, k: int = K_CLUSTERS, assign_fn=None) -> DataFrame:
         F.expr("transform(sort_array(collect_list(struct(pos, m))), t -> t.m)")
         .alias("c")
     )
-    return c1.withColumn("csq", F.expr(_DOT.format(a="c", b="c")))
+    return c1.withColumn("csq", dot("c", "c"))
 
 
 @register(
@@ -739,16 +727,8 @@ def sim_ivf_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     c1 = _lloyd_c1(emb)
     members = _nearest(emb, c1).select("vec_id", "cid", "v", "sq")
-    probes = emb.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("v").alias("pv"),
-        F.col("sq").alias("psq"),
-    )
-    pdist = (
-        F.col("psq")
-        - 2 * F.expr(_DOT.format(a="pv", b="c"))
-        + F.col("csq")
-    )
+    probes = probe_rows(emb)
+    pdist = squared_l2("pv", "c", "psq", "csq")
     w_cell = Window.partitionBy("probe_id").orderBy("pdist", "cid")
     passign = (
         probes.join(F.broadcast(c1), F.lit(True))
@@ -757,11 +737,8 @@ def sim_ivf_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("crk") == 1)
         .drop("pdist", "crk")
     )
-    cos = F.expr(_DOT.format(a="pv", b="v")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("sq"))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
+    cos = cosine_similarity("pv", "v", "psq", "sq")
+    return top_k_per_probe(
         F.broadcast(passign)
         .join(
             members,
@@ -772,11 +749,9 @@ def sim_ivf_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             passign.cid.cast("bigint").alias("cluster_id"),
             "vec_id",
             cos.alias("cos"),
-        )
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= 5)
-        .select("probe_id", "cluster_id", "vec_id", F.round("cos", 6).alias("cosine"), "rk")
-    )
+        ),
+        5,
+    ).select("probe_id", "cluster_id", "vec_id", F.round("cos", 6).alias("cosine"), "rk")
 
 
 RECALL_ORACLE = f"""
@@ -912,7 +887,7 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sub",
             F.expr(f"slice(v, sub * {SUB_DIM} + 1, {SUB_DIM})").alias("sv"),
         )
-        .withColumn("ssq", F.expr(_DOT.format(a="sv", b="sv")))
+        .withColumn("ssq", dot("sv", "sv"))
     )
     c0 = subs.where(F.col("vec_id") < PQ_K).select(
         "sub", F.col("vec_id").alias("cid"), F.col("sv").alias("c"),
@@ -921,8 +896,7 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def nearest(cb: DataFrame) -> DataFrame:
         scored = subs.join(F.broadcast(cb), "sub").withColumn(
-            "dist",
-            F.col("ssq") - 2 * F.expr(_DOT.format(a="sv", b="c")) + F.col("csq"),
+            "dist", squared_l2("sv", "c", "ssq", "csq")
         )
         w = Window.partitionBy("vec_id", "sub").orderBy("dist", "cid")
         return (
@@ -949,7 +923,7 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "transform(sort_array(collect_list(struct(pos, m))), t -> t.m)"
             ).alias("c")
         )
-        .withColumn("csq", F.expr(_DOT.format(a="c", b="c")))
+        .withColumn("csq", dot("c", "c"))
     )
     a2 = nearest(c1)
     return (
@@ -1262,16 +1236,8 @@ def sim_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = emb.select(
         "vec_id", F.col("v").alias("cv"), F.col("sq").alias("csq")
     )
-    probes = F.broadcast(
-        emb.where(F.col("vec_id") < N_PROBES).select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("v").alias("pv"),
-            F.col("sq").alias("psq"),
-        )
-    )
-    cos = F.expr(_DOT.format(a="pv", b="cv")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("csq"))
-    )
+    probes = F.broadcast(probe_rows(emb))
+    cos = cosine_similarity("pv", "cv", "psq", "csq")
     w = Window.partitionBy("probe_id").orderBy(
         F.col("cos").desc(), F.col("vec_id")
     )
@@ -1408,16 +1374,13 @@ def sim_sq_int8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         " (x, y) -> cast(x as bigint) * cast(y as bigint)),"
         " 0L, (acc, t) -> acc + t)"
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("qdot").desc(), F.col("vec_id")
-    )
-    return (
-        probes.join(q, F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id", qdot.alias("qdot"))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= TOP_K)
-        .select("probe_id", "vec_id", "qdot", "rk")
-    )
+    return top_k_per_probe(
+        probes.join(q, F.col("vec_id") != F.col("probe_id")).select(
+            "probe_id", "vec_id", qdot.alias("qdot")
+        ),
+        TOP_K,
+        "qdot",
+    ).select("probe_id", "vec_id", "qdot", "rk")
 
 
 # ---------------------------------------------------------------------------
@@ -1502,9 +1465,7 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sq").alias("psq"),
         )
     )
-    cos = F.expr(_DOT.format(a="pv", b="vd")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("sq"))
-    )
+    cos = cosine_similarity("pv", "vd", "psq", "sq")
     w = Window.partitionBy("dim", "probe_id").orderBy(
         F.col("cos").desc(), F.col("vec_id")
     )
@@ -1666,14 +1627,8 @@ def sim_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probes and the exact baseline both read the pinned members frame
     # (it carries full-precision v + sq) instead of opening fresh corpus
     # scans -- same values, zero extra reads
-    probes = members.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("v").alias("pv"),
-        F.col("sq").alias("psq"),
-    )
-    pdist = (
-        F.col("psq") - 2 * F.expr(_DOT.format(a="pv", b="c")) + F.col("csq")
-    )
+    probes = probe_rows(members)
+    pdist = squared_l2("pv", "c", "psq", "csq")
     w_cell = Window.partitionBy("probe_id").orderBy("pdist", "cid")
     passign = (
         probes.join(F.broadcast(c1), F.lit(True))
@@ -1688,9 +1643,7 @@ def sim_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanout = passign.select(steps, "probe_id", "pv", "psq", "cid", "crk").where(
         F.col("crk") <= F.col("nprobe")
     )
-    cos = F.expr(_DOT.format(a="pv", b="v")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("sq"))
-    )
+    cos = cosine_similarity("pv", "v", "psq", "sq")
     w = Window.partitionBy("nprobe", "probe_id").orderBy(
         F.col("cos").desc(), F.col("vec_id")
     )
@@ -1837,16 +1790,8 @@ from ({" union all ".join(f"select * from sel{t}" for t in range(1, MMR_K + 1))}
 )
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    probes = F.broadcast(
-        emb.where(F.col("vec_id") < N_PROBES).select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("v").alias("pv"),
-            F.col("sq").alias("psq"),
-        )
-    )
-    cos = F.expr(_DOT.format(a="pv", b="v")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("sq"))
-    )
+    probes = F.broadcast(probe_rows(emb))
+    cos = cosine_similarity("pv", "v", "psq", "sq")
     w = Window.partitionBy("probe_id").orderBy(
         F.col("rel").desc(), F.col("vec_id")
     )
@@ -1864,9 +1809,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("bv"),
         F.col("sq").alias("bsq"),
     )
-    sim = F.expr(_DOT.format(a="v", b="bv")) / (
-        F.sqrt(F.col("sq")) * F.sqrt(F.col("bsq"))
-    )
+    sim = cosine_similarity("v", "bv", "sq", "bsq")
     sims = (
         cand.join(
             b,

@@ -46,8 +46,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clueso_spark.functions.vectors import cosine_similarity, dot
 from clueso_spark.plans.catalog import persist_swap, register
-from clueso_spark.plans.similarity_queries import _DOT, DIM, N_PROBES
+from clueso_spark.plans.similarity_queries import DIM, N_PROBES, probe_rows
 from clueso_spark.plans.staged_r11 import _DAY_US
 from clueso_spark.plans.staged_r12 import (
     _GC_CHUNK_CTES,
@@ -192,7 +193,7 @@ def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
         )
         .withColumn("tenant", _md5_mod(F.col("vec_id").cast("string"), _FANN_TENANTS))
-        .withColumn("sq", F.expr(_DOT.format(a="v", b="v")))
+        .withColumn("sq", dot("v", "v"))
     )
     emb = persist_swap(spark, "fann_emb", emb)
     # decimal-exact per-cell centroids (the sim_ivf_cells discipline:
@@ -212,17 +213,12 @@ def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("cell"),
             F.expr("transform(pm, x -> x.m)").alias("cv"),
         )
-        .withColumn("csq", F.expr(_DOT.format(a="cv", b="cv")))
+        .withColumn("csq", dot("cv", "cv"))
     )
-    probes = emb.where(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("v").alias("pv"),
-        F.col("sq").alias("psq"),
-        (F.col("vec_id") % _FANN_TENANTS).alias("target"),
+    probes = probe_rows(
+        emb, (F.col("vec_id") % _FANN_TENANTS).alias("target")
     )
-    ccos = F.expr(_DOT.format(a="pv", b="cv")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("csq"))
-    )
+    ccos = cosine_similarity("pv", "cv", "psq", "csq")
     w_cell = Window.partitionBy("probe_id").orderBy(
         F.col("ccos").desc(), F.col("cell")
     )
@@ -233,9 +229,7 @@ def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("crk") <= _FANN_NPROBE)
         .drop("ccos", "crk")
     )
-    cos = F.expr(_DOT.format(a="pv", b="v")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("sq"))
-    )
+    cos = cosine_similarity("pv", "v", "psq", "sq")
     cand = persist_swap(
         spark,
         "fann_cand",
@@ -266,9 +260,6 @@ def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # exact ground truth over the tenant slice: probes broadcast, the
     # slice scanned once (the sanctioned tiny-broadcast NLJ shape)
-    tcos = F.expr(_DOT.format(a="pv", b="v")) / (
-        F.sqrt(F.col("psq")) * F.sqrt(F.col("sq"))
-    )
     truth = persist_swap(
         spark,
         "fann_truth",
@@ -278,7 +269,7 @@ def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("tenant") == F.col("target"))
             & (F.col("vec_id") != F.col("probe_id")),
         )
-        .select("probe_id", "vec_id", tcos.alias("cos"))
+        .select("probe_id", "vec_id", cos.alias("cos"))
         .withColumn("rk", F.row_number().over(w_rank))
         .where(F.col("rk") <= _FANN_TOPK)
         .select("probe_id", "vec_id"),

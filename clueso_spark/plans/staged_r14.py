@@ -51,8 +51,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clueso_spark.functions.vectors import cosine_similarity
 from clueso_spark.plans.catalog import register
-from clueso_spark.plans.similarity_queries import N_PROBES
+from clueso_spark.plans.similarity_queries import (
+    N_PROBES,
+    probe_rows,
+    top_k_per_probe,
+)
 
 _HOUR_US = 3_600_000_000
 
@@ -185,10 +190,10 @@ def _outer_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # zero shuffles before the final per-probe top-k window
 # (TakeOrdered-shaped: 5 x TOP_K rows). Determinism: each 8-dim dot
 # is the same left-fold both engines proved bit-identical for the
-# similarity tier (_DOT vs list_dot_product); array_max picks the
-# same element; the outer sum left-folds doubles in sub-vector order
-# (Spark aggregate === DuckDB list_reduce), so every score is
-# bit-identical without decimal bridging.
+# similarity tier (functions.vectors.dot vs list_dot_product);
+# array_max picks the same element; the outer sum left-folds doubles
+# in sub-vector order (Spark aggregate === DuckDB list_reduce), so
+# every score is bit-identical without decimal bridging.
 # ---------------------------------------------------------------------------
 
 _MV_SUB = 8  # sub-vectors per embedding
@@ -259,22 +264,15 @@ def sim_colbert_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("score").desc(), F.col("vec_id")
-    )
-    return (
-        probes.join(emb, F.col("vec_id") != F.col("probe_id"))
-        .select(
+    return top_k_per_probe(
+        probes.join(emb, F.col("vec_id") != F.col("probe_id")).select(
             "probe_id",
             "vec_id",
             F.expr(_maxsim_expr("pv", "v")).alias("score"),
-        )
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rk") <= _MV_TOPK)
-        .select(
-            "probe_id", "vec_id", F.round("score", 6).alias("maxsim"), "rk"
-        )
-    )
+        ),
+        _MV_TOPK,
+        "score",
+    ).select("probe_id", "vec_id", F.round("score", 6).alias("maxsim"), "rk")
 
 
 # ---------------------------------------------------------------------------
@@ -388,18 +386,8 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # dense arm: cosine top-R, the tier's proven-identical arithmetic
     emb = _emb(spark, sf_dir)
-    dprobes = F.broadcast(
-        emb.where(F.col("vec_id") < N_PROBES).select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("v").alias("pv"),
-            F.col("sq").alias("psq"),
-        )
-    )
-    dot = (
-        "aggregate(zip_with(pv, v, (x, y) -> x * y), 0D, "
-        "(acc, t) -> acc + t)"
-    )
-    cos = F.expr(dot) / (F.sqrt(F.col("psq")) * F.sqrt(F.col("sq")))
+    dprobes = F.broadcast(probe_rows(emb))
+    cos = cosine_similarity("pv", "v", "psq", "sq")
     dw = Window.partitionBy("probe_id").orderBy(
         F.col("cos").desc(), F.col("id")
     )

@@ -42,12 +42,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the similarity tier's left-fold cosine, imported (not copied) so the
+# "bit-identical shared arithmetic" parity claim cannot drift
+from clueso_spark.functions.vectors import cosine_similarity
 from clueso_spark.plans.catalog import register
-
-# the similarity tier's left-fold dot product, imported (not copied) so
-# the "bit-identical shared arithmetic" parity claim cannot drift
-# (ADVICE r14)
-from clueso_spark.plans.similarity_queries import _DOT
 
 _TRIPLET_ANCHORS = 8
 #: margin between the positive's cosine and the hardest admissible
@@ -70,9 +68,7 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sq").alias("asq"),
         )
     )
-    cos = F.expr(_DOT.format(a="av", b="v")) / (
-        F.sqrt(F.col("asq")) * F.sqrt(F.col("sq"))
-    )
+    cos = cosine_similarity("av", "v", "asq", "sq")
     return anchors.join(emb, F.col("vec_id") != F.col("anchor_id")).select(
         "anchor_id", "vec_id", cos.alias("cos")
     )

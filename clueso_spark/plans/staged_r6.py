@@ -31,6 +31,10 @@ from pyspark.sql import functions as F
 
 from clueso_spark.functions.text import stopword_count, tokens
 from clueso_spark.plans.catalog import register
+from clueso_spark.plans.dedup_queries import (
+    _emb_oracle_valid,
+    _ngram_oracle_valid,
+)
 from clueso_spark.plans.text_queries import _SW
 from clueso_spark.sources.tables import load_table, load_table_spread
 
@@ -337,19 +341,6 @@ def _knn_oracle(planes: int | None = None) -> str:
     """
 
 
-def _knn_oracle_valid(sf_dir: str) -> bool:
-    from clueso_spark.plans.dedup_queries import (
-        EMB_PLANES_PER_BAND,
-        _emb_planes,
-        table_row_count,
-    )
-
-    return (
-        _emb_planes(table_row_count(sf_dir, "embeddings"))
-        == EMB_PLANES_PER_BAND
-    )
-
-
 def _adaptive_planes(sf_dir: str) -> int:
     from clueso_spark.plans.dedup_queries import (
         _emb_planes,
@@ -382,18 +373,15 @@ def _range_adaptive_oracle(sf_dir: str) -> str | None:
     "vectors re-attach by two plain equi-joins the planner sizes.",
     _knn_oracle(),
     "similarity", "ann", "lsh", "join",
-    oracle_valid=_knn_oracle_valid,
+    oracle_valid=_emb_oracle_valid,
     oracle_adaptive=_knn_adaptive_oracle,
 )
 def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clueso_spark.functions.vectors import (
-        lsh_bucket,
-        to_double_array,
-    )
+    from clueso_spark.functions.vectors import to_double_array
     from clueso_spark.plans.dedup_queries import (
-        EMB_BANDS,
-        _bucket_pairs,
         _emb_planes,
+        cosine_pairs,
+        lsh_band_pairs,
         table_row_count,
     )
 
@@ -401,24 +389,10 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding", to_double_array("embedding").alias("v")
     )
     planes = _emb_planes(table_row_count(sf_dir, "embeddings"))
-    bands = [
-        lsh_bucket("embedding", planes, 64, first_plane=k * planes).alias(
-            f"bk{k}"
-        )
-        for k in range(EMB_BANDS)
-    ]
-    stack_args = ", ".join(f"{k}, bk{k}" for k in range(EMB_BANDS))
-    long = emb.select("vec_id", *bands).select(
-        "vec_id",
-        F.expr(f"stack({EMB_BANDS}, {stack_args}) as (band, bucket)"),
-    )
-    half = _bucket_pairs(
-        long, ["band", "bucket"], "vec_id", "vec_a", "vec_b"
-    ).distinct()
     # score each UNDIRECTED pair once (cos is symmetric), then emit both
     # arcs of the directed neighbor graph from the scored rows -- halves
     # the vector-attach join volume vs symmetrizing before scoring
-    scored = _score_half_pairs(emb, half)
+    scored = cosine_pairs(emb, lsh_band_pairs(emb, planes))
     directed = scored.select(
         F.col("vec_a").alias("vec_id"),
         F.col("vec_b").alias("neighbor_id"),
@@ -438,33 +412,6 @@ def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rk") <= KNN_K)
         .select(
             "vec_id", "neighbor_id", F.round("cos", 6).alias("cosine"), "rk"
-        )
-    )
-
-
-def _score_half_pairs(emb: DataFrame, half: DataFrame) -> DataFrame:
-    """Exact cosine for each undirected candidate pair ``(vec_a, vec_b)``
-    via two planner-sized equi-joins re-attaching the vectors."""
-    from clueso_spark.functions.vectors import squared_norm
-
-    n = emb.withColumn("sq", squared_norm("v")).select("vec_id", "v", "sq")
-    x = n.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("v").alias("vx"),
-        F.col("sq").alias("sqx"),
-    )
-    y = n.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("vy"),
-        F.col("sq").alias("sqy"),
-    )
-    cos = F.expr(
-        "aggregate(zip_with(vx, vy, (a, b) -> a * b), 0D,"
-        " (acc, t) -> acc + t)"
-    ) / (F.sqrt(F.col("sqx")) * F.sqrt(F.col("sqy")))
-    return (
-        half.join(x, "vec_a").join(y, "vec_b").select(
-            "vec_a", "vec_b", cos.alias("cos")
         )
     )
 
@@ -827,14 +774,6 @@ def _containment_oracle(
     """
 
 
-def _containment_oracle_valid(sf_dir: str) -> bool:
-    """Oracle replicates the 16-bit floor sketch (same domain guard as
-    dedup_ngram_jaccard)."""
-    from clueso_spark.plans.dedup_queries import _ngram_oracle_valid
-
-    return _ngram_oracle_valid(sf_dir)
-
-
 def _containment_adaptive_oracle(sf_dir: str) -> str | None:
     """Cap-replicating, width-adaptive containment oracle (round 15):
     same domain as the ngram adaptive builders -- any bucket
@@ -858,7 +797,9 @@ def _containment_adaptive_oracle(sf_dir: str) -> str | None:
     "prefix filtering was rejected on this corpus family.",
     _containment_oracle(),
     "dedup", "containment", "simhash",
-    oracle_valid=_containment_oracle_valid,
+    # the oracle replicates the 16-bit floor sketch: same domain guard
+    # as dedup_ngram_jaccard
+    oracle_valid=_ngram_oracle_valid,
     oracle_adaptive=_containment_adaptive_oracle,
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1179,44 +1120,29 @@ def _range_oracle(planes: int | None = None) -> str:
     "partial-aggregated count per vector.",
     _range_oracle(),
     "similarity", "ann", "lsh", "aggregate",
-    oracle_valid=_knn_oracle_valid,
+    oracle_valid=_emb_oracle_valid,
     oracle_adaptive=_range_adaptive_oracle,
 )
 def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clueso_spark.functions.vectors import (
-        lsh_bucket,
-        to_double_array,
-    )
+    from clueso_spark.functions.vectors import to_double_array
     from clueso_spark.plans.dedup_queries import (
-        EMB_BANDS,
-        _bucket_pairs,
         _emb_planes,
+        cosine_pairs,
+        lsh_band_pairs,
+        table_row_count,
     )
-    from clueso_spark.sources.tables import table_row_count
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", to_double_array("embedding").alias("v")
     )
     planes = _emb_planes(table_row_count(sf_dir, "embeddings"))
-    bands = [
-        lsh_bucket("embedding", planes, 64, first_plane=k * planes).alias(
-            f"bk{k}"
-        )
-        for k in range(EMB_BANDS)
-    ]
-    stack_args = ", ".join(f"{k}, bk{k}" for k in range(EMB_BANDS))
-    long = emb.select("vec_id", *bands).select(
-        "vec_id",
-        F.expr(f"stack({EMB_BANDS}, {stack_args}) as (band, bucket)"),
-    )
-    half = _bucket_pairs(
-        long, ["band", "bucket"], "vec_id", "vec_a", "vec_b"
-    ).distinct()
     # score each undirected pair once, FILTER at the threshold, then
     # emit both arcs from the (much smaller) surviving set -- the
     # pre-scoring symmetrization would double the join volume and defer
     # the radius filter past it
-    scored = _score_half_pairs(emb, half).where(F.col("cos") >= _RANGE_TAU)
+    scored = cosine_pairs(emb, lsh_band_pairs(emb, planes)).where(
+        F.col("cos") >= _RANGE_TAU
+    )
     directed = scored.select(
         F.col("vec_a").alias("vec_id"), "cos"
     ).unionByName(scored.select(F.col("vec_b").alias("vec_id"), "cos"))

@@ -9,12 +9,18 @@ from __future__ import annotations
 
 import importlib
 import json
+from pathlib import Path
 
 import pytest
 
 from clueso_spark.plans.catalog import REGISTRY, CatalogQuery
 from clueso_spark.session import get_spark
 from clueso_spark.sources.store import MetadataStore
+
+#: the checkout these tests run in: tests load ``tools/`` and
+#: ``bench.py`` from it, so a second checkout (a parent-commit copy for
+#: an A/B) tests its own code
+REPO_ROOT = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="session")

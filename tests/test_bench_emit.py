@@ -26,8 +26,10 @@ import pytest
 
 @pytest.fixture()
 def bench(tmp_path, monkeypatch):
+    from tests.conftest import REPO_ROOT
+
     spec = importlib.util.spec_from_file_location(
-        "bench_under_test", "/root/repo/bench.py"
+        "bench_under_test", str(REPO_ROOT / "bench.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

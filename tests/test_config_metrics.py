@@ -57,6 +57,33 @@ def test_build_engine_and_metrics(spark, tmp_path):
     assert executor.last_explain and "Physical Plan" in executor.last_explain
 
 
+def test_pages_count_every_page_in_search_metrics(spark, tmp_path):
+    """pages() materializes each page through the instrumented
+    execute_collected path: N pages move search_count.<bucket> by N."""
+    cfg = CluesoSparkConfig(
+        store_root=str(tmp_path / "store"), cache_dataframes=False
+    )
+    store, executor, _ = build_engine(spark, cfg)
+    executor.metrics = SearchMetrics()
+    keys = [f"k{i}" for i in range(5)]
+    store.write_landing(
+        parse_events(
+            raw_df(
+                spark,
+                [
+                    wire_event(op(i + 1), "put", "pb", k, put_doc(k, "pb"))
+                    for i, k in enumerate(keys)
+                ],
+            ),
+            compaction_record_interval=10,
+        )
+    )
+    pages = list(executor.pages(MetadataQuery("pb", "", None, 2)))
+    assert [r["key"] for page in pages for r in page] == keys
+    assert len(pages) == 3  # 2 + 2 + 1: the short page ends the scan
+    assert executor.metrics.snapshot()["search_count.pb"] == len(pages)
+
+
 def test_default_driver_memory_sized_from_host():
     """The driver heap is half the host's memory, capped at 32g and
     floored at 1g; SPARK_GRAFT_DRIVER_MEM overrides it."""

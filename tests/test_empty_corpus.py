@@ -26,7 +26,9 @@ GUARDED = [
 def empty_sf(tmp_path_factory):
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    from tests.conftest import REPO_ROOT
+
+    sys.path.insert(0, str(REPO_ROOT / "tools"))
     from empty_sweep import write_empty_corpus
 
     return write_empty_corpus(str(tmp_path_factory.mktemp("empty_sf")))

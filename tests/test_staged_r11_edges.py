@@ -20,7 +20,9 @@ QUERIES = registered_by("clueso_spark.plans.staged_r11")
 def empty_sf(tmp_path_factory):
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    from tests.conftest import REPO_ROOT
+
+    sys.path.insert(0, str(REPO_ROOT / "tools"))
     from empty_sweep import write_empty_corpus
 
     return write_empty_corpus(str(tmp_path_factory.mktemp("empty_r11")))

@@ -403,7 +403,9 @@ def test_staged_empty_corpus_returns_not_raises(spark, tmp_path_factory):
     a corpus with zero rows in every table."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    from tests.conftest import REPO_ROOT
+
+    sys.path.insert(0, str(REPO_ROOT / "tools"))
     from empty_sweep import write_empty_corpus
 
     sf = write_empty_corpus(str(tmp_path_factory.mktemp("empty_r14")))

@@ -77,20 +77,29 @@ def test_perfbench_ab_gain_rule():
 
 
 def test_tools_put_no_absolute_path_on_sys_path():
-    """A tool run from a second checkout (say, a parent-commit copy for
-    an A/B) must import that checkout's engine, so tools derive the
-    repo root from __file__ instead of naming a fixed path."""
+    """A tool or test run from a second checkout (say, a parent-commit
+    copy for an A/B) must import that checkout's engine, tools and
+    bench.py, so tools and tests derive the repo root from __file__
+    instead of naming a fixed path -- neither on sys.path nor as a
+    spec_from_file_location target."""
     import ast
     from pathlib import Path
 
-    tools = Path(__file__).resolve().parents[1] / "tools"
+    root = Path(__file__).resolve().parents[1]
     bad = []
-    for path in sorted(tools.glob("*.py")):
+    for path in sorted([*root.glob("tools/*.py"), *root.glob("tests/*.py")]):
         for node in ast.walk(ast.parse(path.read_text())):
             if (
                 isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and ast.unparse(node.func.value) == "sys.path"
+                and (
+                    (
+                        isinstance(node.func, ast.Attribute)
+                        and ast.unparse(node.func.value) == "sys.path"
+                    )
+                    or ast.unparse(node.func).endswith(
+                        "spec_from_file_location"
+                    )
+                )
                 and any(
                     isinstance(a, ast.Constant)
                     and isinstance(a.value, str)
@@ -98,5 +107,5 @@ def test_tools_put_no_absolute_path_on_sys_path():
                     for a in node.args
                 )
             ):
-                bad.append(f"{path.name}:{node.lineno}")
+                bad.append(f"{path.parent.name}/{path.name}:{node.lineno}")
     assert bad == []
