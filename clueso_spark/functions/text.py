@@ -61,6 +61,16 @@ def word_shingles(words_col: str = "words", k: int = 3) -> Column:
     )
 
 
+def jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard |A∩B| / |A∪B| of two distinct-element array
+    columns, as a double -- the dedup tier's one set-similarity score.
+    The DuckDB oracles spell it ``len(list_intersect(x, y))::double /
+    len(list_distinct(x || y))``; both divide the same two integers."""
+    return F.size(F.array_intersect(a, b)).cast("double") / F.size(
+        F.array_union(a, b)
+    )
+
+
 def doc_fingerprint(text_col: str = "text") -> Column:
     """Exact-dedup fingerprint: md5 of the lowercased text."""
     return F.md5(F.lower(F.col(text_col)))

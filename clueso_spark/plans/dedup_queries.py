@@ -10,6 +10,17 @@ Scale design (the whole point of these operators at 100 TB):
     lexicographically comparable -- which is what lets a DuckDB oracle
     verify the exact same LSH algorithm end-to-end.
   * Verification (exact Jaccard) runs only on surviving candidates.
+
+One copy of each set-similarity step, which every dedup-tier query
+(here and in the ``staged_r*`` modules) calls: ``functions.text.jaccard``
+is the only Jaccard score, :func:`shingle_sets` the only word-3-shingle
+set projection, :func:`minhash_band_rows` the only (doc, band, sig) row
+build, and :func:`simhash_word_pairs` the only simhash-blocked word-set
+pair builder. On the oracle side, :func:`_minhash_bands_sql` is the
+only shingle + minhash band SQL, :func:`_simhash_sketch_sql` the only
+sketch SQL and :func:`_ngram_pair_ctes` the only n-gram pair CTE chain,
+each n-gram oracle built by the function that also builds its
+sf-adaptive variant.
 """
 
 from __future__ import annotations
@@ -19,7 +30,12 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clueso_spark.functions.text import STOPWORDS, tokens, word_shingles
+from clueso_spark.functions.text import (
+    STOPWORDS,
+    jaccard,
+    tokens,
+    word_shingles,
+)
 from clueso_spark.functions.vectors import (
     cosine_similarity,
     lsh_bucket,
@@ -133,25 +149,40 @@ def dedup_exact_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_ORACLE = f"""
-with t as (select doc_id, string_split(text, ' ') w from documents),
-sh as (
-  select distinct doc_id,
+def _minhash_bands_sql(
+    extra: str = "", r: str = "b", name: str = "bands", indent: str = ""
+) -> str:
+    """DuckDB replica of :func:`shingle_sets` + :func:`minhash_band_rows`
+    over a ``t(doc_id, w, ...)`` CTE: ``sh`` holds the distinct
+    (doc, shingle) rows and ``name`` the (doc, band, sig) rows of the
+    minhash_band_sigs family. ``extra`` columns ride along, ``r`` names
+    the band range (``bb`` where ``b`` is a column), and ``indent``
+    prefixes every line after the first, so each oracle that embeds
+    the CTEs keeps its text byte for byte."""
+    cols = f"doc_id, {extra}" if extra else "doc_id"
+    sql = f"""sh as (
+  select distinct {cols},
          unnest(list_transform(range(1, len(w) - 1),
                 i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) as shingle
   from t where len(w) >= 3
 ),
-bands as (
-  select doc_id, b.range as band,
+{name} as (
+  select {cols}, {r}.range as band,
          min(substr(md5(shingle) || md5('~' || shingle)
                     || md5('#' || shingle) || md5('@' || shingle),
-                    cast(b.range * 16 + 1 as int), 8))
+                    cast({r}.range * 16 + 1 as int), 8))
          || min(substr(md5(shingle) || md5('~' || shingle)
                        || md5('#' || shingle) || md5('@' || shingle),
-                       cast(b.range * 16 + 9 as int), 8)) as sig
-  from sh cross join range({N_BANDS}) b
-  group by doc_id, b.range
-),
+                       cast({r}.range * 16 + 9 as int), 8)) as sig
+  from sh cross join range({N_BANDS}) {r}
+  group by {cols}, {r}.range
+)"""
+    return sql.replace("\n", "\n" + indent)
+
+
+_MINHASH_ORACLE = f"""
+with t as (select doc_id, string_split(text, ' ') w from documents),
+{_minhash_bands_sql()},
 cand as (
   select distinct a.doc_id as doc_a, b.doc_id as doc_b
   from bands a join bands b on a.band = b.band and a.sig = b.sig
@@ -215,6 +246,27 @@ def minhash_band_sigs(ss_col: str = "ss") -> Column:
     )
 
 
+def shingle_sets(docs: DataFrame, *extra: str | Column) -> DataFrame:
+    """Distinct word-3-shingle sets ``(doc_id, *extra, ss)`` of a
+    ``(doc_id, w)`` tokenized relation. Docs under 3 words have no
+    shingle and are dropped up front (cheap pre-filter); ``extra``
+    columns ride along (a split key, a snapshot bucket)."""
+    return docs.where(F.size("w") >= 3).select(
+        "doc_id", *extra, F.array_distinct(word_shingles("w", 3)).alias("ss")
+    )
+
+
+def minhash_band_rows(sets: DataFrame, *extra: str) -> DataFrame:
+    """One ``(doc_id, *extra, band, sig)`` row per band of each shingle
+    set: the :func:`minhash_band_sigs` fold, then a posexplode. The
+    rows carry no shingle payload -- the 8x explode must NOT carry the
+    shingle arrays, or the band shuffle payload multiplies by 8."""
+    sigs = sets.select("doc_id", *extra, minhash_band_sigs().alias("sigs"))
+    return sigs.select(
+        "doc_id", *extra, F.posexplode("sigs").alias("band", "sig")
+    )
+
+
 def minhash_pairs(
     spark: SparkSession, docs: DataFrame, slot: str = "minhash_sets"
 ) -> DataFrame:
@@ -229,13 +281,10 @@ def minhash_pairs(
     ``slot`` names the persist slot so a composed caller and the
     standalone query never evict each other's intermediates.
     """
-    sets = docs.where(F.size("w") >= 3).select(  # cheap pre-filter
-        "doc_id", F.array_distinct(word_shingles("w", 3)).alias("ss")
-    )
     # two consumers read the shingle sets (the band branch below and the
     # verification join at the end); persist so tokenize+shingle runs
     # ONCE instead of twice (per-session slot bookkeeping: _persist_swap)
-    sets = _persist_swap(spark, slot, sets)
+    sets = _persist_swap(spark, slot, shingle_sets(docs))
     # hash every shingle FOUR times (4 x 32 hex = 16 disjoint 8-hex
     # slices); each band ANDs r=2 independent minhashes (min over two
     # slices, concatenated) -- 4 md5 + 16 substrings per shingle, not 16
@@ -258,12 +307,7 @@ def minhash_pairs(
     # while `acc` is still a lambda variable -- pairing in a later
     # projection would reference the fold column 8-16 times and re-inline
     # (re-run) the whole fold per reference
-    sigs = minhash_band_sigs()
-    # band rows stay (doc_id, band, sig) -- the 8x explode must NOT carry
-    # the shingle arrays, or the band shuffle payload multiplies by 8
-    long = sets.select("doc_id", sigs.alias("sigs")).select(
-        "doc_id", F.posexplode("sigs").alias("band", "sig")
-    )
+    long = minhash_band_rows(sets)
     # candidate pairs via ONE shuffle on (band, sig); distinct because a
     # pair can collide in several bands
     cand = _bucket_pairs(
@@ -281,45 +325,11 @@ def minhash_pairs(
         F.min_by("ss", "doc_id").alias("ss_a"),
         F.max_by("ss", "doc_id").alias("ss_b"),
     )
-    jac = F.size(F.array_intersect("ss_a", "ss_b")).cast("double") / F.size(
-        F.array_union("ss_a", "ss_b")
-    )
     return joined.select(
         F.col("pair.doc_a").alias("doc_a"),
         F.col("pair.doc_b").alias("doc_b"),
-        jac.alias("jaccard"),
+        jaccard("ss_a", "ss_b").alias("jaccard"),
     ).where(F.col("jaccard") >= 0.5)
-
-
-#: DuckDB replica of the per-doc 16-bit simhash sketch, shared by the
-#: simhash dedup oracle and the simhash-blocked Jaccard oracle.
-_SIMHASH_SKETCH_SQL = """
-words as (
-  select distinct doc_id, unnest(string_split(text, ' ')) as word from documents
-),
-sums as (
-  select doc_id, {sums}
-  from words group by doc_id
-),
-sk as (select doc_id, {bits} as simhash from sums)
-""".format(
-    sums=", ".join(
-        "sum(case when strpos('0123456789abcdef', substr(md5(word), {p}, 1)) - 1 >= 8"
-        " then 1 else -1 end) as s{j}".format(p=j + 1, j=j)
-        for j in range(16)
-    ),
-    bits="concat("
-    + ", ".join(f"case when s{j} >= 0 then '1' else '0' end" for j in range(16))
-    + ")",
-)
-
-_SIMHASH_ORACLE = f"""
-with {_SIMHASH_SKETCH_SQL}
-select simhash,
-       cast(count(*) as bigint) as n_docs,
-       string_agg(doc_id, ',' order by doc_id) as doc_ids
-from sk group by simhash having count(*) > 1
-"""
 
 
 #: md5 salts for sketch widths past one digest's 32 nibbles (widths up
@@ -363,6 +373,59 @@ def _simhash_sketches(docs: DataFrame, bits: int = 16) -> DataFrame:
     return docs.select("doc_id", fold.alias("_sums")).select(
         "doc_id", sbits.alias("simhash")
     )
+
+
+def _simhash_sketch_sql(bits: int = 16) -> str:
+    """DuckDB replica of :func:`_simhash_sketches` as the ``words`` /
+    ``sums`` / ``sk`` CTEs: bit j's weight is the sign of nibble j of
+    the salted-md5 concatenation (md5(word) || md5('~'||word) || ...),
+    so the sketch string is bit-for-bit identical to the Spark side at
+    any width the engine can produce. The 16-bit default is the
+    sketch dedup_simhash and the ngram floor oracles replicate; width
+    parity is pinned at 32 and 48 bits by
+    tests/test_adaptive_oracles.py."""
+    n_md5 = -(-bits // 32)
+    if n_md5 > len(_SKETCH_SALTS):
+        raise ValueError(
+            f"sketch width {bits} > {32 * len(_SKETCH_SALTS)} bits"
+        )
+    digests = [
+        "md5(word)" if s == "" else f"md5('{s}' || word)"
+        for s in _SKETCH_SALTS[:n_md5]
+    ]
+    hx = digests[0] if n_md5 == 1 else " || ".join(digests)
+    sums = ", ".join(
+        f"sum(case when strpos('0123456789abcdef', "
+        f"substr({hx}, {j + 1}, 1)) - 1 >= 8 then 1 else -1 end) as s{j}"
+        for j in range(bits)
+    )
+    bitstr = (
+        "concat("
+        + ", ".join(
+            f"case when s{j} >= 0 then '1' else '0' end"
+            for j in range(bits)
+        )
+        + ")"
+    )
+    return f"""
+words as (
+  select distinct doc_id, unnest(string_split(text, ' ')) as word from documents
+),
+sums as (
+  select doc_id, {sums}
+  from words group by doc_id
+),
+sk as (select doc_id, {bitstr} as simhash from sums)
+"""
+
+
+_SIMHASH_ORACLE = f"""
+with {_simhash_sketch_sql()}
+select simhash,
+       cast(count(*) as bigint) as n_docs,
+       string_agg(doc_id, ',' order by doc_id) as doc_ids
+from sk group by simhash having count(*) > 1
+"""
 
 
 @register(
@@ -416,6 +479,11 @@ def _ngram_bits(n_docs: int) -> int:
     )
 
 
+def _ngram_adaptive_bits(sf_dir: str) -> int:
+    """The sketch width the Spark side derives for this corpus."""
+    return _ngram_bits(table_row_count(sf_dir, "documents"))
+
+
 #: per-corpus cache for the bucket-cap domain check below -- the check
 #: computes the full word-set sketch in DuckDB once per corpus, which
 #: is cheap at the driver's sf0.01 gate but worth not repeating across
@@ -458,7 +526,7 @@ def _ngram_bucket_cap_ok(sf_dir: str) -> bool:
             f"select * from '{path}'"
         )
         biggest = con.sql(
-            f"with {_SIMHASH_SKETCH_SQL} "
+            f"with {_simhash_sketch_sql(NGRAM_SKETCH_BITS)} "
             "select max(c) from "
             "(select count(*) as c from sk group by simhash)"
         ).fetchone()[0]
@@ -477,17 +545,32 @@ def _ngram_oracle_valid(sf_dir: str) -> bool:
     star-expands). Outside either, the parity harness falls back to a
     rows-only check."""
     return (
-        _ngram_bits(table_row_count(sf_dir, "documents"))
-        == NGRAM_SKETCH_BITS
+        _ngram_adaptive_bits(sf_dir) == NGRAM_SKETCH_BITS
         and _ngram_bucket_cap_ok(sf_dir)
     )
 
 
-_NGRAM_PAIR_CTES = f"""{_SIMHASH_SKETCH_SQL},
-cand as (
+def _ngram_pair_ctes(
+    bits: int = NGRAM_SKETCH_BITS, capped: bool = False
+) -> str:
+    """The n-gram Jaccard ``pairs`` CTE chain: word-set simhash sketch
+    (:func:`_simhash_sketch_sql`) -> same-sketch candidates -> exact
+    word-set Jaccard >= 0.8. ``capped=False`` is the registered floor
+    form (plain self-join candidates, domain-guarded by
+    :func:`_ngram_oracle_valid`); ``capped=True`` replicates the Spark
+    side's bucket-cap star expansion (:func:`_capped_pairs_sql`), so
+    the adaptive oracles match at ANY bucket population and width."""
+    if capped:
+        cand = _capped_pairs_sql(
+            "sk", "simhash", "doc_id", "doc_a", "doc_b", LSH_BUCKET_CAP
+        )
+    else:
+        cand = """cand as (
   select a.doc_id as doc_a, b.doc_id as doc_b
   from sk a join sk b on a.simhash = b.simhash and a.doc_id < b.doc_id
-),
+)"""
+    return f"""{_simhash_sketch_sql(bits)},
+{cand},
 s as (select doc_id, list_distinct(string_split(text, ' ')) ws
       from documents),
 pairs as (
@@ -501,46 +584,52 @@ pairs as (
 )"""
 
 
-def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verified near-dup pairs: adaptive-width word-set simhash block ->
-    exact word-set Jaccard >= 0.8 inside each bucket."""
-    bits = _ngram_bits(table_row_count(sf_dir, "documents"))
-    # spread the interpreted HOF-heavy sketch + word-set projections
-    # across cores on single-file local scans (input-adaptive: no
-    # shuffle once the scan itself is wide)
+def word_sets(spark: SparkSession, sf_dir: str, slot: str) -> DataFrame:
+    """The corpus' distinct word sets ``(doc_id, ws)``, persisted in
+    ``slot``: THREE consumers read them (the sketch branch and both
+    sides of :func:`simhash_word_pairs`' attach), so tokenization runs
+    once. The scan is spread so the interpreted HOF-heavy sketch and
+    word-set projections use every core on single-file local scans
+    (input-adaptive: no shuffle once the scan itself is wide)."""
     docs = (
         load_table_spread(spark, sf_dir, "documents")
         .withColumn("w", tokens())
     )
-    # THREE consumers read the distinct word sets (the sketch branch and
-    # both verification join sides); persist so tokenization runs once
-    sets = _persist_swap(
-        spark,
-        "ngram_sets",
-        docs.select("doc_id", F.array_distinct("w").alias("ws")),
+    return _persist_swap(
+        spark, slot, docs.select("doc_id", F.array_distinct("w").alias("ws"))
     )
-    # candidate pairs from ONE keyed shuffle on the sketch (same shape
-    # as the minhash band join); sketch rows carry no word payload
+
+
+def simhash_word_pairs(sets: DataFrame, bits: int) -> DataFrame:
+    """Simhash-blocked candidate pairs of a ``(doc_id, ws)`` distinct
+    word-set frame with both sets attached: ``(doc_a, doc_b, ws_a,
+    ws_b)``, ``doc_a < doc_b``. The sketch rows carry no word payload;
+    candidates come from ONE keyed shuffle on the ``bits``-wide sketch
+    (same shape as the minhash band join, star-capped at
+    LSH_BUCKET_CAP). Each side's word set is attached with a plain
+    equi-join and the planner chooses (broadcast locally, keyed shuffle
+    at scale) -- a melt + per-pair argmax agg would force every
+    candidate's full word-set payload through one pair-keyed exchange
+    (see cosine_pairs, measured ~2x there). Callers score the pairs:
+    dedup_ngram_jaccard by Jaccard, dedup_containment by containment."""
     sk = _simhash_sketches(
         sets.select("doc_id", F.col("ws").alias("w")), bits
     )
     cand = _bucket_pairs(
         sk, ["simhash"], "doc_id", "doc_a", "doc_b", cap=LSH_BUCKET_CAP
     )
-    # verification: attach each side's word set with two plain equi-joins
-    # and let the planner choose (broadcast locally, keyed shuffle at
-    # scale) -- a melt + per-pair argmax agg would force every candidate's
-    # full word-set payload through one pair-keyed exchange (see
-    # dedup_embedding_cosine, measured ~2x there).
     a = sets.select(F.col("doc_id").alias("doc_a"), F.col("ws").alias("ws_a"))
     b = sets.select(F.col("doc_id").alias("doc_b"), F.col("ws").alias("ws_b"))
-    jac = F.size(F.array_intersect("ws_a", "ws_b")).cast("double") / F.size(
-        F.array_union("ws_a", "ws_b")
-    )
+    return cand.join(a, "doc_a").join(b, "doc_b")
+
+
+def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Verified near-dup pairs: adaptive-width word-set simhash block ->
+    exact word-set Jaccard >= 0.8 inside each bucket."""
+    bits = _ngram_adaptive_bits(sf_dir)
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        simhash_word_pairs(word_sets(spark, sf_dir, "ngram_sets"), bits)
+        .select("doc_a", "doc_b", jaccard("ws_a", "ws_b").alias("jaccard"))
         .where(F.col("jaccard") >= 0.8)
     )
 
@@ -566,74 +655,25 @@ _NGRAM_GROUPS_TAIL = """,
     """
 
 
-def _ngram_pair_ctes_capped(bits: int = NGRAM_SKETCH_BITS) -> str:
-    """The _NGRAM_PAIR_CTES candidate path with the bucket-cap star
-    expansion replicated (see :func:`_capped_pairs_sql`) and the
-    sketch width parameterized (:func:`_simhash_sketch_sql`):
-    candidate generation matches the Spark side at ANY bucket
-    population and ANY corpus-derived width."""
-    return f"""{_simhash_sketch_sql(bits)},
-{_capped_pairs_sql("sk", "simhash", "doc_id", "doc_a", "doc_b", LSH_BUCKET_CAP)},
-s as (select doc_id, list_distinct(string_split(text, ' ')) ws
-      from documents),
-pairs as (
-  select doc_a, doc_b,
-         len(list_intersect(x.ws, y.ws))::double
-           / len(list_distinct(x.ws || y.ws)) as jaccard
-  from cand join s x on doc_a = x.doc_id
-            join s y on doc_b = y.doc_id
-  where len(list_intersect(x.ws, y.ws))::double
-          / len(list_distinct(x.ws || y.ws)) >= 0.8
-)"""
-
-
-def _simhash_sketch_sql(bits: int = NGRAM_SKETCH_BITS) -> str:
-    """The ``words``/``sums``/``sk`` sketch CTEs at an ARBITRARY width,
-    mirroring :func:`_simhash_sketches` exactly: bit j's weight is the
-    sign of nibble j of the salted-md5 concatenation (md5(word) ||
-    md5('~'||word) || ...), so the sketch string is bit-for-bit
-    identical to the Spark side at any width the engine can produce.
-    The module-level ``_SIMHASH_SKETCH_SQL`` floor constant stays the
-    registered-oracle string; width parity is pinned at 32 and 48 bits
-    by tests/test_adaptive_oracles.py."""
-    n_md5 = -(-bits // 32)
-    if n_md5 > len(_SKETCH_SALTS):
-        raise ValueError(
-            f"sketch width {bits} > {32 * len(_SKETCH_SALTS)} bits"
-        )
-    digests = [
-        "md5(word)" if s == "" else f"md5('{s}' || word)"
-        for s in _SKETCH_SALTS[:n_md5]
-    ]
-    hx = digests[0] if n_md5 == 1 else " || ".join(digests)
-    sums = ", ".join(
-        f"sum(case when strpos('0123456789abcdef', "
-        f"substr({hx}, {j + 1}, 1)) - 1 >= 8 then 1 else -1 end) as s{j}"
-        for j in range(bits)
+def _ngram_groups_oracle(
+    bits: int = NGRAM_SKETCH_BITS, capped: bool = False
+) -> str:
+    """dedup_ngram_jaccard's oracle: the pair CTEs plus a recursive-CTE
+    transitive closure over the verified pairs."""
+    return (
+        f"\n    with recursive {_ngram_pair_ctes(bits, capped)}"
+        f"{_NGRAM_GROUPS_TAIL}"
     )
-    bitstr = (
-        "concat("
-        + ", ".join(
-            f"case when s{j} >= 0 then '1' else '0' end"
-            for j in range(bits)
-        )
-        + ")"
+
+
+def _ngram_pairs_oracle(
+    bits: int = NGRAM_SKETCH_BITS, capped: bool = False
+) -> str:
+    """dedup_ngram_jaccard_pairs' oracle: the verified pairs as is."""
+    return (
+        f"with {_ngram_pair_ctes(bits, capped)}\n"
+        f"select doc_a, doc_b, jaccard from pairs"
     )
-    return f"""
-words as (
-  select distinct doc_id, unnest(string_split(text, ' ')) as word
-  from documents
-),
-sums as (
-  select doc_id, {sums}
-  from words group by doc_id
-),
-sk as (select doc_id, {bitstr} as simhash from sums)
-"""
-
-
-def _ngram_adaptive_bits(sf_dir: str) -> int:
-    return _ngram_bits(table_row_count(sf_dir, "documents"))
 
 
 def _ngram_groups_adaptive_oracle(sf_dir: str) -> str | None:
@@ -643,18 +683,11 @@ def _ngram_groups_adaptive_oracle(sf_dir: str) -> str | None:
     16-bit sketch floor; this builder replicates the cap AND builds
     the sketch at the adaptive width, so it stays in domain at any
     corpus size the salted-digest family can sketch (128 bits)."""
-    return (
-        f"with recursive "
-        f"{_ngram_pair_ctes_capped(_ngram_adaptive_bits(sf_dir))}"
-        f"{_NGRAM_GROUPS_TAIL}"
-    )
+    return _ngram_groups_oracle(_ngram_adaptive_bits(sf_dir), capped=True)
 
 
 def _ngram_pairs_adaptive_oracle(sf_dir: str) -> str | None:
-    return (
-        f"with {_ngram_pair_ctes_capped(_ngram_adaptive_bits(sf_dir))}\n"
-        f"select doc_a, doc_b, jaccard from pairs"
-    )
+    return _ngram_pairs_oracle(_ngram_adaptive_bits(sf_dir), capped=True)
 
 
 @register(
@@ -667,26 +700,7 @@ def _ngram_pairs_adaptive_oracle(sf_dir: str) -> str | None:
     "k^2/2 pair rows -- the pair emitter survives as the opt-in debug "
     "view dedup_ngram_jaccard_pairs. Oracle: DuckDB recursive-CTE "
     "transitive closure over the identical sketch + verification.",
-    f"""
-    with recursive {_NGRAM_PAIR_CTES},
-    edges as (
-      select doc_a as u, doc_b as v from pairs
-      union
-      select doc_b as u, doc_a as v from pairs
-    ),
-    verts as (select distinct u from edges),
-    reach as (
-      select u, u as v from verts
-      union
-      select r.u, e.v from reach r join edges e on r.v = e.u
-    ),
-    comp as (select u as doc_id, min(v) as component from reach group by u)
-    select cast(component as bigint) as component,
-           cast(count(*) as bigint) as n_docs,
-           string_agg(cast(doc_id as varchar), ',' order by doc_id) as doc_ids
-    from comp
-    group by component
-    """,
+    _ngram_groups_oracle(),
     "dedup", "jaccard", "simhash", "groups",
     oracle_valid=_ngram_oracle_valid,
     oracle_adaptive=_ngram_groups_adaptive_oracle,
@@ -703,7 +717,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quadratic per near-dup family (a 244-doc family emits ~30 k rows), "
     "so this is the inspection surface, NOT the headline dup report -- "
     "route dedup decisions through the group-level query.",
-    f"with {_NGRAM_PAIR_CTES}\nselect doc_a, doc_b, jaccard from pairs",
+    _ngram_pairs_oracle(),
     "dedup", "jaccard", "simhash", "debug",
     oracle_valid=_ngram_oracle_valid,
     oracle_adaptive=_ngram_pairs_adaptive_oracle,

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from clueso_spark.functions.vectors import (
     cosine_similarity,
-    dot,
     lsh_bucket,
     squared_l2,
     squared_norm,
@@ -346,7 +345,7 @@ def sim_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("cell"),
             F.expr("transform(pc, x -> x.c)").alias("cv"),
         )
-        .withColumn("csq", dot("cv", "cv"))
+        .withColumn("csq", squared_norm("cv"))
     )
     probes = probe_rows(emb)
     pcos = cosine_similarity("pv", "cv", "psq", "csq")
@@ -639,7 +638,7 @@ def _lloyd_c1(emb: DataFrame, k: int = K_CLUSTERS, assign_fn=None) -> DataFrame:
         F.expr("transform(sort_array(collect_list(struct(pos, m))), t -> t.m)")
         .alias("c")
     )
-    return c1.withColumn("csq", dot("c", "c"))
+    return c1.withColumn("csq", squared_norm("c"))
 
 
 @register(
@@ -887,7 +886,7 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sub",
             F.expr(f"slice(v, sub * {SUB_DIM} + 1, {SUB_DIM})").alias("sv"),
         )
-        .withColumn("ssq", dot("sv", "sv"))
+        .withColumn("ssq", squared_norm("sv"))
     )
     c0 = subs.where(F.col("vec_id") < PQ_K).select(
         "sub", F.col("vec_id").alias("cid"), F.col("sv").alias("c"),
@@ -923,7 +922,7 @@ def sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "transform(sort_array(collect_list(struct(pos, m))), t -> t.m)"
             ).alias("c")
         )
-        .withColumn("csq", dot("c", "c"))
+        .withColumn("csq", squared_norm("c"))
     )
     a2 = nearest(c1)
     return (

@@ -557,30 +557,14 @@ def agg_kl_divergence_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _index_delta_oracle() -> str:
-    from clueso_spark.plans.dedup_queries import N_BANDS
+    from clueso_spark.plans.dedup_queries import _minhash_bands_sql
 
     return f"""
     with t as (select doc_id,
                       {_md5_mod_sql("cast(doc_id as varchar)", 10)} as b,
                       string_split(text, ' ') as w
                from documents),
-    sh as (
-      select distinct doc_id, b,
-             unnest(list_transform(range(1, len(w) - 1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) as shingle
-      from t where len(w) >= 3
-    ),
-    bands as (
-      select doc_id, b, bb.range as band,
-             min(substr(md5(shingle) || md5('~' || shingle)
-                        || md5('#' || shingle) || md5('@' || shingle),
-                        cast(bb.range * 16 + 1 as int), 8))
-             || min(substr(md5(shingle) || md5('~' || shingle)
-                           || md5('#' || shingle) || md5('@' || shingle),
-                           cast(bb.range * 16 + 9 as int), 8)) as sig
-      from sh cross join range({N_BANDS}) bb
-      group by doc_id, b, bb.range
-    ),
+    {_minhash_bands_sql("b", r="bb", indent="    ")},
     stats as (
       select band,
              sum(case when b <= 8 then 1 else 0 end) as n_before,
@@ -623,17 +607,18 @@ def _index_delta_oracle() -> str:
     "dedup", "minhash", "lsh", "incremental", "delete",
 )
 def dedup_minhash_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clueso_spark.functions.text import tokens, word_shingles
-    from clueso_spark.plans.dedup_queries import minhash_band_sigs
+    from clueso_spark.functions.text import tokens
+    from clueso_spark.plans.dedup_queries import (
+        minhash_band_sigs,
+        shingle_sets,
+    )
 
     docs = (
         load_table_spread(spark, sf_dir, "documents")
         .withColumn("w", tokens())
     )
-    sets = docs.where(F.size("w") >= 3).select(
-        "doc_id",
-        _md5_mod(F.col("doc_id").cast("string"), 10).alias("b"),
-        F.array_distinct(word_shingles("w", 3)).alias("ss"),
+    sets = shingle_sets(
+        docs, _md5_mod(F.col("doc_id").cast("string"), 10).alias("b")
     )
     # persist the SIGNATURE frame, then explode from the cache: the
     # Generate below infers a `size(sigs) > 0` filter that pushdown
@@ -1644,7 +1629,7 @@ _RR_B_SALTS = ("a+", "b+", "c+", "d+")
 
 
 def _rr_oracle() -> str:
-    from clueso_spark.plans.dedup_queries import N_BANDS
+    from clueso_spark.plans.dedup_queries import _minhash_bands_sql
 
     b_band_sql = "\n      union all\n".join(
         f"""      select doc_id, {b} as band,
@@ -1655,23 +1640,7 @@ def _rr_oracle() -> str:
     )
     return f"""
     with t as (select doc_id, string_split(text, ' ') as w from documents),
-    sh as (
-      select distinct doc_id,
-             unnest(list_transform(range(1, len(w) - 1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) as shingle
-      from t where len(w) >= 3
-    ),
-    bands_a as (
-      select doc_id, b.range as band,
-             min(substr(md5(shingle) || md5('~' || shingle)
-                        || md5('#' || shingle) || md5('@' || shingle),
-                        cast(b.range * 16 + 1 as int), 8))
-             || min(substr(md5(shingle) || md5('~' || shingle)
-                           || md5('#' || shingle) || md5('@' || shingle),
-                           cast(b.range * 16 + 9 as int), 8)) as sig
-      from sh cross join range({N_BANDS}) b
-      group by doc_id, b.range
-    ),
+    {_minhash_bands_sql(name="bands_a", indent="    ")},
     bands_b as (
 {b_band_sql}
     ),
@@ -1732,24 +1701,19 @@ def _rr_oracle() -> str:
     "dedup", "minhash", "lsh", "evaluation",
 )
 def dedup_lsh_relative_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clueso_spark.functions.text import tokens, word_shingles
+    from clueso_spark.functions.text import jaccard, tokens
     from clueso_spark.plans.dedup_queries import (
         LSH_BUCKET_CAP,
         _bucket_pairs,
         minhash_band_sigs,
+        shingle_sets,
     )
 
     docs = (
         load_table_spread(spark, sf_dir, "documents")
         .withColumn("w", tokens())
     )
-    sets = persist_swap(
-        spark,
-        "rr_sets",
-        docs.where(F.size("w") >= 3).select(
-            "doc_id", F.array_distinct(word_shingles("w", 3)).alias("ss")
-        ),
-    )
+    sets = persist_swap(spark, "rr_sets", shingle_sets(docs))
     long_a = sets.select(
         "doc_id", F.posexplode(minhash_band_sigs()).alias("band", "sig")
     )
@@ -1793,15 +1757,12 @@ def dedup_lsh_relative_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool = cand_a.unionByName(cand_b).distinct()
     x = sets.select(F.col("doc_id").alias("doc_a"), F.col("ss").alias("ss_a"))
     y = sets.select(F.col("doc_id").alias("doc_b"), F.col("ss").alias("ss_b"))
-    jac = F.size(F.array_intersect("ss_a", "ss_b")).cast("double") / F.size(
-        F.array_union("ss_a", "ss_b")
-    )
     verified = persist_swap(
         spark,
         "rr_verified",
         pool.join(x, "doc_a")
         .join(y, "doc_b")
-        .where(jac >= _RR_TAU)
+        .where(jaccard("ss_a", "ss_b") >= _RR_TAU)
         .select("doc_a", "doc_b"),
     )
     u = F.broadcast(verified.agg(F.count("*").alias("n_union")))

@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clueso_spark.functions.vectors import cosine_similarity, dot
+from clueso_spark.functions.vectors import cosine_similarity, squared_norm
 from clueso_spark.plans.catalog import persist_swap, register
 from clueso_spark.plans.similarity_queries import DIM, N_PROBES, probe_rows
 from clueso_spark.plans.staged_r11 import _DAY_US
@@ -193,7 +193,7 @@ def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
         )
         .withColumn("tenant", _md5_mod(F.col("vec_id").cast("string"), _FANN_TENANTS))
-        .withColumn("sq", dot("v", "v"))
+        .withColumn("sq", squared_norm("v"))
     )
     emb = persist_swap(spark, "fann_emb", emb)
     # decimal-exact per-cell centroids (the sim_ivf_cells discipline:
@@ -213,7 +213,7 @@ def sim_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("label").alias("cell"),
             F.expr("transform(pm, x -> x.m)").alias("cv"),
         )
-        .withColumn("csq", dot("cv", "cv"))
+        .withColumn("csq", squared_norm("cv"))
     )
     probes = probe_rows(
         emb, (F.col("vec_id") % _FANN_TENANTS).alias("target")

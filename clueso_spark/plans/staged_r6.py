@@ -29,11 +29,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from clueso_spark.functions.text import stopword_count, tokens
-from clueso_spark.plans.catalog import register
+from clueso_spark.functions.text import jaccard, stopword_count, tokens
+from clueso_spark.plans.catalog import persist_swap, register
 from clueso_spark.plans.dedup_queries import (
+    LSH_BUCKET_CAP,
+    NGRAM_SKETCH_BITS,
+    _capped_pairs_sql,
     _emb_oracle_valid,
+    _minhash_bands_sql,
+    _ngram_adaptive_bits,
     _ngram_oracle_valid,
+    _simhash_sketch_sql,
+    minhash_band_rows,
+    shingle_sets,
+    simhash_word_pairs,
+    word_sets,
 )
 from clueso_spark.plans.text_queries import _SW
 from clueso_spark.sources.tables import load_table, load_table_spread
@@ -727,7 +737,7 @@ _CONT_TAU = 0.9  #: containment threshold
 
 
 def _containment_oracle(
-    capped: bool = False, bits: int | None = None
+    capped: bool = False, bits: int = NGRAM_SKETCH_BITS
 ) -> str:
     """``capped=False`` is the registered fixed-floor string (plain
     self-join candidates, domain-guarded by the shared ngram guard);
@@ -735,13 +745,6 @@ def _containment_oracle(
     expansion, and ``bits`` builds the sketch at the adaptive width,
     so the adaptive builder stays valid at any bucket population and
     corpus size (round 15)."""
-    from clueso_spark.plans.dedup_queries import (
-        LSH_BUCKET_CAP,
-        _SIMHASH_SKETCH_SQL,
-        _capped_pairs_sql,
-        _simhash_sketch_sql,
-    )
-
     if capped:
         cand = _capped_pairs_sql(
             "sk", "simhash", "doc_id", "doc_a", "doc_b", LSH_BUCKET_CAP
@@ -751,11 +754,8 @@ def _containment_oracle(
       select a.doc_id as doc_a, b.doc_id as doc_b
       from sk a join sk b on a.simhash = b.simhash and a.doc_id < b.doc_id
     )"""
-    sketch = (
-        _SIMHASH_SKETCH_SQL if bits is None else _simhash_sketch_sql(bits)
-    )
     return f"""
-    with {sketch},
+    with {_simhash_sketch_sql(bits)},
     {cand},
     s as (select doc_id, list_distinct(string_split(text, ' ')) as ws
           from documents),
@@ -778,8 +778,6 @@ def _containment_adaptive_oracle(sf_dir: str) -> str | None:
     """Cap-replicating, width-adaptive containment oracle (round 15):
     same domain as the ngram adaptive builders -- any bucket
     population, any corpus-derived sketch width."""
-    from clueso_spark.plans.dedup_queries import _ngram_adaptive_bits
-
     return _containment_oracle(
         capped=True, bits=_ngram_adaptive_bits(sf_dir)
     )
@@ -803,51 +801,16 @@ def _containment_adaptive_oracle(sf_dir: str) -> str | None:
     oracle_adaptive=_containment_adaptive_oracle,
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOTE (round-6 consolidation): the block construction below
-    # mirrors dedup_queries._ngram_pairs (sets persist -> sketch ->
-    # _bucket_pairs -> two-sided attach) with only the metric/threshold
-    # differing. It is NOT factored into dedup_queries THIS round
-    # because that would change dedup_ngram_jaccard's code outside its
-    # verification window (rotation invariant); fold both onto one
-    # parameterized scorer when the ngram tier rotates in (round 6).
-    from clueso_spark.plans.catalog import persist_swap
-    from clueso_spark.plans.dedup_queries import (
-        LSH_BUCKET_CAP,
-        _bucket_pairs,
-        _ngram_bits,
-        _simhash_sketches,
-    )
-    from clueso_spark.sources.tables import table_row_count
-
-    bits = _ngram_bits(table_row_count(sf_dir, "documents"))
-    docs = (
-        load_table_spread(spark, sf_dir, "documents")
-        .withColumn("w", tokens())
-    )
-    # three consumers (sketch branch, both verify sides) read the
-    # distinct word sets; persist so tokenization runs once
-    sets = persist_swap(
-        spark,
-        "containment_sets",
-        docs.select("doc_id", F.array_distinct("w").alias("ws")),
-    )
-    sk = _simhash_sketches(
-        sets.select("doc_id", F.col("ws").alias("w")), bits
-    )
-    cand = _bucket_pairs(
-        sk, ["simhash"], "doc_id", "doc_a", "doc_b", cap=LSH_BUCKET_CAP
-    )
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("ws").alias("ws_a"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("ws").alias("ws_b"))
+    bits = _ngram_adaptive_bits(sf_dir)
+    sets = word_sets(spark, sf_dir, "containment_sets")
     inter = F.size(F.array_intersect("ws_a", "ws_b")).cast("double")
     cont = inter / F.least(F.size("ws_a"), F.size("ws_b"))
-    jac = inter / F.size(F.array_union("ws_a", "ws_b"))
+    jac = jaccard("ws_a", "ws_b")
     # filter on the UNROUNDED score (the oracle does), round only in
     # the output projection -- a true containment in [tau-5e-7, tau)
     # would otherwise round up past the threshold on one engine only
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        simhash_word_pairs(sets, bits)
         .select("doc_a", "doc_b", cont.alias("c"), jac.alias("j"))
         .where(F.col("c") >= _CONT_TAU)
         .select(
@@ -1286,7 +1249,7 @@ def ev_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ntile_from_rank,
         ranged_row_number,
     )
-    from clueso_spark.plans.catalog import dec, persist_swap
+    from clueso_spark.plans.catalog import dec
 
     ev = load_table(spark, sf_dir, "events")
     p = ev.where(F.col("event_type") == "purchase").select(
@@ -1433,31 +1396,13 @@ _INCR_TAU = 0.5  #: same verification bar as dedup_minhash_lsh
 
 
 def _incremental_oracle() -> str:
-    from clueso_spark.plans.dedup_queries import N_BANDS
-
     return f"""
     with t as (select doc_id,
                       cast(('0x' || substr(md5(cast(doc_id as varchar)), 1, 8))
                            as bigint) % 100 as pct,
                       string_split(text, ' ') as w
                from documents),
-    sh as (
-      select distinct doc_id, pct,
-             unnest(list_transform(range(1, len(w) - 1),
-                    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) as shingle
-      from t where len(w) >= 3
-    ),
-    bands as (
-      select doc_id, pct, b.range as band,
-             min(substr(md5(shingle) || md5('~' || shingle)
-                        || md5('#' || shingle) || md5('@' || shingle),
-                        cast(b.range * 16 + 1 as int), 8))
-             || min(substr(md5(shingle) || md5('~' || shingle)
-                           || md5('#' || shingle) || md5('@' || shingle),
-                           cast(b.range * 16 + 9 as int), 8)) as sig
-      from sh cross join range({N_BANDS}) b
-      group by doc_id, pct, b.range
-    ),
+    {_minhash_bands_sql("pct", indent="    ")},
     cand as (
       select distinct n.doc_id as new_id, i.doc_id as index_id
       from bands n join bands i on n.band = i.band and n.sig = i.sig
@@ -1501,11 +1446,6 @@ def _incremental_oracle() -> str:
     "dedup", "minhash", "lsh", "incremental",
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clueso_spark.plans.catalog import persist_swap
-    from clueso_spark.plans.dedup_queries import minhash_band_sigs
-
-    from clueso_spark.functions.text import word_shingles
-
     docs = (
         load_table_spread(spark, sf_dir, "documents")
         .withColumn("w", tokens())
@@ -1516,17 +1456,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         % 100
     )
     sets = persist_swap(
-        spark,
-        "incremental_sets",
-        docs.where(F.size("w") >= 3).select(
-            "doc_id",
-            pct.alias("pct"),
-            F.array_distinct(word_shingles("w", 3)).alias("ss"),
-        ),
+        spark, "incremental_sets", shingle_sets(docs, pct.alias("pct"))
     )
-    long = sets.select(
-        "doc_id", "pct", minhash_band_sigs().alias("sigs")
-    ).select("doc_id", "pct", F.posexplode("sigs").alias("band", "sig"))
+    long = minhash_band_rows(sets, "pct")
     idx = long.where(F.col("pct") < 80).select(
         F.col("doc_id").alias("index_id"), "band", "sig"
     )
@@ -1538,9 +1470,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = sets.select(
         F.col("doc_id").alias("index_id"), F.col("ss").alias("ss_i")
     )
-    jac = F.size(F.array_intersect("ss_n", "ss_i")).cast("double") / F.size(
-        F.array_union("ss_n", "ss_i")
-    )
+    jac = jaccard("ss_n", "ss_i")
     v = (
         cand.join(x, "new_id")
         .join(y, "index_id")
@@ -1615,8 +1545,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text", "language-model", "quality",
 )
 def txt_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clueso_spark.plans.catalog import persist_swap
-
     docs = (
         load_table_spread(spark, sf_dir, "documents")
         .withColumn("w", tokens())

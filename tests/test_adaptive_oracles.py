@@ -230,19 +230,17 @@ def test_simhash_sketch_width_parity(spark, bits, tmp_path):
 
 def test_ngram_pairs_adaptive_sql_composes_at_wide_bits(spark, tmp_path):
     """End-to-end at a WIDE width: compose the exact building blocks
-    dedup_ngram_jaccard_pairs runs (_simhash_sketches -> _bucket_pairs
-    -> word-set Jaccard verify) at bits=32 on Spark, and compare
-    against the adaptive pairs SQL built at bits=32 -- proving the
-    parameterized oracle composes correctly beyond the floor width,
-    not just that the sketch matches."""
+    dedup_ngram_jaccard_pairs runs (simhash_word_pairs -> word-set
+    jaccard >= 0.8) at bits=32 on Spark, and compare against the
+    adaptive pairs SQL built at bits=32 -- proving the parameterized
+    oracle composes correctly beyond the floor width, not just that
+    the sketch matches."""
     from pyspark.sql import functions as F
 
+    from clueso_spark.functions.text import jaccard
     from clueso_spark.plans.dedup_queries import (
-        LSH_BUCKET_CAP,
-        _NGRAM_GROUPS_TAIL,  # noqa: F401  (import sanity)
-        _bucket_pairs,
-        _ngram_pair_ctes_capped,
-        _simhash_sketches,
+        _ngram_pairs_oracle,
+        simhash_word_pairs,
     )
 
     sf = _doc_corpus(tmp_path, 40)  # one 40-doc family + 6 unique
@@ -250,27 +248,12 @@ def test_ngram_pairs_adaptive_sql_composes_at_wide_bits(spark, tmp_path):
         "doc_id", F.split("text", " ").alias("w")
     )
     sets = docs.select("doc_id", F.array_distinct("w").alias("ws"))
-    sk = _simhash_sketches(
-        sets.select("doc_id", F.col("ws").alias("w")), bits=32
-    )
-    cand = _bucket_pairs(
-        sk, ["simhash"], "doc_id", "doc_a", "doc_b", cap=LSH_BUCKET_CAP
-    )
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("ws").alias("ws_a"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("ws").alias("ws_b"))
-    jac = F.size(F.array_intersect("ws_a", "ws_b")).cast("double") / F.size(
-        F.array_union("ws_a", "ws_b")
-    )
     spark_pairs = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        simhash_word_pairs(sets, bits=32)
+        .select("doc_a", "doc_b", jaccard("ws_a", "ws_b").alias("jaccard"))
         .where(F.col("jaccard") >= 0.8)
     )
-    sql = (
-        f"with {_ngram_pair_ctes_capped(32)}\n"
-        f"select doc_a, doc_b, jaccard from pairs"
-    )
+    sql = _ngram_pairs_oracle(32, capped=True)
     res = compare("pairs_bits32", spark_pairs, sql, _doc_con(sf))
     assert res.ok, res.detail
     assert res.rows_spark == 40 * 39 // 2  # the family, under the cap

@@ -109,3 +109,25 @@ def test_tools_put_no_absolute_path_on_sys_path():
             ):
                 bad.append(f"{path.parent.name}/{path.name}:{node.lineno}")
     assert bad == []
+
+
+def test_plan_dump_resolves_staged_queries(spark, tmp_path, monkeypatch):
+    """tools/plan_dump.py dumps a "staged" query too, not only the
+    registered ones. Runs in the test session: audit_session is swapped
+    for it, so the dump leaves the shared session's AQE setting alone."""
+    import sys
+
+    from clueso_spark.plans.catalog import staged_queries
+    from tests.conftest import REPO_ROOT
+    from tests.test_plans import SF_DIR
+
+    monkeypatch.syspath_prepend(str(REPO_ROOT / "tools"))
+    import plan_audit
+    from tools import plan_dump
+
+    monkeypatch.setattr(plan_audit, "audit_session", lambda: spark)
+    name = next(iter(staged_queries()))
+    argv = ["plan_dump.py", "--tag=t", f"--dir={tmp_path}", f"--sf={SF_DIR}"]
+    monkeypatch.setattr(sys, "argv", [*argv, name])
+    assert plan_dump.main() == 0
+    assert ") Scan parquet" in (tmp_path / f"{name}_t.txt").read_text()

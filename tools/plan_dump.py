@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
-"""Dump `.explain("formatted")` for named catalog queries to
-plans/<dir>/<query>_<tag>.txt (the optimization-round evidence files the
-judge diffs). Uses tools/plan_audit.py's audit session (AQE off, 8
-shuffle partitions) at sf0.001 so dumps are comparable across rounds.
+"""Dump `.explain("formatted")` for named catalog queries, registered
+or "staged", to plans/<dir>/<query>_<tag>.txt (plan evidence files to
+diff across changes). Uses tools/plan_audit.py's audit session (AQE
+off, 8 shuffle partitions) at sf0.001 so dumps are comparable across
+rounds.
 
 Usage: python tools/plan_dump.py --tag=before [--dir=plans/r16]
            [--sf=/root/testdata/sf0.001] q1 q2 ...
@@ -28,11 +29,15 @@ def main() -> int:
             names.append(a)
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, here)
-    from clueso_spark.plans.catalog import all_queries, release_persisted
+    from clueso_spark.plans.catalog import (
+        all_queries,
+        release_persisted,
+        staged_queries,
+    )
     from plan_audit import audit_session, plan_string
 
     spark = audit_session()
-    registry = all_queries()
+    registry = {**all_queries(), **staged_queries()}
     os.makedirs(os.path.join(here, out_dir), exist_ok=True)
     for name in names:
         if name not in registry:
